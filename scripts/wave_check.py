@@ -10,8 +10,10 @@ with steady bandwidth is a real scaling finding.
 
 Usage: python3 scripts/wave_check.py <bench.json>
 Prints one JSON line: {"efficiency_2_8": ..., "gate": 0.8,
-"wave_detected": true/false, "verdict": "..."} and exits 0 (pass or
-attributed wave) / 1 (unattributed scaling deficit).
+"wave_detected": true/false, "verdict": "..."} and exits 0 (pass) /
+1 (below gate with steady bandwidth: a scaling deficit) / 2 (below gate
+inside a detected wave: inconclusive - the sample neither passes nor
+fails the gate, re-measure in a quiet window).
 """
 import json
 import sys
@@ -40,11 +42,11 @@ def main() -> int:
         out["verdict"] = "pass"
         rc = 0
     elif wave:
-        out["verdict"] = ("below gate, attributed: 8-core bandwidth floor "
-                          f"{bw8_min} GB/s < 0.5 x session best {bw_best} "
-                          "GB/s - a measured neighbor wave, not a scaling "
-                          "property of the code")
-        rc = 0
+        out["verdict"] = ("inconclusive: below gate inside a measured "
+                          f"neighbor wave (8-core bandwidth floor {bw8_min} "
+                          f"GB/s < 0.5 x session best {bw_best} GB/s); "
+                          "re-measure in a quiet window")
+        rc = 2
     else:
         out["verdict"] = ("below gate with steady bandwidth - a real "
                           "scaling finding")

@@ -15,10 +15,10 @@ import graft.sources.TableIO
   *      dirs — predicate pushdown prunes row groups (segments are written
   *      sorted by term); only the query terms' blocks are read, never the
   *      whole index.
-  *   3. `groupByKey(bucket) → flatMapGroups(Wand.topKInBucket)` — one WAND
-  *      instance per docId bucket; a skewed term's buckets run in parallel
-  *      (this shuffle moves only the query terms' compressed blocks).
-  *      Tombstoned postings are skipped at decode (broadcast dead map).
+  *   3. one [[Wand.scoreBucket]] per docId bucket — on the driver's
+  *      threads for small posting sets, else `groupByKey(bucket)` on the
+  *      executors (that shuffle moves only the query terms' compressed
+  *      blocks). Tombstoned postings are skipped at decode.
   *   4. global merge: `sort(score desc, docId asc).limit(k)` over ≤
   *      numBuckets·k candidates, then a broadcast join back to docs for
   *      the url (reference surface analog: Solr q/fl/sort/rows,
@@ -40,10 +40,9 @@ class IndexReader(spark: SparkSession, root: String) {
   val bucketBits: Int = io.readBucketBits(version)
 
   /** Exact cumulative dead postings in this version's segment files
-    * (manifest-recorded by appends, reset by compaction); None for
-    * pre-recording manifests.
+    * (manifest-recorded by appends, reset by compaction).
     */
-  private val deadPostings: Option[Long] = io.readDeadPostings(version)
+  private val deadPostings: Long = io.readDeadPostings(version)
 
   private def segPaths(sub: String): Seq[String] =
     segments.map(s => s"${io.segmentDir(s)}/$sub")
@@ -131,8 +130,7 @@ class IndexReader(spark: SparkSession, root: String) {
     tombstoneCount > graft.sync.Tables.deadBroadcastMax
 
   private def tombstonesDf =
-    graft.sync.Tables.tombstonesView(spark, io, version,
-      io.readTombChain(version), tombstoneCount).toDF()
+    graft.sync.Tables.tombstonesView(spark, io, io.readTombChain(version)).toDF()
 
   /** Tombstones, collected once per reader when small enough to
     * broadcast; empty (with [[deadDistributed]] set) otherwise —
@@ -189,147 +187,24 @@ class IndexReader(spark: SparkSession, root: String) {
   def topK(q: String, k: Int, useWand: Boolean = true): Array[Hit] = {
     val terms = Bm25.queryTerms(q)
     if (terms.isEmpty || k <= 0) return Array.empty
-    val n = stats.n
-    val avgdl = stats.avgdl
     val t0 = System.nanoTime()
 
     // 1. dict probe: exact df (maintained under churn) + file pointers
     val dictRows = probeDict(terms)
     val tDict = System.nanoTime()
-    if (dictRows.isEmpty) {
-      // profile the miss too — an early return must not leave the
-      // previous query's profile attributed to this one
-      IndexReader.lastProfile = IndexReader.QueryProfile("empty",
-        (tDict - t0) / 1e9, 0.0, 0.0, (System.nanoTime() - t0) / 1e9)
-      return Array.empty
-    }
-    val dfMap = dictRows.map(e => e._1 -> e._2).toMap
-    val idf = dfMap.map { case (t, df) => t -> Bm25.idf(n, df) }
-    val termFiles = dictRows.flatMap(_._3).distinct
-
-    // 2. targeted block scan: only the terms' files (fall back to the
-    // full segment union if the dict carries no pointers); explicit
-    // schema = no footer-inference job per query. The filter uses the
-    // DICT-LIVE terms only (dfMap keys), not the raw query terms: under
-    // churn a term whose df reached 0 leaves the dict while its dead
-    // postings stay physically in segment files until compaction — its
-    // blocks must not reach the scorers, which have no idf for it.
-    val liveTerms = dfMap.keys.toSeq
-    val filtered =
-      (if (termFiles.nonEmpty)
-        spark.read.schema(blockSchema).parquet(termFiles.toSeq: _*)
-          .as[IndexBlock]
-      else index)
-        .filter($"term".isin(liveTerms: _*))
-
-    // 3. path choice from dict metadata when it is decisive: a group of n
-    // postings packs into >= ceil(n/128) blocks, so a query whose df sum
-    // already implies > LocalEvalMaxBlocks blocks goes straight to the
-    // distributed path — no wasted probe job on stopword queries
-    val minBlocks = dfMap.valuesIterator
-      .map(df => (df + 127) / 128).sum
-    // ... and an UPPER bound decides how to fetch: a (term, bucket,
-    // segment) group of n postings encodes into <= n/128 + 1 blocks, so
-    // when even the upper bound fits the driver budget the blocks are
-    // collected in ONE fully parallel job. (The r4 shape always probed
-    // via limit(N+1).collect(), and CollectLimitExec executes partitions
-    // in incremental SERIAL rounds — 1, 4, 16, ... — so each query paid
-    // several job round-trips, growing with segment count: the measured
-    // r4 BM25 drift. The limit probe survives only for the rare gray
-    // zone where the bounds straddle the budget.)
-    // The bound must cover PHYSICAL blocks, not the dict's live df: dead
-    // postings of updated/purged docs stay in segment files until
-    // compaction, and an unbounded collect sized from live df alone
-    // could pull a multiple of the budget onto the driver after heavy
-    // churn. The manifest records the EXACT cumulative dead-posting
-    // count (appends observe Σ subDf on their dict-delta job), which
-    // bounds any single term's stale postings; pre-recording manifests
-    // fall back to tombstones × segments (each tombstoned docId holds at
-    // most one stale version per segment). The old product demoted
-    // essentially every query to the serial limit-probe path under
-    // realistic churn — the r4 BM25-drift shape (ADVICE r5).
-    val deadSlack = deadPostings.getOrElse(tombstoneCount * segments.size)
-    val maxBlocks = dfMap.valuesIterator.map { df =>
-      val phys = df + deadSlack
-      (phys + 127) / 128 + math.min(phys, (1L << bucketBits) * segments.size)
-    }.sum
-    // the local (driver WAND) path requires the dead Map; a distributed-
-    // only tombstone set forces the per-bucket path for correctness
-    val localOk = minBlocks <= LocalEvalMaxBlocks && !deadDistributed
-    val probe: Array[IndexBlock] =
-      if (!localOk) Array.empty
-      else if (maxBlocks <= LocalEvalMaxBlocks) filtered.collect()
-      else filtered.limit(LocalEvalMaxBlocks + 1).collect()
-    val tScan = System.nanoTime()
-    val candidates: Array[Hit] =
-      if (localOk && probe.length <= LocalEvalMaxBlocks) {
-        if (probe.isEmpty) {
-          IndexReader.lastProfile = IndexReader.QueryProfile("empty",
-            (tDict - t0) / 1e9, (tScan - tDict) / 1e9, 0.0,
-            (System.nanoTime() - t0) / 1e9)
-          return Array.empty
-        }
-        // per-bucket WAND instances are independent — run them across
-        // the driver's cores instead of serially (a stopword query on
-        // this path decodes thousands of blocks; each bucket's result is
-        // deterministic and the concatenation keeps bucket order, so
-        // answers are bit-identical to the sequential evaluation)
-        import scala.concurrent.{Await, ExecutionContext, Future}
-        implicit val ec: ExecutionContext = ExecutionContext.global
-        val groups = probe.groupBy(_.bucket).toSeq
-        val perBucket = Future.sequence(groups.map { g =>
-          Future {
-            val byTerm = g._2.groupBy(_.term).toSeq
-            if (useWand) Wand.topKInBucket(byTerm, idf, avgdl, k, dead)
-            else Wand.taatInBucket(byTerm, idf, avgdl, k, dead)
-          }
-        })
-        Await.result(perBucket, scala.concurrent.duration.Duration.Inf)
-          .flatten.toArray
-      } else if (!deadDistributed) {
-        // stopword-scale posting set: per-bucket WAND, moving only the
-        // query terms' compressed blocks
-        val bIdf = spark.sparkContext.broadcast(idf)
-        val bDead = spark.sparkContext.broadcast(dead)
-        filtered
-          .groupByKey(_.bucket)
-          .flatMapGroups { (_, blocks) =>
-            val byTerm = blocks.toArray.groupBy(_.term).toSeq
-            val hits =
-              if (useWand)
-                Wand.topKInBucket(byTerm, bIdf.value, avgdl, k, bDead.value)
-              else Wand.taatInBucket(byTerm, bIdf.value, avgdl, k, bDead.value)
-            hits.iterator
-          }.collect()
-      } else {
-        // huge tombstone set: cogroup the query blocks with the
-        // tombstones BY BUCKET — each bucket's WAND sees only its own
-        // dead entries and the full set never converges on the driver
-        // (the tombstone shuffle moves ≤ the set once, partitioned)
-        val bIdf = spark.sparkContext.broadcast(idf)
-        val bits = bucketBits // recorded width — must match the blocks'
-        val tombsByBucket = tombstonesDf.as[Tombstone]
-          .groupByKey(t => graft.index.DocIds.bucket(t.docId, bits))
-        filtered
-          .groupByKey(_.bucket)
-          .cogroup(tombsByBucket) { (_, blocks, ts) =>
-            val blockArr = blocks.toArray
-            if (blockArr.isEmpty) Iterator.empty
-            else {
-              val deadMap = ts.map(t => t.docId -> t.before).toMap
-              val byTerm = blockArr.groupBy(_.term).toSeq
-              val hits =
-                if (useWand)
-                  Wand.topKInBucket(byTerm, bIdf.value, avgdl, k, deadMap)
-                else Wand.taatInBucket(byTerm, bIdf.value, avgdl, k, deadMap)
-              hits.iterator
-            }
-          }.collect()
+    var tScan = tDict
+    val (path, candidates) =
+      if (dictRows.isEmpty) ("empty", Array.empty[Hit])
+      else {
+        val (path, fetched) = scan(dictRows)
+        tScan = System.nanoTime()
+        (path, score(fetched, dictRows, k, useWand))
       }
     val tEnd = System.nanoTime()
+    // set on every return — a miss must not leave the previous query's
+    // profile attributed to this one
     IndexReader.lastProfile = IndexReader.QueryProfile(
-      path = if (localOk && probe.length <= LocalEvalMaxBlocks) "local"
-             else if (!deadDistributed) "perBucket" else "cogroup",
+      path = path,
       dictSec = (tDict - t0) / 1e9,
       scanSec = (tScan - tDict) / 1e9,
       scoreSec = (tEnd - tScan) / 1e9,
@@ -337,6 +212,113 @@ class IndexReader(spark: SparkSession, root: String) {
     candidates
       .sortBy(h => (-h.score, h.docId))
       .take(k)
+  }
+
+  /** Choose the scoring path for a query's dict-live terms and, on the
+    * local path, fetch their blocks to the driver: ("local" | "empty",
+    * the blocks) or ("perBucket" | "cogroup", the term-filtered scan
+    * still to run).
+    */
+  private def scan(dictRows: Seq[(String, Long, Seq[String])])
+      : (String, Either[Array[IndexBlock], Dataset[IndexBlock]]) = {
+    val dfs = dictRows.map(_._2)
+    val termFiles = dictRows.flatMap(_._3).distinct
+    // targeted block scan: only the terms' files (fall back to the full
+    // segment union if the dict carries no pointers); explicit schema =
+    // no footer-inference job per query. The filter uses the DICT-LIVE
+    // terms only, not the raw query terms: under churn a term whose df
+    // reached 0 leaves the dict while its dead postings stay physically
+    // in segment files until compaction — its blocks must not reach the
+    // scorers, which have no idf for it.
+    val filtered =
+      (if (termFiles.nonEmpty)
+        spark.read.schema(blockSchema).parquet(termFiles: _*).as[IndexBlock]
+      else index)
+        .filter($"term".isin(dictRows.map(_._1): _*))
+
+    // path choice from dict metadata when it is decisive: a group of n
+    // postings packs into >= ceil(n/128) blocks, so a query whose df sum
+    // already implies > LocalEvalMaxBlocks blocks goes straight to the
+    // distributed path — no wasted probe job on stopword queries
+    val minBlocks = dfs.iterator.map(df => (df + 127) / 128).sum
+    // ... and an UPPER bound decides how to fetch: a (term, bucket,
+    // segment) group of n postings encodes into <= n/128 + 1 blocks, so
+    // when even the upper bound fits the driver budget the blocks are
+    // collected in ONE fully parallel job. Only in the gray zone where
+    // the bounds straddle the budget does a limit(N+1) probe decide —
+    // CollectLimitExec runs partitions in incremental SERIAL rounds (1,
+    // 4, 16, ...), a job round-trip each.
+    // The bound must cover PHYSICAL blocks, not the dict's live df: dead
+    // postings of updated/purged docs stay in segment files until
+    // compaction. Two recorded quantities each bound one term's stale
+    // postings — the manifest's exact cumulative dead-posting count, and
+    // tombstones × segments (each tombstoned docId holds at most one
+    // stale version per segment) — so their minimum does too.
+    val deadSlack = math.min(deadPostings, tombstoneCount * segments.size)
+    val maxBlocks = dfs.iterator.map { df =>
+      val phys = df + deadSlack
+      (phys + 127) / 128 + math.min(phys, (1L << bucketBits) * segments.size)
+    }.sum
+    // the local (driver) path requires the dead Map; a distributed-only
+    // tombstone set forces the per-bucket path for correctness
+    val localOk = minBlocks <= LocalEvalMaxBlocks && !deadDistributed
+    val local: Option[Array[IndexBlock]] =
+      if (!localOk) None
+      else if (maxBlocks <= LocalEvalMaxBlocks) Some(filtered.collect())
+      else Some(filtered.limit(LocalEvalMaxBlocks + 1).collect())
+        .filter(_.length <= LocalEvalMaxBlocks)
+    local match {
+      case Some(blocks) => (if (blocks.isEmpty) "empty" else "local", Left(blocks))
+      case None => (if (deadDistributed) "cogroup" else "perBucket", Right(filtered))
+    }
+  }
+
+  /** Per-bucket candidates: every path runs [[Wand.scoreBucket]] once per
+    * docId bucket; only the place (driver threads or executor tasks) and
+    * the source of the bucket's dead map differ.
+    */
+  private def score(fetched: Either[Array[IndexBlock], Dataset[IndexBlock]],
+                    dictRows: Seq[(String, Long, Seq[String])], k: Int,
+                    useWand: Boolean): Array[Hit] = {
+    val idf = dictRows.map(e => e._1 -> Bm25.idf(stats.n, e._2)).toMap
+    val avgdl = stats.avgdl
+    fetched match {
+      case Left(blocks) =>
+        // per-bucket instances are independent — run them across the
+        // driver's cores (each bucket's result is deterministic, so the
+        // answers are bit-identical to a sequential evaluation)
+        import scala.concurrent.{Await, ExecutionContext, Future}
+        implicit val ec: ExecutionContext = ExecutionContext.global
+        val perBucket = Future.sequence(blocks.groupBy(_.bucket).values.map {
+          g => Future(Wand.scoreBucket(g, idf, avgdl, k, dead, useWand))
+        })
+        Await.result(perBucket, scala.concurrent.duration.Duration.Inf)
+          .flatten.toArray
+      case Right(filtered) =>
+        val bIdf = spark.sparkContext.broadcast(idf)
+        val byBucket = filtered.groupByKey(_.bucket)
+        if (!deadDistributed) {
+          // stopword-scale posting set: the small dead set rides along
+          // as a broadcast, so the only shuffle moves the query terms'
+          // compressed blocks
+          val bDead = spark.sparkContext.broadcast(dead)
+          byBucket.flatMapGroups { (_, blocks) =>
+            Wand.scoreBucket(blocks.toArray, bIdf.value, avgdl, k,
+              bDead.value, useWand).iterator
+          }.collect()
+        } else {
+          // huge tombstone set: cogroup the blocks with the tombstones BY
+          // BUCKET — each bucket sees only its own dead entries and the
+          // full set never converges on the driver
+          val bits = bucketBits // recorded width — must match the blocks'
+          val tombsByBucket = tombstonesDf.as[Tombstone]
+            .groupByKey(t => graft.index.DocIds.bucket(t.docId, bits))
+          byBucket.cogroup(tombsByBucket) { (_, blocks, ts) =>
+            Wand.scoreBucket(blocks.toArray, bIdf.value, avgdl, k,
+              ts.map(t => t.docId -> t.before).toMap, useWand).iterator
+          }.collect()
+        }
+    }
   }
 
   /** Index parquet files the dict points at for these query terms — the

@@ -8,7 +8,7 @@ import graft.index.Codec
   * block-max refinement).
   *
   * Runs doc-at-a-time **within one docId bucket** — the engine executes
-  * one instance per bucket (flatMapGroups over the bucket key), each
+  * one instance per bucket ([[scoreBucket]], on every topK path), each
   * producing a rank-safe local top-k; the global top-k is the
   * (score desc, docId asc) head of the per-bucket unions.
   *
@@ -232,6 +232,20 @@ object Wand extends Serializable {
       while (i >= 0) { out(i) = heap.poll(); i -= 1 }
       out // (score desc, docId asc)
     }
+  }
+
+  /** The bucket-scoring kernel every [[IndexReader.topK]] path calls:
+    * one docId bucket's blocks for the query terms → that bucket's exact
+    * local top-k, by block-max WAND or (useWand = false) exhaustive TAAT.
+    * The paths differ only in where the blocks run and where the
+    * bucket's dead map comes from.
+    */
+  def scoreBucket(blocks: Array[IndexBlock], idf: Map[String, Double],
+                  avgdl: Double, k: Int, dead: Map[Long, String],
+                  useWand: Boolean): Array[Hit] = {
+    val byTerm = blocks.groupBy(_.term).toSeq
+    if (useWand) topKInBucket(byTerm, idf, avgdl, k, dead)
+    else taatInBucket(byTerm, idf, avgdl, k, dead)
   }
 
   /** Exact top-k over one bucket's blocks for the query terms.

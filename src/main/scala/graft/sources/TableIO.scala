@@ -13,8 +13,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * root/
   *   segments/<segId>/{docs,index,fwd}/     immutable LSM segments, shared
   *                                          across versions (manifest refs)
-  *   v=<batchId>/{manifest,tombstones,dict,stats}  version = manifest of
-  *                                          segment ids + tombstones + stats
+  *   v=<batchId>/{manifest,stats}           version = manifest of segment
+  *                                          ids + dict/tombs chains + stats
+  *   dict/<id>/, tombs/<id>/                dict and tombstone chain links
   *   current                                text file naming the live version
   *   staging/<batchId>/<stage>/             resumable intermediate outputs
   *   checkpoints/                           append-only JSON log (internalConfig analog)
@@ -60,28 +61,47 @@ class TableIO(val spark: SparkSession, val root: String) extends Serializable {
   def metricsDir: String = s"$root/metrics"
   private def currentPath = new Path(s"$root/current")
 
+  private def manifest(version: String): String =
+    readSmallFile(s"${versionDir(version)}/manifest").getOrElse(
+      throw new IllegalStateException(s"no manifest for version $version"))
+
+  /** A manifest lacking a field this build always writes was written by
+    * an older, incompatible layout: refuse it rather than guess (a guess
+    * is exactly the silent-corruption class the recordings exist to kill).
+    */
+  private def incompatible(version: String, what: String) =
+    new IllegalStateException(s"manifest of $version carries no $what — " +
+      "the index was written by an incompatible layout; rebuild it")
+
+  private def idList(m: scala.util.matching.Regex.Match): Seq[String] =
+    m.group(1).split(",").map(_.trim.stripPrefix("\"").stripSuffix("\""))
+      .filter(_.nonEmpty).toSeq
+
   /** Segment ids referenced by a version's manifest, oldest first, plus
     * the tombstone-row count (kept in the manifest so loading a version
     * with zero tombstones costs no Spark job).
     */
   def readManifest(version: String): (Seq[String], Long) = {
-    val content = readSmallFile(s"${versionDir(version)}/manifest").getOrElse(
-      throw new IllegalStateException(s"no manifest for version $version"))
+    val content = manifest(version)
     val segs = TableIO.ManifestSegsRe.findFirstMatchIn(content)
-      .map(_.group(1).split(",").map(_.trim.stripPrefix("\"").stripSuffix("\""))
-        .filter(_.nonEmpty).toSeq)
-      .getOrElse(Seq.empty)
+      .map(idList).getOrElse(Seq.empty)
     val tombs = TableIO.ManifestTombsRe.findFirstMatchIn(content)
       .map(_.group(1).toLong).getOrElse(0L)
     (segs, tombs)
   }
 
+  /** The one manifest shape this build writes and reads: segments, the
+    * tombstone count, the dict chain, the tombs chain (omitted when
+    * empty, which it is exactly when the count is 0), the bucket width
+    * and the dead-posting count.
+    */
   def writeManifest(version: String, segments: Seq[String],
                     tombstoneCount: Long,
-                    dictChain: Seq[String] = Seq.empty,
-                    bucketBits: Int = graft.index.DocIds.bucketBits,
-                    deadPostings: Long = 0L,
-                    tombChain: Seq[String] = Seq.empty): Unit = {
+                    dictChain: Seq[String],
+                    deadPostings: Long,
+                    tombChain: Seq[String]): Unit = {
+    require(tombstoneCount == 0 || tombChain.nonEmpty,
+      s"manifest of $version: $tombstoneCount tombstones need a tombs chain")
     val dict =
       if (dictChain.isEmpty) ""
       else dictChain.map("\"" + _ + "\"").mkString(",\"dict\":[", ",", "]")
@@ -92,65 +112,50 @@ class TableIO(val spark: SparkSession, val root: String) extends Serializable {
       segments.map("\"" + _ + "\"").mkString(
         "{\"segments\":[", ",",
         s"],\"tombstones\":$tombstoneCount$dict$tombs," +
-          s""""bucketBits":$bucketBits,"deadPostings":$deadPostings}"""))
+          s""""bucketBits":${graft.index.DocIds.bucketBits},"deadPostings":$deadPostings}"""))
   }
 
-  /** The version's tombstone chain, oldest first — empty when the
-    * version has no tombstone links (a manifest without the field and a
-    * POSITIVE tombstone count is a legacy layout whose full set lives at
-    * v=<id>/tombstones; Tables.tombstonesView falls back to it).
+  /** The version's tombstone chain, oldest first — empty exactly when
+    * the version has no tombstones. A positive count without a chain is
+    * an older full-set layout: refused.
     */
-  def readTombChain(version: String): Seq[String] =
-    readSmallFile(s"${versionDir(version)}/manifest")
-      .flatMap(c => TableIO.ManifestTombChainRe.findFirstMatchIn(c))
-      .map(_.group(1).split(",").map(_.trim.stripPrefix("\"").stripSuffix("\""))
-        .filter(_.nonEmpty).toSeq)
-      .getOrElse(Seq.empty)
+  def readTombChain(version: String): Seq[String] = {
+    val content = manifest(version)
+    val chain = TableIO.ManifestTombChainRe.findFirstMatchIn(content)
+      .map(idList).getOrElse(Seq.empty)
+    val count = TableIO.ManifestTombsRe.findFirstMatchIn(content)
+      .map(_.group(1).toLong).getOrElse(0L)
+    if (count > 0 && chain.isEmpty) throw incompatible(version, "tombs chain")
+    chain
+  }
 
   /** Cumulative dead postings physically present in this version's
     * segment files (killed docs' stale term occurrences, reset to 0 by
     * compaction) — recorded at append time so the reader's physical-
-    * block upper bound can scale with ACTUAL stale postings instead of
-    * the conservative tombstones × segments product. None for manifests
-    * written before the recording existed (readers fall back).
+    * block upper bound scales with ACTUAL stale postings.
     */
-  def readDeadPostings(version: String): Option[Long] =
-    readSmallFile(s"${versionDir(version)}/manifest")
-      .flatMap(c => TableIO.ManifestDeadRe.findFirstMatchIn(c))
+  def readDeadPostings(version: String): Long =
+    TableIO.ManifestDeadRe.findFirstMatchIn(manifest(version))
       .map(_.group(1).toLong)
+      .getOrElse(throw incompatible(version, "deadPostings recording"))
 
   /** The docId bucket width this index was built at (recorded per
-    * version; read paths must use it instead of runtime config). A
-    * manifest without the recording fails loudly — falling back to the
-    * runtime config would make the width-mismatch guard vacuous and
-    * silently mis-bucket reads.
+    * version; read paths must use it instead of runtime config — falling
+    * back to the runtime config would make the width-mismatch guard
+    * vacuous and silently mis-bucket reads).
     */
-  def readBucketBits(version: String): Int = {
-    val content = readSmallFile(s"${versionDir(version)}/manifest").getOrElse(
-      throw new IllegalStateException(s"no manifest for version $version"))
-    TableIO.ManifestBitsRe.findFirstMatchIn(content)
+  def readBucketBits(version: String): Int =
+    TableIO.ManifestBitsRe.findFirstMatchIn(manifest(version))
       .map(_.group(1).toInt)
-      .getOrElse(throw new IllegalStateException(
-        s"manifest of $version carries no bucketBits recording — the " +
-          "index was written by an incompatible layout; rebuild it"))
-  }
+      .getOrElse(throw incompatible(version, "bucketBits recording"))
 
   /** The version's dict chain, oldest first: one FULL dict id followed by
-    * zero or more DELTA ids (appends since the last fold). A manifest
-    * without the field is from an incompatible layout — fail loudly
-    * (guessing a location is exactly the silent-corruption class the
-    * recording discipline exists to kill).
+    * zero or more DELTA ids (appends since the last fold).
     */
-  def readDictChain(version: String): Seq[String] = {
-    val content = readSmallFile(s"${versionDir(version)}/manifest").getOrElse(
-      throw new IllegalStateException(s"no manifest for version $version"))
-    TableIO.ManifestDictRe.findFirstMatchIn(content)
-      .map(_.group(1).split(",").map(_.trim.stripPrefix("\"").stripSuffix("\""))
-        .filter(_.nonEmpty).toSeq)
-      .getOrElse(throw new IllegalStateException(
-        s"manifest of $version carries no dict chain — the index was " +
-          "written by an incompatible layout; rebuild it"))
-  }
+  def readDictChain(version: String): Seq[String] =
+    TableIO.ManifestDictRe.findFirstMatchIn(manifest(version))
+      .map(idList)
+      .getOrElse(throw incompatible(version, "dict chain"))
 
   def exists(path: String): Boolean = fs.exists(new Path(path))
 

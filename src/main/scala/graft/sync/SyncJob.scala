@@ -121,12 +121,8 @@ object SyncJob {
           case None if lo == Epoch0 && !fwdAdaptive =>
             // corpus-scale initial build: dedup + bucket clustering in
             // ONE exchange (fb is a function of url) — see
-            // writeFwdFusedInitial; narrow widths keep the plain shape
-            // (a 1-partition fused shuffle would serialize the analyze)
-            if (Tables.fwdBucketBits >= 4)
-              Tables.writeFwdFusedInitial(pages.filter(pred), analyzedDir)
-            else Tables.writeFwd(SegmentBuilder.analyze(delta).toDF(),
-              analyzedDir)
+            // writeFwdFusedInitial
+            Tables.writeFwdFusedInitial(pages.filter(pred), analyzedDir)
           case None =>
             Tables.writeFwdAdaptive(spark,
               SegmentBuilder.analyze(delta).toDF(), analyzedDir)
@@ -249,8 +245,7 @@ object SyncJob {
         .parquet(segs.map(s => s"${io.segmentDir(s)}/docs"): _*)
         .as[graft.DocRow]
       val live = Tables.liveDocs(docs,
-        Tables.tombstonesView(spark, io, v, io.readTombChain(v), tombCount),
-        tombCount)
+        Tables.tombstonesView(spark, io, io.readTombChain(v)), tombCount)
       live.agg(max($"warc_ts")).head()
     }.flatMap(r => Option(r.getTimestamp(0))).getOrElse(Epoch0)
   }
@@ -386,6 +381,19 @@ object SyncJob {
     val analyzedDir = io.stagingDir(batchId, "analyzed")
     val docsDir = io.stagingDir(batchId, "docs")
     val blocksDir = io.stagingDir(batchId, "blocks")
+    val stagingRoot = s"${io.root}/staging/$batchId"
+    // read only after the segment stage has run (this run or an earlier
+    // one) and before publish deletes the staging dir; a segment stage
+    // that left no stash was run by an older, incompatible build
+    lazy val staged = Seq("delta_rows", "delta_dl")
+        .map(f => io.readSmallFile(s"$stagingRoot/$f")) match {
+      case Seq(Some(n), Some(dl)) =>
+        Tables.Staged(docsDir, blocksDir, analyzedDir, n.trim.toLong, dl.trim.toLong)
+      case _ => throw new IllegalStateException(
+        s"staging dir $stagingRoot holds no delta-stats stash (delta_rows, " +
+          "delta_dl): it was staged by an incompatible older build; delete " +
+          "it and re-sync the window under a new batch timestamp")
+    }
 
     // ---- segment -----------------------------------------------------
     if (!cp.isDone(batchId, process, resource, "segment")) timed(batchId, "segment") {
@@ -409,12 +417,10 @@ object SyncJob {
       } }
       val fColl = Future { timed(batchId, "segment.collisions") {
         val (n, dlSum) = SegmentBuilder.checkCollisions(analyzed)
-        io.writeSmallFile(s"${io.root}/staging/$batchId/delta_rows", n.toString)
-        // doclen sum rides along for the merge stage's O(delta) stats
-        // arithmetic (saves its deltaStats job; merge falls back to the
-        // aggregation if the file is missing, e.g. staging from an older
-        // build)
-        io.writeSmallFile(s"${io.root}/staging/$batchId/delta_dl", dlSum.toString)
+        // the delta-stats stash: the merge stage's O(delta) stats
+        // arithmetic and publish's row count read it back
+        io.writeSmallFile(s"$stagingRoot/delta_rows", n.toString)
+        io.writeSmallFile(s"$stagingRoot/delta_dl", dlSum.toString)
       } }
       try timed(batchId, "segment.blocks") {
         val blocks = SegmentBuilder.buildBlocks(
@@ -433,8 +439,7 @@ object SyncJob {
     // ---- dry run stops here (devnull destination, S11): the batch is
     // staged, validated, and measured — nothing merged, nothing published
     if (dryRun) {
-      val n = io.readSmallFile(s"${io.root}/staging/$batchId/delta_rows")
-        .map(_.trim.toLong).getOrElse(0L)
+      val n = staged.rows
       Metrics.append(io, Metrics.driverRow(spark, batchId, process, n,
         System.currentTimeMillis() - t0, "dryrun"))
       return Result(batchId, n, System.currentTimeMillis() - t0)
@@ -442,32 +447,23 @@ object SyncJob {
 
     // ---- merge -------------------------------------------------------
     if (!cp.isDone(batchId, process, resource, "merge")) timed(batchId, "merge") {
+      val st = staged // refuses an older build's staging before any write
       val old = Tables.loadCurrent(spark, io)
-      val staged = Some((docsDir, blocksDir, analyzedDir))
       val purgedDs = purged.getOrElse(spark.emptyDataset[Long])
       old match {
         case None =>
           // initial build: the staged segment (already (term,bucket)-
           // partitioned, sorted, encoded) IS the index — adopt the staged
-          // dirs by rename (O(1), no re-read) and derive dict/stats; the
-          // segment stage already aggregated (rows, doclen sum), so the
-          // stats derivation skips its docs re-aggregation job
-          val known = (
-            io.readSmallFile(s"${io.root}/staging/$batchId/delta_rows"),
-            io.readSmallFile(s"${io.root}/staging/$batchId/delta_dl")) match {
-            case (Some(n), Some(dl)) => Some((n.trim.toLong, dl.trim.toLong))
-            case _ => None
-          }
-          Tables.writeInitial(spark, io, batchId, docsDir, blocksDir,
-            analyzedDir, known)
+          // dirs by rename (O(1), no re-read) and derive dict/stats
+          Tables.writeInitial(spark, io, batchId, st)
         case Some(o) if Tables.needsCompaction(o) =>
           // every compactThreshold batches (or at high tombstone ratio):
           // fold segments into one — amortized O(index/threshold) merge
           // I/O per batch
-          Tables.compactVersion(spark, io, o, batchId, staged, purgedDs)
+          Tables.compactVersion(spark, io, o, batchId, Some(st), purgedDs)
         case Some(o) =>
           // steady state: O(delta) segment append + tombstones
-          Tables.appendVersion(spark, io, o, batchId, staged, purgedDs,
+          Tables.appendVersion(spark, io, o, batchId, Some(st), purgedDs,
             purgedEmpty = purged.isEmpty)
       }
       cp.markDone(batchId, process, resource, "merge")
@@ -476,12 +472,7 @@ object SyncJob {
     // ---- publish -----------------------------------------------------
     if (cp.isDone(batchId, process, resource, "publish"))
       return Result(batchId, 0L, System.currentTimeMillis() - t0)
-    val deltaRows = io.readSmallFile(s"${io.root}/staging/$batchId/delta_rows")
-      .map(_.trim.toLong)
-      .orElse(if (io.exists(docsDir)) Some(io.readParquet(docsDir).count())
-              else None)
-      // staged docs were adopted into the batch's segment dir
-      .getOrElse(io.readParquet(s"${io.segmentDir(batchId)}/docs").count())
+    val deltaRows = staged.rows
     timed(batchId, "publish") {
       io.publish(batchId)
       // adopt the staged positional delta AFTER the pointer flip
@@ -551,7 +542,7 @@ object SyncJob {
           .unionByName(Metrics.driverRow(spark, batchId, process, deltaRows,
             millis, "success")))
       cp.markDone(batchId, process, resource, "publish")
-      io.deleteDir(s"${io.root}/staging/$batchId")
+      io.deleteDir(stagingRoot)
       io.gcVersions()
     }
     Result(batchId, deltaRows, System.currentTimeMillis() - t0)

@@ -89,35 +89,26 @@ object Tables {
     * output dir regardless of rows (measured: 256 dirs ≈ 2.5-4s even for
     * 3k rows), so a small delta segment is written flat (bits=0 — its
     * whole fwd is cheaper to scan than 256 dirs are to commit) while
-    * corpus-scale segments get the full configured width. Readers use the
+    * corpus-scale segments get the full width. Readers use the
     * RECORDED width, never the runtime config — a config change between
     * write and read can therefore never silently mis-prune (a missing
     * recording fails loudly).
     *
-    * This value is the configured CEILING (production sets it high:
-    * 16 → 65536 buckets; the default 8 keeps small-scale file counts
-    * sane).
+    * This value is the width CEILING: 256 buckets keep small-scale file
+    * counts sane.
     */
-  def fwdBucketBits: Int =
-    sys.props.get("graft.fwd.bucketBits")
-      .orElse(sys.env.get("GRAFT_FWD_BUCKET_BITS"))
-      .map(_.toInt).getOrElse(8)
+  val fwdBucketBits: Int = 8
 
   /** Target fwd rows per bucket for the adaptive width (delta segments). */
-  def fwdRowsPerBucket: Long =
-    sys.props.get("graft.fwd.rowsPerBucket")
-      .orElse(sys.env.get("GRAFT_FWD_ROWS_PER_BUCKET"))
-      .map(_.toLong).getOrElse(4096L)
+  val fwdRowsPerBucket: Long = 4096L
 
   /** Adaptive width: 0 (flat) until ~8 buckets' worth of rows, then
-    * ceil(log2(n / rowsPerBucket)) capped at the configured ceiling.
+    * ceil(log2(n / rowsPerBucket)) capped at the ceiling.
     */
-  def chooseFwdBits(n: Long): Int = {
-    val rpb = fwdRowsPerBucket
-    if (n < 8 * rpb) 0
-    else math.min(fwdBucketBits,
-      64 - java.lang.Long.numberOfLeadingZeros(math.max(1L, (n - 1) / rpb)))
-  }
+  def chooseFwdBits(n: Long): Int =
+    if (n < 8 * fwdRowsPerBucket) 0
+    else math.min(fwdBucketBits, 64 -
+      java.lang.Long.numberOfLeadingZeros(math.max(1L, (n - 1) / fwdRowsPerBucket)))
 
   private[graft] def fbExpr(bits: Int): org.apache.spark.sql.Column =
     expr(s"cast(shiftrightunsigned(docId, ${64 - bits}) as int)")
@@ -368,18 +359,14 @@ object Tables {
 
   /** The tombstone set of a version = its chain folded per docId (the
     * NEWEST link mentioning a docId wins — a re-add must soften an older
-    * purge row, exactly the replacement the full-rewrite layout used to
-    * apply at write time). A single-link chain reads directly. Legacy
-    * manifests (no chain recorded, positive count) fall back to the
-    * version-dir full set.
+    * purge row). A single-link chain reads directly; an empty chain is
+    * an empty set ([[TableIO.readTombChain]] refuses a positive count
+    * without one).
     */
-  def tombstonesView(spark: SparkSession, io: TableIO, version: String,
-                     chain: Seq[String],
-                     tombCount: Long): Dataset[Tombstone] = {
+  def tombstonesView(spark: SparkSession, io: TableIO,
+                     chain: Seq[String]): Dataset[Tombstone] = {
     import spark.implicits._
-    if (tombCount == 0) spark.emptyDataset[Tombstone]
-    else if (chain.isEmpty)
-      io.readParquet(s"${io.versionDir(version)}/tombstones").as[Tombstone]
+    if (chain.isEmpty) spark.emptyDataset[Tombstone]
     else {
       val read = spark.read.schema(TombSchema)
         .parquet(chain.map(io.tombsDir): _*)
@@ -406,14 +393,14 @@ object Tables {
       .parquet(segs.map(s => s"${io.segmentDir(s)}/docs"): _*).as[DocRow]
     val index = spark.read
       .parquet(segs.map(s => s"${io.segmentDir(s)}/index"): _*).as[IndexBlock]
-    val tombs = tombstonesView(spark, io, version, tombChain, tombCount)
+    val tombs = tombstonesView(spark, io, tombChain)
     val dict = dictView(spark, io, chain).as[DictRow]
     val r = io.readParquet(s"$dir/stats").head()
     val stats = CorpusStats(r.getAs[Long]("n"), r.getAs[Double]("avgdl"),
       r.getAs[Long]("sumDl"))
     IndexTables(version, segs, liveDocs(docsRaw, tombs, tombCount), index,
       tombs, tombCount, dict, stats, chain, io.readBucketBits(version),
-      tombChain)
+      tombChain, io.readDeadPostings(version))
   }
 
   /** New batches must bucket postings exactly like the index they join —
@@ -463,19 +450,30 @@ object Tables {
 
   // ---- initial build ---------------------------------------------------
 
-  /** Adopt the staged initial build as segment #1 of a fresh index.
-    * `knownStats` = (rows, doclen sum) when the segment stage already
-    * aggregated them — skips the docs re-aggregation job.
+  /** A batch's staged delta: the segment stage's docs, blocks and
+    * analyzed (fwd) dirs, plus the (rows, doclen sum) it aggregated
+    * over them in its collision check.
+    */
+  case class Staged(docsDir: String, blocksDir: String, analyzedDir: String,
+                    rows: Long, dlSum: Long)
+
+  /** Adopt the staged dirs as the batch's segment by rename (O(1)). */
+  private def adopt(io: TableIO, batchId: String, staged: Staged): Unit = {
+    val seg = io.segmentDir(batchId)
+    io.moveDir(staged.docsDir, s"$seg/docs")
+    io.moveDir(staged.blocksDir, s"$seg/index")
+    io.moveDir(staged.analyzedDir, s"$seg/fwd")
+  }
+
+  /** Adopt the staged initial build as segment #1 of a fresh index; the
+    * staged (rows, doclen sum) spare the stats derivation its docs
+    * re-aggregation job.
     */
   def writeInitial(spark: SparkSession, io: TableIO, batchId: String,
-                   docsDir: String, blocksDir: String,
-                   analyzedDir: String,
-                   knownStats: Option[(Long, Long)] = None): Unit = {
-    val seg = io.segmentDir(batchId)
-    io.moveDir(docsDir, s"$seg/docs")
-    io.moveDir(blocksDir, s"$seg/index")
-    io.moveDir(analyzedDir, s"$seg/fwd")
-    deriveDictStats(spark, io, batchId, Seq(batchId), knownStats)
+                   staged: Staged): Unit = {
+    adopt(io, batchId, staged)
+    deriveDictStats(spark, io, batchId, Seq(batchId),
+      Some((staged.rows, staged.dlSum)))
   }
 
   /** FULL dict + corpus stats from a single freshly written segment
@@ -503,7 +501,8 @@ object Tables {
       (n0, if (row.isNullAt(1)) 0L else row.getLong(1))
     }
     writeStats(spark, io, ver, n, sumDl)
-    io.writeManifest(ver, segments, 0L, Seq(ver))
+    io.writeManifest(ver, segments, 0L, Seq(ver), deadPostings = 0L,
+      tombChain = Seq.empty)
   }
 
   private def writeStats(spark: SparkSession, io: TableIO, ver: String,
@@ -540,21 +539,16 @@ object Tables {
     * (rename, O(1)), the tombstone set, the dict, one stats row, one
     * manifest — O(delta + vocabulary), never O(index).
     *
-    * @param staged (docsDir, blocksDir, analyzedDir) of the staged delta,
-    *               or None for a pure purge batch
+    * @param staged the staged delta, or None for a pure purge batch
     */
   def appendVersion(spark: SparkSession, io: TableIO, old: IndexTables,
-                    batchId: String, staged: Option[(String, String, String)],
+                    batchId: String, staged: Option[Staged],
                     purged: Dataset[Long],
                     purgedEmpty: Boolean = false): Unit = {
     import spark.implicits._
     checkBucketBits(old)
     val seg = io.segmentDir(batchId)
-    staged.foreach { case (docsDir, blocksDir, analyzedDir) =>
-      io.moveDir(docsDir, s"$seg/docs")
-      io.moveDir(blocksDir, s"$seg/index")
-      io.moveDir(analyzedDir, s"$seg/fwd")
-    }
+    staged.foreach(adopt(io, batchId, _))
     val hasDelta = staged.isDefined
     def sub[A](stage: String)(f: => A): A =
       SyncJob.timed(batchId, s"merge.$stage")(f)
@@ -563,34 +557,8 @@ object Tables {
       if (hasDelta) io.readParquet(s"$seg/docs").select($"docId")
       else spark.emptyDataset[Long].toDF("docId")
 
-    // the delta's doc count + doclen sum: the segment stage stashed both
-    // next to the staged dirs (its collision-check aggregation collects
-    // all three in one pass) — reuse them instead of re-aggregating the
-    // delta docs; fall back to the aggregation when resuming staging
-    // written by an older build
-    val (deltaN, deltaDl) =
-      if (!hasDelta) (0L, 0L)
-      else (io.readSmallFile(s"${io.root}/staging/$batchId/delta_rows"),
-            io.readSmallFile(s"${io.root}/staging/$batchId/delta_dl")) match {
-        case (Some(n), Some(dl)) => (n.trim.toLong, dl.trim.toLong)
-        case _ => sub("deltaStats") {
-          // staging resumed from an older build: THIS build's segment
-          // stage (and its duplicate-docId guard) never ran over it, so
-          // the per-segment uniqueness every join below relies on is
-          // unverified — enforce it here, in the same aggregation pass
-          // (a duplicate docId would double-count killed rows and
-          // subtract term stats twice: silently negative df)
-          val r = io.readParquet(s"$seg/docs")
-            .groupBy($"docId")
-            .agg(count(lit(1)).as("c"), sum($"doclen").as("dl"))
-            .agg(sum($"c"), sum($"dl"), max($"c")).head()
-          val n = if (r.isNullAt(0)) 0L else r.getLong(0)
-          if (n > 0 && r.getLong(2) > 1) throw new IllegalStateException(
-            "resumed staging holds one docId twice in a segment — " +
-              "discard the staging dir and re-run the batch")
-          (n, if (n == 0 || r.isNullAt(1)) 0L else r.getLong(1))
-        }
-      }
+    // the delta's doc count + doclen sum, from the segment stage
+    val (deltaN, deltaDl) = staged.fold((0L, 0L))(st => (st.rows, st.dlSum))
 
     // affected ids are O(batch): usually broadcastable, but a backfill-
     // scale update/purge batch must not be forced through the driver —
@@ -726,51 +694,33 @@ object Tables {
           val revived = deltaIds
             .join(old.tombstones.toDF().select($"docId"), Seq("docId"),
               "left_semi")
-          val newTombRows0 = killed.select($"docId").union(revived).distinct()
+          val newTombRows = killed.select($"docId").union(revived).distinct()
             .join(deltaIds.withColumn("isDelta", lit(1)), Seq("docId"), "left")
             .select($"docId",
               when($"isDelta".isNotNull, lit(batchId))
                 .otherwise(lit(PurgeSentinel)).as("before"))
-          if (old.tombChain.isEmpty && old.tombstoneCount > 0) {
-            // legacy full-set layout (pre-chain manifest): one-time
-            // migration — fold the old set with this batch's rows into a
-            // single chain link (the old rewrite, redirected)
-            val keptOld = old.tombstones.toDF()
-              .join(maybeBroadcast(newTombRows0.select($"docId"),
-                  affectedCount),
-                Seq("docId"), "left_anti")
-            val allTombs = keptOld.unionByName(newTombRows0).persist()
-            val n = allTombs.count()
-            if (n > 0) {
-              val parts = math.min(n / 4000000L + 1L, 1024L).toInt
-              io.writeParquet(allTombs.coalesce(parts), io.tombsDir(batchId))
-            }
-            allTombs.unpersist()
-            (n, if (n > 0) Seq(batchId) else Seq.empty[String])
-          } else {
-            val newTombRows = newTombRows0.persist()
-            // one aggregate sizes the link and its overlap with the old
-            // ids, keeping the folded count exact integer arithmetic:
-            // new = old + |link| − |link ∩ old ids|
-            val cnt = sub("tombLink") {
-              newTombRows
-                .join(maybeBroadcast(old.tombstones.toDF()
-                    .select($"docId").withColumn("had", lit(1)),
-                  old.tombstoneCount), Seq("docId"), "left")
-                .agg(count(lit(1)), count($"had")).head() }
-            val linkN = cnt.getLong(0)
-            val overlapN = cnt.getLong(1)
-            // partitioned link files, sized by row count — never a
-            // single driver-squeezed coalesce(1) file at scale
-            if (linkN > 0) {
-              val parts = math.min(linkN / 4000000L + 1L, 1024L).toInt
-              io.writeParquet(newTombRows.coalesce(parts),
-                io.tombsDir(batchId))
-            }
-            newTombRows.unpersist()
-            (old.tombstoneCount + linkN - overlapN,
-              if (linkN > 0) old.tombChain :+ batchId else old.tombChain)
+            .persist()
+          // one aggregate sizes the link and its overlap with the old
+          // ids, keeping the folded count exact integer arithmetic:
+          // new = old + |link| − |link ∩ old ids|
+          val cnt = sub("tombLink") {
+            newTombRows
+              .join(maybeBroadcast(old.tombstones.toDF()
+                  .select($"docId").withColumn("had", lit(1)),
+                old.tombstoneCount), Seq("docId"), "left")
+              .agg(count(lit(1)), count($"had")).head() }
+          val linkN = cnt.getLong(0)
+          val overlapN = cnt.getLong(1)
+          // partitioned link files, sized by row count — never a
+          // single driver-squeezed coalesce(1) file at scale
+          if (linkN > 0) {
+            val parts = math.min(linkN / 4000000L + 1L, 1024L).toInt
+            io.writeParquet(newTombRows.coalesce(parts),
+              io.tombsDir(batchId))
           }
+          newTombRows.unpersist()
+          (old.tombstoneCount + linkN - overlapN,
+            if (linkN > 0) old.tombChain :+ batchId else old.tombChain)
         }
 
       writeStats(spark, io, batchId,
@@ -778,14 +728,9 @@ object Tables {
         old.stats.sumDl - killedDl + deltaDl)
       val deadAdd =
         if (nExisting == 0) 0L else obsDead.get("deadAdd").asInstanceOf[Long]
-      // a pre-recording manifest seeds with the conservative per-term
-      // bound (tombstones × segments) rather than 0 — never undercount
-      val deadPostings =
-        io.readDeadPostings(old.version)
-          .getOrElse(old.tombstoneCount * old.segments.size) + deadAdd
       val segs = if (hasDelta) old.segments :+ batchId else old.segments
       io.writeManifest(batchId, segs, tombCount, old.dictChain :+ batchId,
-        deadPostings = deadPostings, tombChain = tombChain)
+        deadPostings = old.deadPostings + deadAdd, tombChain = tombChain)
     } finally { killed.unpersist(); affected.unpersist() }
   }
 
@@ -800,7 +745,7 @@ object Tables {
     */
   def compactVersion(spark: SparkSession, io: TableIO, old: IndexTables,
                      batchId: String,
-                     staged: Option[(String, String, String)],
+                     staged: Option[Staged],
                      purged: Dataset[Long]): Unit = {
     import spark.implicits._
     checkBucketBits(old)
@@ -853,11 +798,11 @@ object Tables {
         old.tombstones, old.tombstoneCount)
 
     val (stagedDocs, stagedPostings, stagedFwd) = staged match {
-      case Some((docsDir, blocksDir, analyzedDir)) =>
-        (io.readParquet(docsDir).as[DocRow],
-          io.readParquet(blocksDir).as[IndexBlock]
+      case Some(st) =>
+        (io.readParquet(st.docsDir).as[DocRow],
+          io.readParquet(st.blocksDir).as[IndexBlock]
             .flatMap(SegmentBuilder.decodeBlock _),
-          Some(readFwdDir(spark, analyzedDir).drop("fb")))
+          Some(readFwdDir(spark, st.analyzedDir).drop("fb")))
       case None =>
         (spark.emptyDataset[DocRow], spark.emptyDataset[Posting], None)
     }

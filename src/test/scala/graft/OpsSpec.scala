@@ -232,25 +232,44 @@ class OpsSpec extends SparkTestBase {
     assert(reader.topK("zzznothere", 5).isEmpty)
   }
 
-  test("merge falls back to aggregation when the delta-stats stash is missing") {
+  test("staging without the delta-stats stash is refused; the published version stays") {
     val root = tmpDir("graft-stash")
     val io = new TableIO(spark, root)
     SyncJob.run(spark, io, Corpus.pages(spark, 200, 2), ts(200))
+    val published = io.currentVersion().get
     // batch 2: stage only (dry run checkpoints the segment stage), then
-    // drop the stashed (delta_rows, delta_dl) small files — staging the
-    // shape an older build would have left behind on resume
+    // drop the stashed (delta_rows, delta_dl) small files — the staging
+    // shape an older build's segment stage left behind
     val win = Corpus.pagesRange(spark, 150, 260, 2)
     val r1 = SyncJob.run(spark, io, win, ts(260), dryRun = true)
-    io.deleteDir(s"$root/staging/${r1.batchId}/delta_rows")
-    io.deleteDir(s"$root/staging/${r1.batchId}/delta_dl")
-    val r2 = SyncJob.run(spark, io, win, ts(260))
-    assert(r2.batchId == r1.batchId)
+    val staging = s"$root/staging/${r1.batchId}"
+    io.deleteDir(s"$staging/delta_rows")
+    io.deleteDir(s"$staging/delta_dl")
+    Seq(true, false).foreach { dryRun =>
+      val e = intercept[IllegalStateException] {
+        SyncJob.run(spark, io, win, ts(260), dryRun = dryRun)
+      }
+      assert(e.getMessage.contains(staging) && e.getMessage.contains("delete it"),
+        e.getMessage)
+    }
+    // nothing adopted or published: the old version still answers
+    assert(io.currentVersion().contains(published))
+    assert(!io.exists(io.segmentDir(r1.batchId)) &&
+      !io.exists(io.versionDir(r1.batchId)))
     val reader = new IndexReader(spark, root)
-    val oracle = new NaiveIndex(Corpus.localRows(260))
+    val oracle = new NaiveIndex(Corpus.localRows(200))
     assert(reader.stats.n == oracle.n)
     assert(reader.stats.avgdl == oracle.avgdl)
     assert(reader.topK("document", 10).map(h => (h.docId, h.score)).toSeq ==
       oracle.topK("document", 10).map(h => (h.docId, h.score)).toSeq)
+    // the named fix: drop the staging dir, re-sync under a new timestamp
+    io.deleteDir(staging)
+    SyncJob.run(spark, io, win, ts(261))
+    val fixed = new IndexReader(spark, root)
+    val oracle2 = new NaiveIndex(Corpus.localRows(260))
+    assert(fixed.stats.n == oracle2.n)
+    assert(fixed.topK("document", 10).map(h => (h.docId, h.score)).toSeq ==
+      oracle2.topK("document", 10).map(h => (h.docId, h.score)).toSeq)
   }
 
   test("verify read-model: in_sync flips when the source drifts") {

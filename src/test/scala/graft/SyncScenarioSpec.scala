@@ -162,6 +162,11 @@ class SyncScenarioSpec extends SparkTestBase {
       graft.index.SegmentBuilder.buildBlocks(
         graft.index.SegmentBuilder.toPostings(analyzed.toDF()), batchId).toDF(),
       io.stagingDir(batchId, "blocks"))
+    // ...and its delta-stats stash (rows, doclen sum), which the merge
+    // stage requires of a completed segment stage
+    val (rows, dlSum) = graft.index.SegmentBuilder.checkCollisions(analyzed.toDF())
+    io.writeSmallFile(s"$root/staging/$batchId/delta_rows", rows.toString)
+    io.writeSmallFile(s"$root/staging/$batchId/delta_dl", dlSum.toString)
     cp.markDone(batchId, "sync", "pages", "segment")
     assert(io.currentVersion().isEmpty) // nothing published yet
     assert(cp.oldestUnfinished("sync").contains(batchId))
