@@ -233,9 +233,12 @@ object BenchExtra {
           SegmentBuilder.toPostings(
             SegmentBuilder.analyze(pages.as[graft.PageRow]).toDF()),
           "b").toDF())),
-      ("Query block fetch (term pushdown)",
-        "The term IN(...) predicate is pushed to parquet; row groups of " +
-          "other terms are skipped via min/max stats.",
+      ("Query block fetch, distributed paths (term pushdown)",
+        "The perBucket and cogroup paths scan the query terms' index " +
+          "files with the term IN(...) predicate pushed to parquet; row " +
+          "groups of other terms are skipped via min/max stats. The local " +
+          "path runs no plan: it reads the same files on the driver with " +
+          "Spark's vectorized Parquet reader, the same predicate pushed.",
         fmt(reader.index.filter($"term".isin("the", "rare07")).toDF())),
       ("Result back-join (docId -> url)",
         "The tiny hit set broadcasts; the docs scan stays pruned to the " +
@@ -249,7 +252,7 @@ object BenchExtra {
           "the InMemoryFileIndex below lists 2 bucket dirs, not the " +
           "whole fwd table.",
         fmt(Tables.readFwdPruned(spark, io,
-          io.readManifest(io.currentVersion().get)._1,
+          io.manifest(io.currentVersion().get).segments,
           Seq(0L, Long.MinValue).toDF("docId")))),
       ("Dict-chain probe (3-link chain: full + two append deltas)",
         "The dict is an LSM chain — a full link plus signed per-append " +
@@ -266,7 +269,7 @@ object BenchExtra {
           // always hit parquet on a miss, which is what this dump shows)
           spark.catalog.clearCache()
           fmt(Tables.dictView(spark, io,
-              io.readDictChain(io.currentVersion().get))
+              io.manifest(io.currentVersion().get).dictChain)
             .filter($"term".isin("the", "rare07")))
         }))
 
@@ -275,8 +278,13 @@ object BenchExtra {
     md.append("Generated by `runMain graft.BenchExtra explain` on a 2000-doc ")
     md.append("index (plans are scale-independent; PlanSpec asserts the ")
     md.append("same properties in CI).\n")
+    // the run's temp root, expression ids, plan ids and lambda addresses
+    // vary between runs: fixed tokens keep the file's diffs to plan changes
     sections.foreach { case (title, note, plan) =>
-      md.append(s"\n## $title\n\n$note\n\n```\n$plan```\n")
+      val stable = plan.replace(root, "<root>").replaceAll("#\\d+", "#n")
+        .replaceAll("plan_id=\\d+", "plan_id=n")
+        .replaceAll("\\$Lambda[^\\s,\\])]*", "\\$Lambda")
+      md.append(s"\n## $title\n\n$note\n\n```\n$stable```\n")
     }
     java.nio.file.Files.writeString(java.nio.file.Paths.get("PLANS.md"),
       md.toString)

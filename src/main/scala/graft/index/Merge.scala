@@ -21,8 +21,7 @@ case class IndexTables(
     stats: CorpusStats,
     dictChain: Seq[String] = Seq.empty,
     bucketBits: Int = DocIds.bucketBits,
-    tombChain: Seq[String] = Seq.empty,
-    deadPostings: Long = 0L)
+    tombChain: Seq[String] = Seq.empty)
 
 /** docs + index plans of a merge, before dict/stats derivation (those are
   * computed from the *written* parquet so the encode shuffle never runs

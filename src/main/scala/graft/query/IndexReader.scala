@@ -1,6 +1,7 @@
 package graft.query
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.functions._
 import graft.{CorpusStats, DocRow, Hit, IndexBlock, ScoredDoc, Tombstone}
 import graft.sources.TableIO
@@ -8,17 +9,16 @@ import graft.sources.TableIO
 /** Snapshot-isolated reader over one published index version (an LSM
   * manifest of immutable segments + a tombstone set).
   *
-  * search(q, k) plan (one narrow job per query):
+  * search(q, k) plan (no Spark job when the terms are cached and few):
   *   1. dict probe: `dict.filter(term ∈ q)` — parquet min/max pruned,
-  *      collects ≤ |q| rows (df → idf).
-  *   2. block scan: `index.filter(term ∈ q)` over the union of segment
-  *      dirs — predicate pushdown prunes row groups (segments are written
-  *      sorted by term); only the query terms' blocks are read, never the
-  *      whole index.
+  *      collects ≤ |q| rows (df → idf, file pointers); cached per term.
+  *   2. block read of the query terms' files: on the driver by Spark's
+  *      vectorized Parquet reader, `term IN (…)` pushed into each file,
+  *      or, for large posting sets, a pruned scan on the executors.
   *   3. one [[Wand.scoreBucket]] per docId bucket — on the driver's
-  *      threads for small posting sets, else `groupByKey(bucket)` on the
-  *      executors (that shuffle moves only the query terms' compressed
-  *      blocks). Tombstoned postings are skipped at decode.
+  *      threads for the driver-read blocks, else `groupByKey(bucket)` on
+  *      the executors (that shuffle moves only the query terms'
+  *      compressed blocks). Tombstoned postings are skipped at decode.
   *   4. global merge: `sort(score desc, docId asc).limit(k)` over ≤
   *      numBuckets·k candidates, then a broadcast join back to docs for
   *      the url (reference surface analog: Solr q/fl/sort/rows,
@@ -31,30 +31,21 @@ class IndexReader(spark: SparkSession, root: String) {
   val version: String = io.currentVersion().getOrElse(
     throw new IllegalStateException(s"no published index at $root"))
 
-  val (segments: Seq[String], tombstoneCount: Long) = io.readManifest(version)
+  private val manifest = io.manifest(version)
+  val segments: Seq[String] = manifest.segments
+  val tombstoneCount: Long = manifest.tombstones
 
   /** The docId bucket width this index was BUILT at (from the manifest —
     * never runtime config: blocks carry these bucket values, and every
     * read-side bucket computation must agree with them).
     */
-  val bucketBits: Int = io.readBucketBits(version)
-
-  /** Exact cumulative dead postings in this version's segment files
-    * (manifest-recorded by appends, reset by compaction).
-    */
-  private val deadPostings: Long = io.readDeadPostings(version)
+  val bucketBits: Int = manifest.bucketBits
 
   private def segPaths(sub: String): Seq[String] =
     segments.map(s => s"${io.segmentDir(s)}/$sub")
 
-  /** Static schema for index reads: skips parquet footer schema inference
-    * (one driver job per spark.read otherwise — per-query latency).
-    */
-  private val blockSchema =
-    org.apache.spark.sql.Encoders.product[IndexBlock].schema
-
-  val index: Dataset[IndexBlock] =
-    spark.read.schema(blockSchema).parquet(segPaths("index"): _*).as[IndexBlock]
+  val index: Dataset[IndexBlock] = spark.read.schema(graft.sync.Tables.BlockSchema)
+    .parquet(segPaths("index"): _*).as[IndexBlock]
 
   /** The folded dict view (one full link + the appends' signed deltas).
     * NOT materialized or persisted: queries go through [[probeDict]]'s
@@ -67,7 +58,7 @@ class IndexReader(spark: SparkSession, root: String) {
     * misses stay pruned scans (PlanSpec, chain depths 2 and 3).
     */
   val dict: DataFrame =
-    graft.sync.Tables.dictView(spark, io, io.readDictChain(version))
+    graft.sync.Tables.dictView(spark, io, manifest.dictChain)
 
   private case class DictEntry(df: Long, files: Seq[String])
 
@@ -112,13 +103,7 @@ class IndexReader(spark: SparkSession, root: String) {
     terms.flatMap(t => cached.getOrElse(t, probed.getOrElse(t, None))
       .map(e => (t, e.df, e.files)))
   }
-  val stats: CorpusStats = {
-    val r = spark.read
-      .schema(org.apache.spark.sql.Encoders.product[CorpusStats].schema)
-      .parquet(s"${io.versionDir(version)}/stats").head()
-    CorpusStats(r.getAs[Long]("n"), r.getAs[Double]("avgdl"),
-      r.getAs[Long]("sumDl"))
-  }
+  val stats: CorpusStats = io.readStats(version)
 
   /** True when the tombstone set is too large to hold on the driver —
     * every dead-check then runs distributed (anti-join over docs, per-
@@ -130,7 +115,7 @@ class IndexReader(spark: SparkSession, root: String) {
     tombstoneCount > graft.sync.Tables.deadBroadcastMax
 
   private def tombstonesDf =
-    graft.sync.Tables.tombstonesView(spark, io, io.readTombChain(version)).toDF()
+    graft.sync.Tables.tombstonesView(spark, io, manifest.tombChain).toDF()
 
   /** Tombstones, collected once per reader when small enough to
     * broadcast; empty (with [[deadDistributed]] set) otherwise —
@@ -151,7 +136,7 @@ class IndexReader(spark: SparkSession, root: String) {
     * broadcast join when it is small, shuffle join when it is large).
     */
   val docs: DataFrame = {
-    val raw = spark.read.parquet(segPaths("docs"): _*)
+    val raw = spark.read.schema(graft.sync.Tables.DocSchema).parquet(segPaths("docs"): _*)
     if (tombstoneCount == 0) raw
     else {
       val t =
@@ -163,12 +148,11 @@ class IndexReader(spark: SparkSession, root: String) {
     }
   }
 
-  /** Block count below which the matching blocks (already term-filtered
-    * at the parquet scan) are collected and WAND runs on the driver —
-    * ONE Spark job per query. 16384 blocks ≈ 2M postings ≈ 15 MB of
-    * compressed block rows: well within a driver's budget for one query,
-    * and block-max WAND decodes only a fraction of them. This keeps
-    * 3-stopword queries over ~10⁶-doc segments on the single-job path
+  /** Block count up to which the matching blocks are read on the driver
+    * and WAND runs there — no Spark job. 16384 blocks ≈ 2M postings ≈
+    * 15 MB of compressed block rows: well within a driver's budget for
+    * one query, and block-max WAND decodes only a fraction of them. This
+    * keeps 3-stopword queries over ~10⁶-doc segments on the driver path
     * (the r2 p95 regression was exactly these queries crossing the old
     * 2048 threshold into a per-query shuffle job after an incremental
     * segment append); truly corpus-scale posting sets still fan out.
@@ -177,12 +161,12 @@ class IndexReader(spark: SparkSession, root: String) {
 
   /** Exact BM25 top-k hits, rank-deterministic (score desc, docId asc).
     *
-    * Job shape: (1) dict probe — a tiny pruned scan collecting ≤ |q| rows:
-    * exact live df per term AND the block-pointer file lists, so (2) the
-    * block scan opens ONLY the parquet files containing the query terms
-    * (row-group min/max pruning still applies inside them), and (3) small
-    * posting sets run WAND on the driver while stopword-scale ones fan
-    * out per bucket, moving only the terms' compressed blocks.
+    * Shape: (1) dict probe — cached, else a tiny pruned scan collecting
+    * ≤ |q| rows: exact live df per term AND the block-pointer file lists,
+    * so (2) the block read opens ONLY the parquet files holding the query
+    * terms, the term predicate pushed into each; (3) small posting sets
+    * are read and scored on the driver with no Spark job, while
+    * stopword-scale ones fan out per bucket, moving only compressed blocks.
     */
   def topK(q: String, k: Int, useWand: Boolean = true): Array[Hit] = {
     val terms = Bm25.queryTerms(q)
@@ -215,61 +199,40 @@ class IndexReader(spark: SparkSession, root: String) {
   }
 
   /** Choose the scoring path for a query's dict-live terms and, on the
-    * local path, fetch their blocks to the driver: ("local" | "empty",
+    * local path, read their blocks on the driver: ("local" | "empty",
     * the blocks) or ("perBucket" | "cogroup", the term-filtered scan
     * still to run).
     */
   private def scan(dictRows: Seq[(String, Long, Seq[String])])
       : (String, Either[Array[IndexBlock], Dataset[IndexBlock]]) = {
-    val dfs = dictRows.map(_._2)
-    val termFiles = dictRows.flatMap(_._3).distinct
-    // targeted block scan: only the terms' files (fall back to the full
-    // segment union if the dict carries no pointers); explicit schema =
-    // no footer-inference job per query. The filter uses the DICT-LIVE
-    // terms only, not the raw query terms: under churn a term whose df
-    // reached 0 leaves the dict while its dead postings stay physically
-    // in segment files until compaction — its blocks must not reach the
-    // scorers, which have no idf for it.
-    val filtered =
-      (if (termFiles.nonEmpty)
-        spark.read.schema(blockSchema).parquet(termFiles: _*).as[IndexBlock]
-      else index)
-        .filter($"term".isin(dictRows.map(_._1): _*))
-
-    // path choice from dict metadata when it is decisive: a group of n
-    // postings packs into >= ceil(n/128) blocks, so a query whose df sum
-    // already implies > LocalEvalMaxBlocks blocks goes straight to the
-    // distributed path — no wasted probe job on stopword queries
-    val minBlocks = dfs.iterator.map(df => (df + 127) / 128).sum
-    // ... and an UPPER bound decides how to fetch: a (term, bucket,
-    // segment) group of n postings encodes into <= n/128 + 1 blocks, so
-    // when even the upper bound fits the driver budget the blocks are
-    // collected in ONE fully parallel job. Only in the gray zone where
-    // the bounds straddle the budget does a limit(N+1) probe decide —
-    // CollectLimitExec runs partitions in incremental SERIAL rounds (1,
-    // 4, 16, ...), a job round-trip each.
-    // The bound must cover PHYSICAL blocks, not the dict's live df: dead
-    // postings of updated/purged docs stay in segment files until
-    // compaction. Two recorded quantities each bound one term's stale
-    // postings — the manifest's exact cumulative dead-posting count, and
-    // tombstones × segments (each tombstoned docId holds at most one
-    // stale version per segment) — so their minimum does too.
-    val deadSlack = math.min(deadPostings, tombstoneCount * segments.size)
-    val maxBlocks = dfs.iterator.map { df =>
-      val phys = df + deadSlack
-      (phys + 127) / 128 + math.min(phys, (1L << bucketBits) * segments.size)
-    }.sum
-    // the local (driver) path requires the dead Map; a distributed-only
-    // tombstone set forces the per-bucket path for correctness
-    val localOk = minBlocks <= LocalEvalMaxBlocks && !deadDistributed
-    val local: Option[Array[IndexBlock]] =
-      if (!localOk) None
-      else if (maxBlocks <= LocalEvalMaxBlocks) Some(filtered.collect())
-      else Some(filtered.limit(LocalEvalMaxBlocks + 1).collect())
-        .filter(_.length <= LocalEvalMaxBlocks)
+    // only the terms' files (the segment union if the dict carries no
+    // pointers), filtered on the DICT-LIVE terms, not the raw query
+    // terms: under churn a term whose df reached 0 leaves the dict while
+    // its dead postings stay physically in segment files until
+    // compaction — its blocks must not reach the scorers, which have no
+    // idf for it
+    val terms = dictRows.map(_._1)
+    val files = Some(dictRows.flatMap(_._3).distinct).filter(_.nonEmpty)
+      .getOrElse(segPaths("index"))
+    // n postings pack into >= ceil(n/128) blocks: a df sum implying more
+    // than the budget goes straight to the distributed path, unread, as
+    // does a tombstone set too large for the driver's dead Map
+    val minBlocks = dictRows.iterator.map(e => (e._2 + 127) / 128).sum
+    val local =
+      if (minBlocks > LocalEvalMaxBlocks || deadDistributed) None
+      else {
+        // dead postings stay in segment files until compaction, so only the
+        // read knows the physical block count: it stops at budget + 1
+        val (pushed, keep) = TableIO.stringIn("term", IndexReader.TermOrdinal, terms)
+        io.readLocal(files, IndexReader.BlockEncoder, Some(pushed),
+          LocalEvalMaxBlocks)(keep)
+      }
     local match {
       case Some(blocks) => (if (blocks.isEmpty) "empty" else "local", Left(blocks))
-      case None => (if (deadDistributed) "cogroup" else "perBucket", Right(filtered))
+      case None =>
+        val filtered = spark.read.schema(graft.sync.Tables.BlockSchema)
+          .parquet(files: _*).as[IndexBlock].filter($"term".isin(terms: _*))
+        (if (deadDistributed) "cogroup" else "perBucket", Right(filtered))
     }
   }
 
@@ -348,6 +311,9 @@ class IndexReader(spark: SparkSession, root: String) {
 }
 
 object IndexReader {
+  private val BlockEncoder = ExpressionEncoder[IndexBlock]().resolveAndBind()
+  private val TermOrdinal = BlockEncoder.schema.fieldIndex("term")
+
   /** Stage wall times of the most recent [[IndexReader.topK]] call on
     * this driver — a profiling aid (Bench latency attribution, the
     * BM25-drift investigations), not part of the query API.

@@ -1,7 +1,19 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileContext, FileStatus, FileSystem, Options, Path}
+import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate, Operators}
+import org.apache.parquet.hadoop.ParquetInputFormat
+import org.apache.parquet.io.api.Binary
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport, VectorizedParquetRecordReader}
+import org.apache.spark.sql.execution.vectorized.WritableColumnVector
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.vectorized.ColumnarBatch
+import org.apache.spark.unsafe.types.UTF8String
+import graft.CorpusStats
 
 /** Versioned table storage with atomic publish (SURVEY §4 item 5, §7.2).
   *
@@ -61,44 +73,46 @@ class TableIO(val spark: SparkSession, val root: String) extends Serializable {
   def metricsDir: String = s"$root/metrics"
   private def currentPath = new Path(s"$root/current")
 
-  private def manifest(version: String): String =
-    readSmallFile(s"${versionDir(version)}/manifest").getOrElse(
+  /** A version's manifest, read and parsed once. A manifest lacking a
+    * field this build always writes (the dict chain, the bucket width, or
+    * the tombs chain under a positive tombstone count) was written by an
+    * older, incompatible layout: refused rather than guessed (a guess is
+    * exactly the silent-corruption class the recordings exist to kill).
+    * Fields this build no longer reads, such as `deadPostings`, are
+    * ignored.
+    */
+  def manifest(version: String): TableIO.Manifest = {
+    import TableIO._
+    val content = readSmallFile(s"${versionDir(version)}/manifest").getOrElse(
       throw new IllegalStateException(s"no manifest for version $version"))
-
-  /** A manifest lacking a field this build always writes was written by
-    * an older, incompatible layout: refuse it rather than guess (a guess
-    * is exactly the silent-corruption class the recordings exist to kill).
-    */
-  private def incompatible(version: String, what: String) =
-    new IllegalStateException(s"manifest of $version carries no $what — " +
-      "the index was written by an incompatible layout; rebuild it")
-
-  private def idList(m: scala.util.matching.Regex.Match): Seq[String] =
-    m.group(1).split(",").map(_.trim.stripPrefix("\"").stripSuffix("\""))
-      .filter(_.nonEmpty).toSeq
-
-  /** Segment ids referenced by a version's manifest, oldest first, plus
-    * the tombstone-row count (kept in the manifest so loading a version
-    * with zero tombstones costs no Spark job).
-    */
-  def readManifest(version: String): (Seq[String], Long) = {
-    val content = manifest(version)
-    val segs = TableIO.ManifestSegsRe.findFirstMatchIn(content)
-      .map(idList).getOrElse(Seq.empty)
-    val tombs = TableIO.ManifestTombsRe.findFirstMatchIn(content)
+    def refuse(what: String) =
+      new IllegalStateException(s"manifest of $version carries no $what — " +
+        "the index was written by an incompatible layout; rebuild it")
+    def ids(re: scala.util.matching.Regex): Option[Seq[String]] =
+      re.findFirstMatchIn(content).map(_.group(1).split(",")
+        .map(_.trim.stripPrefix("\"").stripSuffix("\"")).filter(_.nonEmpty).toSeq)
+    val tombs = ManifestTombsRe.findFirstMatchIn(content)
       .map(_.group(1).toLong).getOrElse(0L)
-    (segs, tombs)
+    val tombChain = ids(ManifestTombChainRe).getOrElse(Seq.empty)
+    if (tombs > 0 && tombChain.isEmpty) throw refuse("tombs chain")
+    Manifest(ids(ManifestSegsRe).getOrElse(Seq.empty), tombs,
+      ids(ManifestDictRe).getOrElse(throw refuse("dict chain")), tombChain,
+      ManifestBitsRe.findFirstMatchIn(content).map(_.group(1).toInt)
+        .getOrElse(throw refuse("bucketBits recording")))
   }
+
+  /** A version's segment ids, oldest first, and tombstone-row count. */
+  def readManifest(version: String): (Seq[String], Long) =
+    manifest(version) match { case m => (m.segments, m.tombstones) }
 
   /** The one manifest shape this build writes and reads: segments, the
     * tombstone count, the dict chain, the tombs chain (omitted when
-    * empty, which it is exactly when the count is 0), the bucket width
-    * and the dead-posting count.
+    * empty, which it is exactly when the count is 0) and the bucket
+    * width.
     */
   def writeManifest(version: String, segments: Seq[String],
                     tombstoneCount: Long,
                     dictChain: Seq[String],
-                    deadPostings: Long,
                     tombChain: Seq[String]): Unit = {
     require(tombstoneCount == 0 || tombChain.nonEmpty,
       s"manifest of $version: $tombstoneCount tombstones need a tombs chain")
@@ -112,50 +126,8 @@ class TableIO(val spark: SparkSession, val root: String) extends Serializable {
       segments.map("\"" + _ + "\"").mkString(
         "{\"segments\":[", ",",
         s"],\"tombstones\":$tombstoneCount$dict$tombs," +
-          s""""bucketBits":${graft.index.DocIds.bucketBits},"deadPostings":$deadPostings}"""))
+          s"\"bucketBits\":${graft.index.DocIds.bucketBits}}"))
   }
-
-  /** The version's tombstone chain, oldest first — empty exactly when
-    * the version has no tombstones. A positive count without a chain is
-    * an older full-set layout: refused.
-    */
-  def readTombChain(version: String): Seq[String] = {
-    val content = manifest(version)
-    val chain = TableIO.ManifestTombChainRe.findFirstMatchIn(content)
-      .map(idList).getOrElse(Seq.empty)
-    val count = TableIO.ManifestTombsRe.findFirstMatchIn(content)
-      .map(_.group(1).toLong).getOrElse(0L)
-    if (count > 0 && chain.isEmpty) throw incompatible(version, "tombs chain")
-    chain
-  }
-
-  /** Cumulative dead postings physically present in this version's
-    * segment files (killed docs' stale term occurrences, reset to 0 by
-    * compaction) — recorded at append time so the reader's physical-
-    * block upper bound scales with ACTUAL stale postings.
-    */
-  def readDeadPostings(version: String): Long =
-    TableIO.ManifestDeadRe.findFirstMatchIn(manifest(version))
-      .map(_.group(1).toLong)
-      .getOrElse(throw incompatible(version, "deadPostings recording"))
-
-  /** The docId bucket width this index was built at (recorded per
-    * version; read paths must use it instead of runtime config — falling
-    * back to the runtime config would make the width-mismatch guard
-    * vacuous and silently mis-bucket reads).
-    */
-  def readBucketBits(version: String): Int =
-    TableIO.ManifestBitsRe.findFirstMatchIn(manifest(version))
-      .map(_.group(1).toInt)
-      .getOrElse(throw incompatible(version, "bucketBits recording"))
-
-  /** The version's dict chain, oldest first: one FULL dict id followed by
-    * zero or more DELTA ids (appends since the last fold).
-    */
-  def readDictChain(version: String): Seq[String] =
-    TableIO.ManifestDictRe.findFirstMatchIn(manifest(version))
-      .map(idList)
-      .getOrElse(throw incompatible(version, "dict chain"))
 
   def exists(path: String): Boolean = fs.exists(new Path(path))
 
@@ -222,7 +194,8 @@ class TableIO(val spark: SparkSession, val root: String) extends Serializable {
       .sorted
     versions.dropRight(keep).foreach(v => deleteDir(versionDir(v)))
     val kept = versions.takeRight(keep)
-    val referenced = kept.flatMap(v => readManifest(v)._1).toSet
+    val manifests = kept.map(manifest)
+    val referenced = manifests.flatMap(_.segments).toSet
     // segments newer than the newest PUBLISHED version belong to an
     // in-flight batch that already adopted its staged dirs by rename —
     // deleting them would make that batch's resume fail forever in
@@ -239,7 +212,7 @@ class TableIO(val spark: SparkSession, val root: String) extends Serializable {
     // dict and tombstone chain links share the segment GC discipline:
     // keep what a kept manifest references plus anything newer than the
     // newest published version (an in-flight batch's link)
-    val refDict = kept.flatMap(readDictChain).toSet
+    val refDict = manifests.flatMap(_.dictChain).toSet
     val dictRoot = new Path(s"$root/dict")
     if (fs.exists(dictRoot))
       fs.listStatus(dictRoot).toSeq
@@ -248,7 +221,7 @@ class TableIO(val spark: SparkSession, val root: String) extends Serializable {
         .filterNot(refDict)
         .filterNot(_ > newestPublished)
         .foreach(d => deleteDir(dictDir(d)))
-    val refTombs = kept.flatMap(readTombChain).toSet
+    val refTombs = manifests.flatMap(_.tombChain).toSet
     val tombsRoot = new Path(s"$root/tombs")
     if (fs.exists(tombsRoot))
       fs.listStatus(tombsRoot).toSeq
@@ -354,6 +327,84 @@ class TableIO(val spark: SparkSession, val root: String) extends Serializable {
     }
   }
 
+  /** The Hadoop settings Spark's Parquet scan gives its readers, taken
+    * from this session once; each [[readLocal]] call copies it.
+    */
+  @transient private lazy val localReadConf: Configuration = {
+    val c = spark.sessionState.newHadoopConf()
+    val sql = spark.sessionState.conf
+    c.set(ParquetInputFormat.READ_SUPPORT_CLASS, classOf[ParquetReadSupport].getName)
+    c.set(SQLConf.SESSION_LOCAL_TIMEZONE.key, sql.sessionLocalTimeZone)
+    // index files are sorted by term, so row-group and page min/max prune
+    // as well as the dictionaries would; expanding them costs more
+    c.setBoolean(ParquetInputFormat.DICTIONARY_FILTERING_ENABLED, false)
+    Seq(SQLConf.CASE_SENSITIVE, SQLConf.NESTED_SCHEMA_PRUNING_ENABLED, SQLConf.PARQUET_BINARY_AS_STRING,
+      SQLConf.PARQUET_INT96_AS_TIMESTAMP, SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED,
+      SQLConf.LEGACY_PARQUET_NANOS_AS_LONG, SQLConf.PARQUET_READER_RESPECT_UNKNOWN_TYPE_ANNOTATION)
+      .foreach(e => c.setBoolean(e.key, sql.getConf(e)))
+    c
+  }
+
+  /** Rows of the parquet `paths` (files, or directories of part files)
+    * read on the driver by Spark's vectorized Parquet reader: no Spark
+    * job, one driver task per file. `pushed` is the reader's filter, so
+    * row groups and column-index pages it rules out are never decoded;
+    * `keep(batch)` then tests each row of a batch the reader yields, and
+    * only kept rows are deserialized by `enc` (resolved and bound).
+    * Reading stops as soon as more than `max` rows are kept, and the
+    * answer is then None.
+    */
+  def readLocal[T](paths: Seq[String], enc: ExpressionEncoder[T],
+                   pushed: Option[FilterPredicate] = None,
+                   max: Int = Int.MaxValue)
+                  (keep: ColumnarBatch => Int => Boolean = _ => _ => true)
+      : Option[Array[T]] = {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    implicit val ec: ExecutionContext = ExecutionContext.global
+    val files = paths.flatMap(p => fs.listStatus(new Path(p)).filter { st =>
+      val n = st.getPath.getName
+      st.isFile && !n.startsWith("_") && !n.startsWith(".")
+    })
+    val kept = new java.util.concurrent.atomic.AtomicInteger
+    // one copy per call, shared by its files (a JobConf: the task
+    // contexts then take it as it is instead of copying it again)
+    val conf = new org.apache.hadoop.mapred.JobConf(localReadConf)
+    conf.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, enc.schema.json)
+    pushed.foreach(ParquetInputFormat.setFilterPredicate(conf, _))
+    def readFile(st: FileStatus): Seq[T] = {
+      val reader = new VectorizedParquetRecordReader(false, 4096)
+      val out = Seq.newBuilder[T]
+      try {
+        reader.initialize(
+          new org.apache.hadoop.mapred.FileSplit(st.getPath, 0, st.getLen, Array.empty[String]),
+          new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(
+            conf, new org.apache.hadoop.mapreduce.TaskAttemptID()))
+        reader.initBatch(new org.apache.spark.sql.types.StructType(), InternalRow.empty)
+        val deserialize = TableIO.deserializers.get
+          .computeIfAbsent(enc, _ => enc.createDeserializer())
+          .asInstanceOf[ExpressionEncoder.Deserializer[T]]
+        while (kept.get <= max && reader.nextBatch()) {
+          val batch = reader.resultBatch()
+          val keepRow = keep(batch)
+          var i = 0
+          while (i < batch.numRows && kept.get <= max) {
+            if (keepRow(i) && kept.incrementAndGet() <= max)
+              out += deserialize(batch.getRow(i))
+            i += 1
+          }
+        }
+      } finally reader.close()
+      out.result()
+    }
+    val rows = Await.result(Future.sequence(files.map(st => Future(readFile(st)))),
+      scala.concurrent.duration.Duration.Inf).flatten
+    if (kept.get > max) None else Some(rows.toArray(enc.clsTag))
+  }
+
+  /** A version's corpus statistics, read on the driver (no Spark job). */
+  def readStats(version: String): CorpusStats =
+    readLocal(Seq(s"${versionDir(version)}/stats"), TableIO.StatsEncoder)().get.head
+
   /** O(1) directory adoption (staging → version dir). Idempotent: if the
     * destination already exists the move is considered done (a crashed
     * run's rerun). Version dirs are invisible until `current` flips, so
@@ -388,10 +439,49 @@ class TableIO(val spark: SparkSession, val root: String) extends Serializable {
 }
 
 object TableIO {
+  /** One version's manifest: segment ids and tombs chain oldest first,
+    * the tombstone-row count, the dict chain (one FULL id, then DELTA
+    * ids) and the docId bucket width the index was built at (read paths
+    * use it, never runtime config).
+    */
+  case class Manifest(segments: Seq[String], tombstones: Long,
+                      dictChain: Seq[String], tombChain: Seq[String],
+                      bucketBits: Int)
+
+  /** `column IN values` over a string column at `ordinal` of a
+    * [[TableIO.readLocal]] schema: the predicate pushed into the Parquet
+    * reader, and the same test per row. A dictionary-encoded batch tests
+    * each run of one dictionary id once, not each row's bytes.
+    */
+  def stringIn(column: String, ordinal: Int, values: Seq[String])
+      : (FilterPredicate, ColumnarBatch => Int => Boolean) = {
+    import scala.jdk.CollectionConverters._
+    val wanted = values.map(UTF8String.fromString).toSet
+    (FilterApi.in[Binary, Operators.BinaryColumn](FilterApi.binaryColumn(column),
+      values.map(Binary.fromString).toSet.asJava), batch => batch.column(ordinal) match {
+        case v: WritableColumnVector if v.hasDictionary =>
+          val ids = v.getDictionaryIds
+          var (lastId, lastIn) = (-1, false)
+          i => {
+            val id = ids.getDictId(i)
+            if (id != lastId) { lastId = id; lastIn = wanted(v.getUTF8String(i)) }
+            lastIn
+          }
+        case v => i => wanted(v.getUTF8String(i))
+      })
+  }
+
+  /** Per-thread deserializers by encoder: building one generates code,
+    * and one instance is not safe to share between threads.
+    */
+  private val deserializers =
+    ThreadLocal.withInitial(() => new java.util.IdentityHashMap[AnyRef, AnyRef]())
+
+  private val StatsEncoder = ExpressionEncoder[CorpusStats]().resolveAndBind()
+
   private val ManifestSegsRe = """"segments":\[([^\]]*)\]""".r
   private val ManifestTombsRe = """"tombstones":(\d+)""".r
   private val ManifestDictRe = """"dict":\[([^\]]*)\]""".r
   private val ManifestBitsRe = """"bucketBits":(\d+)""".r
-  private val ManifestDeadRe = """"deadPostings":(\d+)""".r
   private val ManifestTombChainRe = """"tombs":\[([^\]]*)\]""".r
 }

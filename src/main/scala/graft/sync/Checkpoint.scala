@@ -106,11 +106,16 @@ class Checkpoint(spark: SparkSession, io: TableIO) {
     maybeCompact() // markDone only runs under the root's job lock
   }
 
-  /** Oldest batch with any not-done publish stage for the process. */
+  /** Oldest batch of the process with flags but no publish flag, among
+    * those newer than its newest published batch: an older one was
+    * abandoned (its staging dropped and its rows re-synced under a later
+    * batch), and flags are never removed.
+    */
   def oldestUnfinished(process: String): Option[String] = {
     val rows = readLog().filter(_._2 == process)
-    val published = rows.filter(_._4 == "publish").map(_._1).toSet
-    rows.map(_._1).distinct.filterNot(published).sorted.headOption
+    val published = rows.filter(_._4 == "publish").map(_._1)
+    val newest = published.maxOption.getOrElse("")
+    rows.map(_._1).distinct.filter(_ > newest).sorted.headOption
   }
 }
 

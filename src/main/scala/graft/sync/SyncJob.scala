@@ -240,12 +240,12 @@ object SyncJob {
   private def primaryLo(spark: SparkSession, io: TableIO): Timestamp = {
     import spark.implicits._
     io.currentVersion().map { v =>
-      val (segs, tombCount) = io.readManifest(v)
+      val m = io.manifest(v)
       val docs = spark.read.schema(Tables.DocSchema)
-        .parquet(segs.map(s => s"${io.segmentDir(s)}/docs"): _*)
+        .parquet(m.segments.map(s => s"${io.segmentDir(s)}/docs"): _*)
         .as[graft.DocRow]
       val live = Tables.liveDocs(docs,
-        Tables.tombstonesView(spark, io, io.readTombChain(v)), tombCount)
+        Tables.tombstonesView(spark, io, m.tombChain), m.tombstones)
       live.agg(max($"warc_ts")).head()
     }.flatMap(r => Option(r.getTimestamp(0))).getOrElse(Epoch0)
   }

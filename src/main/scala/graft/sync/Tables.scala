@@ -360,7 +360,7 @@ object Tables {
   /** The tombstone set of a version = its chain folded per docId (the
     * NEWEST link mentioning a docId wins — a re-add must soften an older
     * purge row). A single-link chain reads directly; an empty chain is
-    * an empty set ([[TableIO.readTombChain]] refuses a positive count
+    * an empty set ([[TableIO.manifest]] refuses a positive count
     * without one).
     */
   def tombstonesView(spark: SparkSession, io: TableIO,
@@ -385,22 +385,15 @@ object Tables {
 
   def load(spark: SparkSession, io: TableIO, version: String): IndexTables = {
     import spark.implicits._
-    val (segs, tombCount) = io.readManifest(version)
-    val chain = io.readDictChain(version)
-    val tombChain = io.readTombChain(version)
-    val dir = io.versionDir(version)
-    val docsRaw = spark.read
-      .parquet(segs.map(s => s"${io.segmentDir(s)}/docs"): _*).as[DocRow]
-    val index = spark.read
-      .parquet(segs.map(s => s"${io.segmentDir(s)}/index"): _*).as[IndexBlock]
-    val tombs = tombstonesView(spark, io, tombChain)
-    val dict = dictView(spark, io, chain).as[DictRow]
-    val r = io.readParquet(s"$dir/stats").head()
-    val stats = CorpusStats(r.getAs[Long]("n"), r.getAs[Double]("avgdl"),
-      r.getAs[Long]("sumDl"))
-    IndexTables(version, segs, liveDocs(docsRaw, tombs, tombCount), index,
-      tombs, tombCount, dict, stats, chain, io.readBucketBits(version),
-      tombChain, io.readDeadPostings(version))
+    val m = io.manifest(version)
+    val docsRaw = spark.read.schema(DocSchema)
+      .parquet(m.segments.map(s => s"${io.segmentDir(s)}/docs"): _*).as[DocRow]
+    val index = spark.read.schema(BlockSchema)
+      .parquet(m.segments.map(s => s"${io.segmentDir(s)}/index"): _*).as[IndexBlock]
+    val tombs = tombstonesView(spark, io, m.tombChain)
+    IndexTables(version, m.segments, liveDocs(docsRaw, tombs, m.tombstones),
+      index, tombs, m.tombstones, dictView(spark, io, m.dictChain).as[DictRow],
+      io.readStats(version), m.dictChain, m.bucketBits, m.tombChain)
   }
 
   /** New batches must bucket postings exactly like the index they join —
@@ -501,8 +494,7 @@ object Tables {
       (n0, if (row.isNullAt(1)) 0L else row.getLong(1))
     }
     writeStats(spark, io, ver, n, sumDl)
-    io.writeManifest(ver, segments, 0L, Seq(ver), deadPostings = 0L,
-      tombChain = Seq.empty)
+    io.writeManifest(ver, segments, 0L, Seq(ver), tombChain = Seq.empty)
   }
 
   private def writeStats(spark: SparkSession, io: TableIO, ver: String,
@@ -645,20 +637,10 @@ object Tables {
           .groupBy($"term")
           .agg(sum($"count").as("addDf"), sum($"tfSum").as("addCf"),
             collect_set($"f").as("addFiles"))
-      // Σ subDf = the killed docs' distinct-term occurrences = exactly
-      // the postings this batch leaves physically dead in old segment
-      // files; observed on the dict-delta job (no extra pass) and
-      // recorded in the manifest so the reader's physical-block bound
-      // tracks ACTUAL stale postings, not tombstones × segments
-      val obsDead = org.apache.spark.sql.Observation()
-      val dictSub0 = killed
+      val dictSub = killed
         .select(explode($"tfs").as(Seq("term", "tf")))
         .groupBy($"term")
         .agg(count(lit(1)).as("subDf"), sum($"tf").as("subCf"))
-      val dictSub =
-        if (nExisting == 0) dictSub0
-        else dictSub0.observe(obsDead,
-          coalesce(sum($"subDf"), lit(0L)).as("deadAdd"))
       val emptyArr = typedLit(Seq.empty[String])
       val dictDelta = dictAdd
         .join(dictSub, Seq("term"), "full_outer")
@@ -726,11 +708,9 @@ object Tables {
       writeStats(spark, io, batchId,
         old.stats.n - killedN + deltaN,
         old.stats.sumDl - killedDl + deltaDl)
-      val deadAdd =
-        if (nExisting == 0) 0L else obsDead.get("deadAdd").asInstanceOf[Long]
       val segs = if (hasDelta) old.segments :+ batchId else old.segments
       io.writeManifest(batchId, segs, tombCount, old.dictChain :+ batchId,
-        deadPostings = old.deadPostings + deadAdd, tombChain = tombChain)
+        tombChain = tombChain)
     } finally { killed.unpersist(); affected.unpersist() }
   }
 

@@ -40,7 +40,7 @@ class BucketBitsSpec extends SparkTestBase {
         SyncJob.run(spark, io, spark.createDataset(rows)(
           org.apache.spark.sql.Encoders.product[PageRow]),
           new Timestamp(Corpus.warcTsMillis(N)))
-        assert(io.readBucketBits(io.currentVersion().get) == bits,
+        assert(io.manifest(io.currentVersion().get).bucketBits == bits,
           "manifest must record the build width")
         val reader = new IndexReader(spark, root)
         assert(reader.bucketBits == bits)

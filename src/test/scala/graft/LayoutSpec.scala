@@ -46,8 +46,15 @@ class LayoutSpec extends SparkTestBase {
       _.replaceAll(""","tombs":\[[^\]]*\]""", ""))
   }
 
-  test("a manifest with no deadPostings recording is refused") {
-    refused("graft-layout-dead", "deadPostings")(
-      _.replaceAll(""","deadPostings":\d+""", ""))
+  test("a leftover deadPostings field in a manifest is ignored") {
+    val root = tmpDir("graft-layout-dead")
+    val io = new TableIO(spark, root)
+    SyncJob.run(spark, io, Corpus.pages(spark, 200, 2), ts(200))
+    PurgeJob.run(spark, io, Corpus.pages(spark, 180, 2), ts(201))
+    val path = s"${io.versionDir(io.currentVersion().get)}/manifest"
+    val before = new IndexReader(spark, root).topK("document", 10).toSeq
+    io.writeSmallFile(path, io.readSmallFile(path).get.stripSuffix("}") +
+      ""","deadPostings":7}""")
+    assert(new IndexReader(spark, root).topK("document", 10).toSeq == before)
   }
 }

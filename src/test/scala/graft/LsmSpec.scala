@@ -94,7 +94,7 @@ class LsmSpec extends SparkTestBase {
     val keep = rows.filterNot(_.url.endsWith("7"))
     PurgeJob.run(spark, io, spark.createDataset(keep), ts(3 * N))
     val purgeBatch = io.currentVersion().get
-    assert(io.readTombChain(purgeBatch) == Seq(purgeBatch))
+    assert(io.manifest(purgeBatch).tombChain == Seq(purgeBatch))
     val link1Rows = spark.read.parquet(io.tombsDir(purgeBatch)).count()
     assert(link1Rows == 200)
 
@@ -106,7 +106,7 @@ class LsmSpec extends SparkTestBase {
       p.copy(warc_ts = new Timestamp(Corpus.warcTsMillis(10 * N))))
     SyncJob.run(spark, io, spark.createDataset(upd), ts(10 * N + 1))
     val updBatch = io.currentVersion().get
-    assert(io.readTombChain(updBatch) == Seq(purgeBatch, updBatch))
+    assert(io.manifest(updBatch).tombChain == Seq(purgeBatch, updBatch))
     val link2 = spark.read.parquet(io.tombsDir(updBatch))
     assert(link2.count() == 10, "chain link is not O(batch)")
     assert(!io.exists(s"${io.versionDir(updBatch)}/tombstones"),
@@ -493,7 +493,7 @@ class LsmSpec extends SparkTestBase {
       SyncJob.run(spark, io, spark.createDataset(extended), ts(13L * N))
 
       val ver = io.currentVersion().get
-      val chain = io.readDictChain(ver)
+      val chain = io.manifest(ver).dictChain
       assert(chain.size == 4, s"expected 1 full + 3 delta links, got $chain")
 
       // the folded view must equal the oracle dict over LIVE docs exactly
@@ -520,7 +520,7 @@ class LsmSpec extends SparkTestBase {
             p.copy(warc_ts = new Timestamp(Corpus.warcTsMillis(13L * N + j + 1)))
           }),
         ts(14L * N))
-      val chain2 = io.readDictChain(io.currentVersion().get)
+      val chain2 = io.manifest(io.currentVersion().get).dictChain
       assert(chain2.size == 1, s"compaction must fold the chain, got $chain2")
     } finally {
       prev match {

@@ -263,8 +263,12 @@ class OpsSpec extends SparkTestBase {
     assert(reader.topK("document", 10).map(h => (h.docId, h.score)).toSeq ==
       oracle.topK("document", 10).map(h => (h.docId, h.score)).toSeq)
     // the named fix: drop the staging dir, re-sync under a new timestamp
+    val cp = new Checkpoint(spark, io)
+    assert(cp.oldestUnfinished("sync").contains(r1.batchId))
     io.deleteDir(staging)
     SyncJob.run(spark, io, win, ts(261))
+    // the abandoned batch's flags stay, but a newer batch has published
+    assert(new Checkpoint(spark, io).oldestUnfinished("sync").isEmpty)
     val fixed = new IndexReader(spark, root)
     val oracle2 = new NaiveIndex(Corpus.localRows(260))
     assert(fixed.stats.n == oracle2.n)

@@ -138,7 +138,7 @@ class PlanSpec extends SparkTestBase {
       new Timestamp(Corpus.warcTsMillis(300)))
     SyncJob.run(spark, io2, Corpus.pages(spark, 320, 4),
       new Timestamp(Corpus.warcTsMillis(320)))
-    val chain = io2.readDictChain(io2.currentVersion().get)
+    val chain = io2.manifest(io2.currentVersion().get).dictChain
     assert(chain.size == 2, s"expected a 2-link chain, got $chain")
     val probe = graft.sync.Tables.dictView(spark, io2, chain)
       .filter($"term".isin("the", "rare07"))
@@ -159,7 +159,7 @@ class PlanSpec extends SparkTestBase {
       SyncJob.run(spark, io3, Corpus.pages(spark, n, 4),
         new Timestamp(Corpus.warcTsMillis(n)))
     }
-    val chain = io3.readDictChain(io3.currentVersion().get)
+    val chain = io3.manifest(io3.currentVersion().get).dictChain
     assert(chain.size == 3, s"expected a 3-link chain, got $chain")
     val probe = graft.sync.Tables.dictView(spark, io3, chain)
       .filter($"term".isin("the", "rare07"))

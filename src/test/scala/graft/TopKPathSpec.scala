@@ -12,7 +12,7 @@ import graft.sync.{PurgeJob, SyncJob}
   * bits identical, and `lastProfile.path` names the path taken. The
   * index has two segments and tombstones from both a purge and an
   * update, so each path also skips dead postings. The per-bucket path
-  * and the `limit(N+1)` gray-zone probe need posting sets larger than
+  * and the driver read's budget + 1 stop need posting sets larger than
   * the driver budget; a reader subclass lowers `LocalEvalMaxBlocks`
   * instead of growing the corpus.
   */
@@ -93,21 +93,15 @@ class TopKPathSpec extends SparkTestBase {
     }
   }
 
-  test("gray zone: the limit(N+1) probe keeps a fitting set local, sends an overflow per-bucket") {
+  test("budget + 1: n blocks fit a budget of n, not of n - 1") {
     val q = "w0010 w0999 w3777"
     val plain = new IndexReader(spark, root)
     val terms = Bm25.queryTerms(q).filter(t => oracle.df(t) > 0).toSeq
     val blocks = plain.index.filter(col("term").isin(terms: _*)).count()
-    // the probe runs only when the dict bounds straddle the budget:
-    // minBlocks <= budget < maxBlocks. minBlocks is Σ ceil(df/128);
-    // maxBlocks is at least Σ ceil(df/128) + min(df, buckets × segments)
+    // the read decides only when the dict's lower bound fits the budget:
+    // minBlocks = Σ ceil(df/128) <= budget; the blocks are more than that
     val minBlocks = terms.map(t => (oracle.df(t) + 127) / 128).sum
-    val maxFloor = terms.map { t =>
-      val df = oracle.df(t)
-      (df + 127) / 128 + math.min(df, (1L << plain.bucketBits) * plain.segments.size)
-    }.sum
-    assert(minBlocks < blocks && blocks < maxFloor,
-      s"'$q' is not a gray-zone query: $minBlocks / $blocks / $maxFloor")
+    assert(minBlocks < blocks, s"'$q' has no room for a read: $minBlocks / $blocks")
     def withBudget(n: Long) = new IndexReader(spark, root) {
       override val LocalEvalMaxBlocks = n.toInt
     }
