@@ -240,9 +240,10 @@ object BenchExtra {
           "path runs no plan: it reads the same files on the driver with " +
           "Spark's vectorized Parquet reader, the same predicate pushed.",
         fmt(reader.index.filter($"term".isin("the", "rare07")).toDF())),
-      ("Result back-join (docId -> url)",
-        "The tiny hit set broadcasts; the docs scan stays pruned to the " +
-          "joined columns.",
+      ("Result back-join (docId -> url), distributed tombstones only",
+        "Above the tombstone broadcast limit the tiny hit set broadcasts and " +
+          "the docs scan stays pruned; below it search runs no plan: it reads " +
+          "the hits' rows on the driver, docId IN(...) pushed.",
         fmt(reader.docs.join(
           broadcast(Seq(graft.Hit(1L, 1.0)).toDF()), Seq("docId")))),
       ("Update-path killed lookup (fwd bucket pruning)",
@@ -256,18 +257,15 @@ object BenchExtra {
           Seq(0L, Long.MinValue).toDF("docId")))),
       ("Dict-chain probe (3-link chain: full + two append deltas)",
         "The dict is an LSM chain — a full link plus signed per-append " +
-          "deltas. A query's probe filters on `term`, the fold's " +
-          "grouping key, so Catalyst pushes the IN predicate below the " +
-          "HashAggregate into the scan covering all three links' dirs: " +
-          "the probe stays a pruned scan at any chain length (an " +
-          "incremental sync " +
-          "therefore never rewrites the O(vocabulary) dict; PlanSpec " +
-          "gates the same property at depth 3).",
+          "deltas. This view serves Tables.load; readers fold the same " +
+          "links on the driver, term IN(...) pushed, and run no plan. A " +
+          "filter on `term`, the fold's grouping key, is pushed below the " +
+          "HashAggregate into the scan over all three links' dirs, so the " +
+          "view stays a pruned scan at any chain length (an incremental " +
+          "sync never rewrites the O(vocabulary) dict; PlanSpec gates the " +
+          "same property at depth 3).",
         {
-          // defensive: make sure no leftover cache masks the scan path
-          // (readers keep only a driver-heap term cache — dict probes
-          // always hit parquet on a miss, which is what this dump shows)
-          spark.catalog.clearCache()
+          spark.catalog.clearCache() // no leftover cache may mask the scan
           fmt(Tables.dictView(spark, io,
               io.manifest(io.currentVersion().get).dictChain)
             .filter($"term".isin("the", "rare07")))

@@ -3,15 +3,16 @@ package graft.query
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.functions._
-import graft.{CorpusStats, DocRow, Hit, IndexBlock, ScoredDoc, Tombstone}
+import graft.{CorpusStats, DictRow, DocRow, Hit, IndexBlock, ScoredDoc, Tombstone}
 import graft.sources.TableIO
 
 /** Snapshot-isolated reader over one published index version (an LSM
   * manifest of immutable segments + a tombstone set).
   *
-  * search(q, k) plan (no Spark job when the terms are cached and few):
-  *   1. dict probe: `dict.filter(term ∈ q)` — parquet min/max pruned,
-  *      collects ≤ |q| rows (df → idf, file pointers); cached per term.
+  * search(q, k) plan (no Spark job below the driver budgets):
+  *   1. dict probe: cached per term; a miss folds the chain's rows for
+  *      the missing terms on the driver (`term IN (…)` pushed into each
+  *      term-sorted link), ≤ |q| entries (df → idf, file pointers).
   *   2. block read of the query terms' files: on the driver by Spark's
   *      vectorized Parquet reader, `term IN (…)` pushed into each file,
   *      or, for large posting sets, a pruned scan on the executors.
@@ -20,7 +21,9 @@ import graft.sources.TableIO
   *      the executors (that shuffle moves only the query terms'
   *      compressed blocks). Tombstoned postings are skipped at decode.
   *   4. global merge: `sort(score desc, docId asc).limit(k)` over ≤
-  *      numBuckets·k candidates, then a broadcast join back to docs for
+  *      numBuckets·k candidates, then the hits' live docs rows read on
+  *      the driver (`docId IN (…)` pushed into the docId-sorted files;
+  *      a broadcast join only when the tombstone set is distributed) for
   *      the url (reference surface analog: Solr q/fl/sort/rows,
   *      lib/sync/dataAdapters/solr/solr.js:117-122).
   */
@@ -44,36 +47,21 @@ class IndexReader(spark: SparkSession, root: String) {
   private def segPaths(sub: String): Seq[String] =
     segments.map(s => s"${io.segmentDir(s)}/$sub")
 
-  val index: Dataset[IndexBlock] = spark.read.schema(graft.sync.Tables.BlockSchema)
+  lazy val index: Dataset[IndexBlock] = spark.read.schema(graft.sync.Tables.BlockSchema)
     .parquet(segPaths("index"): _*).as[IndexBlock]
-
-  /** The folded dict view (one full link + the appends' signed deltas).
-    * NOT materialized or persisted: queries go through [[probeDict]]'s
-    * bounded term cache instead — the r4 shape persisted the WHOLE
-    * folded vocabulary in memory, which cost the first probe an
-    * O(vocabulary) materialization and every later probe an in-memory
-    * scan of the full cached vocabulary; both linear costs are gone
-    * (the BM25 p50/p95 drift the r4 verdict flagged). A term-filtered
-    * probe of this view pushes its predicate below the fold, so cache
-    * misses stay pruned scans (PlanSpec, chain depths 2 and 3).
-    */
-  val dict: DataFrame =
-    graft.sync.Tables.dictView(spark, io, manifest.dictChain)
-
-  private case class DictEntry(df: Long, files: Seq[String])
 
   /** Bounded driver-side term→dict-entry cache (the Lucene
     * term-dictionary-cache analog; safe because a reader is a snapshot
     * of one immutable version). Misses — including NEGATIVE results,
-    * absent terms are common — fill from one pruned probe per query;
+    * absent terms are common — fill from one driver read per query;
     * repeated terms cost nothing. LRU-bounded so a scan over a huge
     * vocabulary cannot accumulate on the driver.
     */
   private val DictCacheMax = 65536
   private val dictCache = java.util.Collections.synchronizedMap(
-    new java.util.LinkedHashMap[String, Option[DictEntry]](1024, 0.75f, true) {
+    new java.util.LinkedHashMap[String, Option[DictRow]](1024, 0.75f, true) {
       override def removeEldestEntry(
-          e: java.util.Map.Entry[String, Option[DictEntry]]): Boolean =
+          e: java.util.Map.Entry[String, Option[DictRow]]): Boolean =
         size > DictCacheMax
     })
 
@@ -86,16 +74,14 @@ class IndexReader(spark: SparkSession, root: String) {
     * check-then-get would silently drop the term from scoring.
     */
   private def probeDict(terms: Seq[String]): Seq[(String, Long, Seq[String])] = {
-    val cached: Map[String, Option[DictEntry]] =
+    val cached: Map[String, Option[DictRow]] =
       terms.flatMap(t => Option(dictCache.get(t)).map(t -> _)).toMap
     val missing = terms.filterNot(cached.contains)
-    val probed: Map[String, Option[DictEntry]] =
+    val probed: Map[String, Option[DictRow]] =
       if (missing.isEmpty) Map.empty
       else {
-        val rows = dict.filter($"term".isin(missing: _*))
-          .select($"term", $"df", $"files").collect()
-        val found = rows.iterator.map(r => r.getString(0) ->
-          DictEntry(r.getLong(1), r.getSeq[String](2))).toMap
+        val found = graft.sync.Tables.dictLocal(io, manifest.dictChain, missing)
+          .map(r => r.term -> r).toMap
         val m = missing.map(t => t -> found.get(t)).toMap
         m.foreach { case (t, v) => dictCache.put(t, v) }
         m
@@ -117,13 +103,13 @@ class IndexReader(spark: SparkSession, root: String) {
   private def tombstonesDf =
     graft.sync.Tables.tombstonesView(spark, io, manifest.tombChain).toDF()
 
-  /** Tombstones, collected once per reader when small enough to
-    * broadcast; empty (with [[deadDistributed]] set) otherwise —
+  /** Tombstones, folded on the driver once per reader when small enough
+    * to broadcast; empty (with [[deadDistributed]] set) otherwise —
     * production analog: per-segment bitmaps, Lucene's liveDocs.
     */
   val dead: Map[Long, String] =
     if (tombstoneCount == 0 || deadDistributed) Map.empty
-    else tombstonesDf.as[Tombstone].collect().map(t => t.docId -> t.before).toMap
+    else graft.sync.Tables.tombstonesLocal(io, manifest.tombChain)
 
   /** Distinct batch_ids among LIVE docs (≈ #segments values; one pruned
     * column scan, computed lazily once per reader — this snapshot's set
@@ -135,7 +121,7 @@ class IndexReader(spark: SparkSession, root: String) {
   /** Live doc rows (tombstone-filtered; no join when the set is empty,
     * broadcast join when it is small, shuffle join when it is large).
     */
-  val docs: DataFrame = {
+  lazy val docs: DataFrame = {
     val raw = spark.read.schema(graft.sync.Tables.DocSchema).parquet(segPaths("docs"): _*)
     if (tombstoneCount == 0) raw
     else {
@@ -293,19 +279,28 @@ class IndexReader(spark: SparkSession, root: String) {
     probeDict(terms.toSeq).flatMap(_._3).distinct
   }
 
-  /** Top-k joined back to document metadata, with ranks. */
+  /** Top-k with each hit's url, with ranks. A hit with no live docs row
+    * means the version's files are damaged: refused, naming the docId.
+    */
   def search(q: String, k: Int): Array[ScoredDoc] = {
     val hits = topK(q, k)
     if (hits.isEmpty) return Array.empty
-    val hitDf = hits.toSeq.toDF()
-    val joined = docs
-      .join(broadcast(hitDf), Seq("docId"))
-      .select($"docId", $"url", $"score")
-      .as[(Long, String, Double)].collect()
-    val byId = joined.map(t => t._1 -> t).toMap
+    val ids = hits.map(_.docId).toSeq
+    val urls: Map[Long, String] =
+      if (deadDistributed)
+        docs.join(broadcast(ids.toDF("docId")), Seq("docId"))
+          .select($"docId", $"url").as[(Long, String)].collect().toMap
+      else {
+        // a row is live unless a tombstone (docId, before) has
+        // batch_id < before — the `docs` view's anti-join, per row
+        val (pushed, keep) = TableIO.longIn("docId", IndexReader.DocIdOrdinal, ids)
+        io.readLocal(segPaths("docs"), IndexReader.DocEncoder, Some(pushed))(keep).get
+          .collect { case d if dead.get(d.docId).forall(d.batch_id >= _) => d.docId -> d.url }
+          .toMap
+      }
     hits.zipWithIndex.map { case (h, i) =>
-      val (_, url, _) = byId(h.docId)
-      ScoredDoc(i + 1, h.docId, url, h.score)
+      ScoredDoc(i + 1, h.docId, urls.getOrElse(h.docId, throw new IllegalStateException(
+        s"hit docId ${h.docId} has no live docs row in version $version")), h.score)
     }
   }
 }
@@ -313,6 +308,8 @@ class IndexReader(spark: SparkSession, root: String) {
 object IndexReader {
   private val BlockEncoder = ExpressionEncoder[IndexBlock]().resolveAndBind()
   private val TermOrdinal = BlockEncoder.schema.fieldIndex("term")
+  private val DocEncoder = ExpressionEncoder[DocRow]().resolveAndBind()
+  private val DocIdOrdinal = DocEncoder.schema.fieldIndex("docId")
 
   /** Stage wall times of the most recent [[IndexReader.topK]] call on
     * this driver — a profiling aid (Bench latency attribution, the

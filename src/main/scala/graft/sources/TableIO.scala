@@ -351,6 +351,7 @@ class TableIO(val spark: SparkSession, val root: String) extends Serializable {
     * row groups and column-index pages it rules out are never decoded;
     * `keep(batch)` then tests each row of a batch the reader yields, and
     * only kept rows are deserialized by `enc` (resolved and bound).
+    * Rows come in the order of `paths`, and in file order within a file.
     * Reading stops as soon as more than `max` rows are kept, and the
     * answer is then None.
     */
@@ -469,6 +470,18 @@ object TableIO {
           }
         case v => i => wanted(v.getUTF8String(i))
       })
+  }
+
+  /** `column IN values` over a long column at `ordinal` of a
+    * [[TableIO.readLocal]] schema: the pushed predicate and the per-row
+    * test.
+    */
+  def longIn(column: String, ordinal: Int, values: Seq[Long])
+      : (FilterPredicate, ColumnarBatch => Int => Boolean) = {
+    import scala.jdk.CollectionConverters._
+    val wanted = values.toSet
+    (FilterApi.in[java.lang.Long, Operators.LongColumn](FilterApi.longColumn(column),
+      values.map(Long.box).toSet.asJava), batch => wanted.compose(batch.column(ordinal).getLong))
   }
 
   /** Per-thread deserializers by encoder: building one generates code,

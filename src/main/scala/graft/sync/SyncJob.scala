@@ -413,7 +413,9 @@ object SyncJob {
       import scala.concurrent.duration.Duration
       implicit val ec: ExecutionContext = ExecutionContext.global
       val fDocs = Future { timed(batchId, "segment.docs") {
-        io.writeParquet(SegmentBuilder.toDocs(analyzed, batchId).toDF(), docsDir)
+        // sorted by docId, so a driver read of a few docIds skips pages
+        io.writeParquet(SegmentBuilder.toDocs(analyzed, batchId)
+          .sortWithinPartitions($"docId").toDF(), docsDir)
       } }
       val fColl = Future { timed(batchId, "segment.collisions") {
         val (n, dlSum) = SegmentBuilder.checkCollisions(analyzed)

@@ -1,6 +1,7 @@
 package graft.sync
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.functions._
 import graft.{CorpusStats, DictRow, DocRow, IndexBlock, Posting, Tombstone}
 import graft.index.{IndexTables, Merge, SegmentBuilder}
@@ -354,6 +355,23 @@ object Tables {
       .filter($"df" > 0)
   }
 
+  /** [[dictView]]'s rows for `terms`, folded on the driver with no Spark
+    * job: one [[TableIO.readLocal]] over the chain's links with the term
+    * predicate pushed (links are written sorted by term, so pages of
+    * other terms stay unread), then Σdf, Σcf and the distinct union of
+    * `files` per term, under the view's df > 0 rule.
+    */
+  def dictLocal(io: TableIO, chain: Seq[String], terms: Seq[String]): Seq[DictRow] = {
+    val (pushed, keep) = TableIO.stringIn("term", DictTermOrdinal, terms)
+    val folded = io.readLocal(chain.map(io.dictDir), DictEncoder, Some(pushed))(keep).get
+      .groupBy(_.term).values.map(_.reduce((a, b) =>
+        DictRow(a.term, a.df + b.df, a.cf + b.cf, (a.files ++ b.files).distinct))).toSeq
+    if (chain.size == 1) folded else folded.filter(_.df > 0)
+  }
+
+  private val DictEncoder = ExpressionEncoder[DictRow]().resolveAndBind()
+  private val DictTermOrdinal = DictEncoder.schema.fieldIndex("term")
+
   private[graft] val TombSchema: org.apache.spark.sql.types.StructType =
     org.apache.spark.sql.Encoders.product[Tombstone].schema
 
@@ -382,6 +400,16 @@ object Tables {
        }).as[Tombstone]
     }
   }
+
+  /** [[tombstonesView]] folded on the driver with no Spark job: docId →
+    * `before`. `readLocal` yields the links oldest first, so the newest
+    * link's row is the one the map keeps.
+    */
+  def tombstonesLocal(io: TableIO, chain: Seq[String]): Map[Long, String] =
+    io.readLocal(chain.map(io.tombsDir), TombEncoder)().get
+      .iterator.map(t => t.docId -> t.before).toMap
+
+  private val TombEncoder = ExpressionEncoder[Tombstone]().resolveAndBind()
 
   def load(spark: SparkSession, io: TableIO, version: String): IndexTables = {
     import spark.implicits._
@@ -484,7 +512,7 @@ object Tables {
       .withColumn("f", input_file_name()) // project first: agg args must be deterministic
     io.writeParquet(
       idx.groupBy($"term").agg(sum($"count").as("df"), sum($"tfSum").as("cf"),
-        collect_set($"f").as("files")),
+        collect_set($"f").as("files")).sortWithinPartitions($"term"),
       io.dictDir(ver))
     val (n, sumDl) = knownStats.getOrElse {
       val row = spark.read.schema(DocSchema)
@@ -651,6 +679,7 @@ object Tables {
             .as("cf"),
           coalesce($"addFiles", emptyArr).as("files"))
         .filter($"df" =!= 0 || $"cf" =!= 0 || size($"files") > 0)
+        .sortWithinPartitions($"term")
       sub("dictWrite") {
         io.writeParquet(dictDelta, io.dictDir(batchId)) }
 
@@ -808,7 +837,7 @@ object Tables {
     val merged = Merge.merge(spark, Some((baseDocs, baseIndex)),
       deltaDocs, deltaPostings, purgedAll, batchId)
     val seg = io.segmentDir(batchId)
-    io.writeParquet(merged.docs.toDF(), s"$seg/docs")
+    io.writeParquet(merged.docs.sortWithinPartitions($"docId").toDF(), s"$seg/docs")
     // whole-index xxhash64 collision re-check rides on each compaction
     SegmentBuilder.checkCollisions(io.readParquet(s"$seg/docs"))
     io.writeParquet(merged.index.toDF(), s"$seg/index")
