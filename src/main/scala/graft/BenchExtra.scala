@@ -257,8 +257,9 @@ object BenchExtra {
           Seq(0L, Long.MinValue).toDF("docId")))),
       ("Dict-chain probe (3-link chain: full + two append deltas)",
         "The dict is an LSM chain — a full link plus signed per-append " +
-          "deltas. This view serves Tables.load; readers fold the same " +
-          "links on the driver, term IN(...) pushed, and run no plan. A " +
+          "deltas. Readers fold the links on the driver, term IN(...) " +
+          "pushed, and run no plan; this Spark view of the same fold is " +
+          "what DriverReadSpec checks the driver fold against. A " +
           "filter on `term`, the fold's grouping key, is pushed below the " +
           "HashAggregate into the scan over all three links' dirs, so the " +
           "view stays a pruned scan at any chain length (an incremental " +

@@ -67,8 +67,4 @@ object DocIds extends Serializable {
     */
   def bucket(docId: Long, bits: Int): Int =
     if (bits == 0) 0 else (docId >>> (64 - bits)).toInt
-
-  /** Unsigned lower bound of a bucket's docId range (as signed Long). */
-  def bucketBase(bucket: Int): Long =
-    if (bucketBits == 0) 0L else bucket.toLong << (64 - bucketBits)
 }

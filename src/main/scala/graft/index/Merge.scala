@@ -1,27 +1,7 @@
 package graft.index
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
-import graft.{CorpusStats, DictRow, DocRow, IndexBlock, Posting, Tombstone}
-
-/** The logical tables of one published index version (LSM view).
-  *
-  * @param docs  tombstone-filtered live doc rows
-  * @param index raw union of all segments' posting blocks — dead postings
-  *              are filtered at decode time against `tombstones`
-  */
-case class IndexTables(
-    version: String,
-    segments: Seq[String],
-    docs: Dataset[DocRow],
-    index: Dataset[IndexBlock],
-    tombstones: Dataset[Tombstone],
-    tombstoneCount: Long,
-    dict: Dataset[DictRow],
-    stats: CorpusStats,
-    dictChain: Seq[String] = Seq.empty,
-    bucketBits: Int = DocIds.bucketBits,
-    tombChain: Seq[String] = Seq.empty)
+import org.apache.spark.sql.{Dataset, SparkSession}
+import graft.{DocRow, IndexBlock, Posting}
 
 /** docs + index plans of a merge, before dict/stats derivation (those are
   * computed from the *written* parquet so the encode shuffle never runs
@@ -76,86 +56,78 @@ object Merge extends Serializable {
     */
   val MaxBroadcast = 5000000L
 
-  def fullBuild(spark: SparkSession, deltaDocs: Dataset[DocRow],
-                deltaPostings: Dataset[Posting], batchId: String): MergedData =
-    MergedData(deltaDocs, SegmentBuilder.buildBlocks(deltaPostings, batchId))
-
-  /** @param base raw (docs, index) of the base segment — dead rows are
-    *             removed via `purgedDocIds` + the delta's own docIds
+  /** @param baseDocs  raw docs of the base segment — dead rows are
+    *                  removed via `purgedDocIds` + the delta's own docIds
+    * @param baseIndex raw index blocks of the base segment
     */
   def merge(
       spark: SparkSession,
-      base: Option[(Dataset[DocRow], Dataset[IndexBlock])],
+      baseDocs: Dataset[DocRow],
+      baseIndex: Dataset[IndexBlock],
       deltaDocs: Dataset[DocRow],
       deltaPostings: Dataset[Posting],
       purgedDocIds: Dataset[Long],
       batchId: String): MergedData = {
     import spark.implicits._
+    val deltaIds = deltaDocs.select($"docId").as[Long]
+    val affectedDs = deltaIds.union(purgedDocIds).distinct()
+    val nAffected = affectedDs.count()
+    val groupsDs = deltaPostings.select($"term", $"bucket").distinct()
+    val nGroups = groupsDs.count()
 
-    base match {
-      case None =>
-        fullBuild(spark, deltaDocs, deltaPostings, batchId)
-      case Some((baseDocs, baseIndex)) =>
-        val deltaIds = deltaDocs.select($"docId").as[Long]
-        val affectedDs = deltaIds.union(purgedDocIds).distinct()
-        val nAffected = affectedDs.count()
-        val groupsDs = deltaPostings.select($"term", $"bucket").distinct()
-        val nGroups = groupsDs.count()
+    if (nAffected + nGroups > MaxBroadcast) {
+      // join-based full rebuild (huge batch): decode everything,
+      // anti-join tombstones, rebuild all groups in one shuffle.
+      val oldPostings = baseIndex.flatMap(SegmentBuilder.decodeBlock _)
+      val live = oldPostings
+        .join(affectedDs.toDF("docId"), Seq("docId"), "left_anti")
+        .as[Posting]
+      val index = SegmentBuilder.buildBlocks(live.unionByName(deltaPostings), batchId)
+      val docs = baseDocs
+        .join(affectedDs.toDF("docId"), Seq("docId"), "left_anti")
+        .as[DocRow].unionByName(deltaDocs)
+      MergedData(docs, index)
+    } else {
+      val affected: Array[Long] = affectedDs.collect().sorted
+      // groups travel as hashed Longs, not term strings — a wide-vocab
+      // delta would otherwise plant GBs of strings on the driver. A
+      // hash collision only mis-routes an untouched group into the
+      // rebuild path (same postings re-encoded — correct, just work).
+      val groups: Array[Long] =
+        groupsDs.as[(String, Int)].map(g => groupKey(g._1, g._2))
+          .collect().sorted
+      val bAffected = spark.sparkContext.broadcast(affected)
+      val bGroups = spark.sparkContext.broadcast(groups)
 
-        if (nAffected + nGroups > MaxBroadcast) {
-          // join-based full rebuild (huge batch): decode everything,
-          // anti-join tombstones, rebuild all groups in one shuffle.
-          val oldPostings = baseIndex.flatMap(SegmentBuilder.decodeBlock _)
-          val live = oldPostings
-            .join(affectedDs.toDF("docId"), Seq("docId"), "left_anti")
-            .as[Posting]
-          val index = SegmentBuilder.buildBlocks(live.unionByName(deltaPostings), batchId)
-          val docs = baseDocs
-            .join(affectedDs.toDF("docId"), Seq("docId"), "left_anti")
-            .as[DocRow].unionByName(deltaDocs)
-          MergedData(docs, index)
-        } else {
-          val affected: Array[Long] = affectedDs.collect().sorted
-          // groups travel as hashed Longs, not term strings — a wide-vocab
-          // delta would otherwise plant GBs of strings on the driver. A
-          // hash collision only mis-routes an untouched group into the
-          // rebuild path (same postings re-encoded — correct, just work).
-          val groups: Array[Long] =
-            groupsDs.as[(String, Int)].map(g => groupKey(g._1, g._2))
-              .collect().sorted
-          val bAffected = spark.sparkContext.broadcast(affected)
-          val bGroups = spark.sparkContext.broadcast(groups)
+      def isTouched(b: IndexBlock): Boolean =
+        java.util.Arrays.binarySearch(
+          bGroups.value, groupKey(b.term, b.bucket)) >= 0
+      def overlaps(b: IndexBlock): Boolean =
+        rangeHasAny(bAffected.value, b.firstDocId, b.lastDocId)
+      def liveOnly(ps: Array[Posting]): Array[Posting] = {
+        val a = bAffected.value
+        ps.filter(p => java.util.Arrays.binarySearch(a, p.docId) < 0)
+      }
 
-          def isTouched(b: IndexBlock): Boolean =
-            java.util.Arrays.binarySearch(
-              bGroups.value, groupKey(b.term, b.bucket)) >= 0
-          def overlaps(b: IndexBlock): Boolean =
-            rangeHasAny(bAffected.value, b.firstDocId, b.lastDocId)
-          def liveOnly(ps: Array[Posting]): Array[Posting] = {
-            val a = bAffected.value
-            ps.filter(p => java.util.Arrays.binarySearch(a, p.docId) < 0)
-          }
-
-          val passThrough = baseIndex.filter(b => !isTouched(b) && !overlaps(b))
-          val rewritten = baseIndex
-            .filter(b => !isTouched(b) && overlaps(b))
-            .flatMap { b =>
-              val live = liveOnly(SegmentBuilder.decodeBlock(b))
-              if (live.isEmpty) None
-              else Some(SegmentBuilder.reencodeBlock(b, live))
-            }
-          val pooled = baseIndex
-            .filter(isTouched _)
-            .flatMap(b => liveOnly(SegmentBuilder.decodeBlock(b)))
-          val rebuilt =
-            SegmentBuilder.buildBlocks(pooled.unionByName(deltaPostings), batchId)
-          val index = passThrough.unionByName(rewritten).unionByName(rebuilt)
-
-          val docs = baseDocs
-            .filter(d => java.util.Arrays.binarySearch(bAffected.value, d.docId) < 0)
-            .unionByName(deltaDocs)
-          MergedData(docs, index)
+      val passThrough = baseIndex.filter(b => !isTouched(b) && !overlaps(b))
+      val rewritten = baseIndex
+        .filter(b => !isTouched(b) && overlaps(b))
+        .flatMap { b =>
+          val live = liveOnly(SegmentBuilder.decodeBlock(b))
+          if (live.isEmpty) None
+          else Some(SegmentBuilder.reencodeBlock(b, live))
         }
+      val pooled = baseIndex
+        .filter(isTouched _)
+        .flatMap(b => liveOnly(SegmentBuilder.decodeBlock(b)))
+      val rebuilt =
+        SegmentBuilder.buildBlocks(pooled.unionByName(deltaPostings), batchId)
+      val index = passThrough.unionByName(rewritten).unionByName(rebuilt)
+
+      val docs = baseDocs
+        .filter(d => java.util.Arrays.binarySearch(bAffected.value, d.docId) < 0)
+        .unionByName(deltaDocs)
+      MergedData(docs, index)
     }
   }
 
@@ -175,27 +147,5 @@ object Merge extends Serializable {
     var i = java.util.Arrays.binarySearch(a, lo)
     if (i < 0) i = -i - 1
     i < a.length && a(i) <= hi
-  }
-
-  /** Derive dict + corpus stats from docs/index plans. dict needs only
-    * block metadata columns (count, tfSum); docs stats scan one int
-    * column. Production path derives these from the written parquet
-    * (Tables.deriveDictStats) so the encode shuffle never re-runs; this
-    * in-plan variant serves tests. Appends maintain both incrementally
-    * (Tables.appendVersion).
-    */
-  def derive(spark: SparkSession, docs: Dataset[DocRow],
-             index: Dataset[IndexBlock]): IndexTables = {
-    import spark.implicits._
-    val dict = index.groupBy($"term")
-      .agg(sum($"count").as("df"), sum($"tfSum").as("cf"))
-      .withColumn("files", typedLit(Seq.empty[String])) // in-plan: no files
-      .as[DictRow]
-    val row = docs.agg(count(lit(1)), sum($"doclen")).head()
-    val n = row.getLong(0)
-    val sumDl = if (row.isNullAt(1)) 0L else row.getLong(1)
-    val stats = CorpusStats(n, if (n == 0) 0.0 else sumDl.toDouble / n, sumDl)
-    IndexTables("derived", Seq.empty, docs, index,
-      spark.emptyDataset[Tombstone], 0L, dict, stats)
   }
 }

@@ -3,11 +3,16 @@ package graft.query
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.functions._
-import graft.{CorpusStats, DictRow, DocRow, Hit, IndexBlock, ScoredDoc, Tombstone}
+import graft.{CorpusStats, DictRow, DocRow, Hit, IndexBlock, ScoredDoc}
 import graft.sources.TableIO
+import graft.sync.Tables
 
 /** Snapshot-isolated reader over one published index version (an LSM
-  * manifest of immutable segments + a tombstone set).
+  * manifest of immutable segments + a tombstone set), opened through the
+  * version handle [[graft.sync.Tables.load]]: its stats, dead map and
+  * live docs are the handle's, and every dead check applies
+  * [[graft.sync.Tables.isDead]] per row or [[graft.sync.IndexTables.live]]
+  * over a frame.
   *
   * search(q, k) plan (no Spark job below the driver budgets):
   *   1. dict probe: cached per term; a miss folds the chain's rows for
@@ -31,24 +36,16 @@ class IndexReader(spark: SparkSession, root: String) {
   import spark.implicits._
 
   private val io = new TableIO(spark, root)
-  val version: String = io.currentVersion().getOrElse(
-    throw new IllegalStateException(s"no published index at $root"))
+  private val tables = Tables.load(spark, io, io.currentVersion().getOrElse(
+    throw new IllegalStateException(s"no published index at $root")))
+  val version: String = tables.version
+  val segments: Seq[String] = tables.segments
+  val tombstoneCount: Long = tables.tombstoneCount
 
-  private val manifest = io.manifest(version)
-  val segments: Seq[String] = manifest.segments
-  val tombstoneCount: Long = manifest.tombstones
+  /** The docId bucket width this index was BUILT at ([[graft.sync.IndexTables]]). */
+  val bucketBits: Int = tables.bucketBits
 
-  /** The docId bucket width this index was BUILT at (from the manifest —
-    * never runtime config: blocks carry these bucket values, and every
-    * read-side bucket computation must agree with them).
-    */
-  val bucketBits: Int = manifest.bucketBits
-
-  private def segPaths(sub: String): Seq[String] =
-    segments.map(s => s"${io.segmentDir(s)}/$sub")
-
-  lazy val index: Dataset[IndexBlock] = spark.read.schema(graft.sync.Tables.BlockSchema)
-    .parquet(segPaths("index"): _*).as[IndexBlock]
+  lazy val index: Dataset[IndexBlock] = Tables.readBlocks(spark, tables.segPaths("index"))
 
   /** Bounded driver-side term→dict-entry cache (the Lucene
     * term-dictionary-cache analog; safe because a reader is a snapshot
@@ -80,7 +77,7 @@ class IndexReader(spark: SparkSession, root: String) {
     val probed: Map[String, Option[DictRow]] =
       if (missing.isEmpty) Map.empty
       else {
-        val found = graft.sync.Tables.dictLocal(io, manifest.dictChain, missing)
+        val found = Tables.dictLocal(io, tables.dictChain, missing)
           .map(r => r.term -> r).toMap
         val m = missing.map(t => t -> found.get(t)).toMap
         m.foreach { case (t, v) => dictCache.put(t, v) }
@@ -89,27 +86,18 @@ class IndexReader(spark: SparkSession, root: String) {
     terms.flatMap(t => cached.getOrElse(t, probed.getOrElse(t, None))
       .map(e => (t, e.df, e.files)))
   }
-  val stats: CorpusStats = io.readStats(version)
+  val stats: CorpusStats = tables.stats
 
   /** True when the tombstone set is too large to hold on the driver —
     * every dead-check then runs distributed (anti-join over docs, per-
-    * bucket cogroup in topK) and the set is never collected. Below the
-    * threshold the set is bounded anyway: compaction is forced at
-    * max(n/5, graft.tombstones.max) rows.
+    * bucket cogroup in topK) and the set is never collected.
     */
-  val deadDistributed: Boolean =
-    tombstoneCount > graft.sync.Tables.deadBroadcastMax
-
-  private def tombstonesDf =
-    graft.sync.Tables.tombstonesView(spark, io, manifest.tombChain).toDF()
+  val deadDistributed: Boolean = tables.deadDistributed
 
   /** Tombstones, folded on the driver once per reader when small enough
-    * to broadcast; empty (with [[deadDistributed]] set) otherwise —
-    * production analog: per-segment bitmaps, Lucene's liveDocs.
+    * to broadcast; empty (with [[deadDistributed]] set) otherwise.
     */
-  val dead: Map[Long, String] =
-    if (tombstoneCount == 0 || deadDistributed) Map.empty
-    else graft.sync.Tables.tombstonesLocal(io, manifest.tombChain)
+  val dead: Map[Long, String] = tables.dead
 
   /** Distinct batch_ids among LIVE docs (≈ #segments values; one pruned
     * column scan, computed lazily once per reader — this snapshot's set
@@ -118,21 +106,8 @@ class IndexReader(spark: SparkSession, root: String) {
   lazy val liveBatchIds: Seq[String] =
     docs.select("batch_id").distinct().as[String].collect().toSeq
 
-  /** Live doc rows (tombstone-filtered; no join when the set is empty,
-    * broadcast join when it is small, shuffle join when it is large).
-    */
-  lazy val docs: DataFrame = {
-    val raw = spark.read.schema(graft.sync.Tables.DocSchema).parquet(segPaths("docs"): _*)
-    if (tombstoneCount == 0) raw
-    else {
-      val t =
-        if (dead.nonEmpty) broadcast(dead.toSeq.toDF("t_docId", "t_before"))
-        else tombstonesDf.toDF("t_docId", "t_before")
-      raw.join(t,
-        raw("docId") === $"t_docId" && raw("batch_id") < $"t_before",
-        "left_anti")
-    }
-  }
+  /** Live doc rows ([[graft.sync.IndexTables.docs]]). */
+  lazy val docs: DataFrame = tables.docs.toDF()
 
   /** Block count up to which the matching blocks are read on the driver
     * and WAND runs there — no Spark job. 16384 blocks ≈ 2M postings ≈
@@ -199,7 +174,7 @@ class IndexReader(spark: SparkSession, root: String) {
     // idf for it
     val terms = dictRows.map(_._1)
     val files = Some(dictRows.flatMap(_._3).distinct).filter(_.nonEmpty)
-      .getOrElse(segPaths("index"))
+      .getOrElse(tables.segPaths("index"))
     // n postings pack into >= ceil(n/128) blocks: a df sum implying more
     // than the budget goes straight to the distributed path, unread, as
     // does a tombstone set too large for the driver's dead Map
@@ -216,8 +191,7 @@ class IndexReader(spark: SparkSession, root: String) {
     local match {
       case Some(blocks) => (if (blocks.isEmpty) "empty" else "local", Left(blocks))
       case None =>
-        val filtered = spark.read.schema(graft.sync.Tables.BlockSchema)
-          .parquet(files: _*).as[IndexBlock].filter($"term".isin(terms: _*))
+        val filtered = Tables.readBlocks(spark, files).filter($"term".isin(terms: _*))
         (if (deadDistributed) "cogroup" else "perBucket", Right(filtered))
     }
   }
@@ -260,7 +234,7 @@ class IndexReader(spark: SparkSession, root: String) {
           // BUCKET — each bucket sees only its own dead entries and the
           // full set never converges on the driver
           val bits = bucketBits // recorded width — must match the blocks'
-          val tombsByBucket = tombstonesDf.as[Tombstone]
+          val tombsByBucket = tables.tombstones
             .groupByKey(t => graft.index.DocIds.bucket(t.docId, bits))
           byBucket.cogroup(tombsByBucket) { (_, blocks, ts) =>
             Wand.scoreBucket(blocks.toArray, bIdf.value, avgdl, k,
@@ -291,11 +265,9 @@ class IndexReader(spark: SparkSession, root: String) {
         docs.join(broadcast(ids.toDF("docId")), Seq("docId"))
           .select($"docId", $"url").as[(Long, String)].collect().toMap
       else {
-        // a row is live unless a tombstone (docId, before) has
-        // batch_id < before — the `docs` view's anti-join, per row
         val (pushed, keep) = TableIO.longIn("docId", IndexReader.DocIdOrdinal, ids)
-        io.readLocal(segPaths("docs"), IndexReader.DocEncoder, Some(pushed))(keep).get
-          .collect { case d if dead.get(d.docId).forall(d.batch_id >= _) => d.docId -> d.url }
+        io.readLocal(tables.segPaths("docs"), IndexReader.DocEncoder, Some(pushed))(keep).get
+          .collect { case d if !Tables.isDead(dead, d.docId, d.batch_id) => d.docId -> d.url }
           .toMap
       }
     hits.zipWithIndex.map { case (h, i) =>

@@ -2,6 +2,7 @@ package graft.query
 
 import graft.{Hit, IndexBlock}
 import graft.index.Codec
+import graft.sync.Tables
 
 /** Block-max WAND top-k evaluation (north rule "block-max WAND top-k
   * scoring"; public algorithm: Broder et al. 2003 WAND; Ding & Suel 2011
@@ -74,7 +75,7 @@ object Wand extends Serializable {
     skipDead()
 
     private def isDead(id: Long): Boolean =
-      dead.nonEmpty && dead.get(id).exists(before => blocks(bi).batch_id < before)
+      Tables.isDead(dead, id, blocks(bi).batch_id)
 
     private def skipDead(): Unit = {
       while (!exhausted && isDead(curDoc)) {
@@ -360,9 +361,7 @@ object Wand extends Serializable {
         val dls = Codec.decodeInts(b.dlsVB, b.count)
         var i = 0
         while (i < b.count) {
-          val live = dead.isEmpty ||
-            !dead.get(ids(i)).exists(before => b.batch_id < before)
-          if (live) {
+          if (!Tables.isDead(dead, ids(i), b.batch_id)) {
             val s = Bm25.termScore(theIdf, tfs(i), dls(i), avgdl)
             val prev = acc.get(ids(i))
             acc.put(ids(i), (if (prev == null) 0.0 else prev.doubleValue()) + s)

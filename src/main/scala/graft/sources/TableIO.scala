@@ -173,8 +173,8 @@ class TableIO(val spark: SparkSession, val root: String) extends Serializable {
   }
 
   /** Drop all but the newest `keep` version directories (batchIds sort
-    * chronologically), then delete segment directories no surviving
-    * manifest references. keep >= 2 leaves the previous version for
+    * chronologically), then delete the segment, dict-link and
+    * tombstone-link directories no surviving manifest references. keep >= 2 leaves the previous version for
     * readers that resolved `current` just before a publish — the
     * snapshot-GC discipline Iceberg's expire_snapshots provides in
     * production. Reference analog: processed batch files are deleted
@@ -193,43 +193,19 @@ class TableIO(val spark: SparkSession, val root: String) extends Serializable {
       .filter(v => exists(s"${versionDir(v)}/manifest"))
       .sorted
     versions.dropRight(keep).foreach(v => deleteDir(versionDir(v)))
-    val kept = versions.takeRight(keep)
-    val manifests = kept.map(manifest)
-    val referenced = manifests.flatMap(_.segments).toSet
-    // segments newer than the newest PUBLISHED version belong to an
-    // in-flight batch that already adopted its staged dirs by rename —
-    // deleting them would make that batch's resume fail forever in
+    val manifests = versions.takeRight(keep).map(manifest)
+    // segments, dict links and tombstone links share one discipline: keep
+    // what a kept manifest references plus anything newer than the newest
+    // published version — an in-flight batch that already adopted its
+    // staged dirs by rename, whose resume would otherwise fail forever in
     // moveDir (neither src nor dst would exist)
     val newestPublished = versions.lastOption.getOrElse("")
-    val segRoot = new Path(s"$root/segments")
-    if (fs.exists(segRoot))
-      fs.listStatus(segRoot).toSeq
-        .filter(_.isDirectory)
-        .map(_.getPath.getName)
-        .filterNot(referenced)
-        .filterNot(_ > newestPublished)
-        .foreach(s => deleteDir(segmentDir(s)))
-    // dict and tombstone chain links share the segment GC discipline:
-    // keep what a kept manifest references plus anything newer than the
-    // newest published version (an in-flight batch's link)
-    val refDict = manifests.flatMap(_.dictChain).toSet
-    val dictRoot = new Path(s"$root/dict")
-    if (fs.exists(dictRoot))
-      fs.listStatus(dictRoot).toSeq
-        .filter(_.isDirectory)
-        .map(_.getPath.getName)
-        .filterNot(refDict)
-        .filterNot(_ > newestPublished)
-        .foreach(d => deleteDir(dictDir(d)))
-    val refTombs = manifests.flatMap(_.tombChain).toSet
-    val tombsRoot = new Path(s"$root/tombs")
-    if (fs.exists(tombsRoot))
-      fs.listStatus(tombsRoot).toSeq
-        .filter(_.isDirectory)
-        .map(_.getPath.getName)
-        .filterNot(refTombs)
-        .filterNot(_ > newestPublished)
-        .foreach(t => deleteDir(tombsDir(t)))
+    Seq[(String, TableIO.Manifest => Seq[String])](("segments", _.segments),
+        ("dict", _.dictChain), ("tombs", _.tombChain)).foreach { case (dir, refs) =>
+      val referenced = manifests.flatMap(refs).toSet
+      listDirNames(s"$root/$dir").filterNot(referenced).filterNot(_ > newestPublished)
+        .foreach(id => deleteDir(s"$root/$dir/$id"))
+    }
   }
 
   /** Single-flight job guard (reference: areAnyJobsFromSourceRunning,

@@ -4,7 +4,6 @@ import java.sql.Timestamp
 import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.PageRow
-import graft.index.SegmentBuilder
 import graft.sources.TableIO
 
 /** Reconcile — find rows the index missed or holds stale, and re-index
@@ -51,7 +50,6 @@ object ReconcileJob {
                         pages: Dataset[PageRow], batchId: String,
                         resource: String, t0: Long): Result = {
     import spark.implicits._
-    val analyzedDir = io.stagingDir(batchId, "analyzed")
     if (!cp.isDone(batchId, Process, resource, "analyze")) {
       val current = Tables.loadCurrent(spark, io)
       // key+timestamp scans on both sides (S3 column pruning)
@@ -65,15 +63,12 @@ object ReconcileJob {
         .where($"indexed_ts".isNull || !($"warc_ts" <=> $"indexed_ts"))
         .select($"url")
       // S4/J4: fetch full records for the id list via semi join; a
-      // source scan can hold the same url twice (re-crawl) — collapse
-      // to the newest before indexing, like the sync path
-      val toIndex = SyncJob.latestPerUrl(
-        pages.join(missingOrChanged, Seq("url"), "left_semi").as[PageRow])
-      // reconcile deltas are usually small (the drift set) — adaptive width
-      Tables.writeFwdAdaptive(spark, SegmentBuilder.analyze(toIndex).toDF(),
-        analyzedDir)
-      SyncJob.stagePosDelta(spark, io, batchId, toIndex)
-      cp.markDone(batchId, Process, resource, "analyze")
+      // source scan can hold the same url twice (re-crawl) — the shared
+      // analyze step collapses it to the newest, like the sync path.
+      // Reconcile deltas are usually small (the drift set): adaptive width
+      SyncJob.stageAnalyzed(spark, io, cp, batchId, Process, resource,
+        pages.join(missingOrChanged, Seq("url"), "left_semi").as[PageRow],
+        None, initial = false)
     }
 
     val r = SyncJob.runFromAnalyzed(spark, io, cp, batchId, Process,

@@ -100,36 +100,13 @@ object SyncJob {
     import spark.implicits._
 
     // ---- analyze ----------------------------------------------------
-    val analyzedDir = io.stagingDir(batchId, "analyzed")
     if (!cp.isDone(batchId, Process, resource, "analyze")) timed(batchId, "analyze") {
       // closed interval (lo, batchTs]; `>=` when starting from epoch-0
       val lo = timed(batchId, "analyze.watermark") { primaryLo(spark, io) }
       val pred = Watermark.predicate(
         Map("warc_ts" -> lo), batchTs, Seq("warc_ts"))
-      val delta = latestPerUrl(pages.filter(pred))
-      // fwd is the adopted analyzed output: write it bucketed by docId so
-      // later update batches open only their affected buckets. Width per
-      // segment: explicit hint > initial build (corpus-scale by
-      // assumption, configured ceiling in one pass) > incremental delta
-      // (adaptive — measured during a flat write, rewritten bucketed only
-      // when large; a 256-dir write costs seconds regardless of rows)
-      timed(batchId, "analyze.writeFwd") {
-        fwdBits match {
-          case Some(b) =>
-            Tables.writeFwd(SegmentBuilder.analyze(delta).toDF(),
-              analyzedDir, b)
-          case None if lo == Epoch0 && !fwdAdaptive =>
-            // corpus-scale initial build: dedup + bucket clustering in
-            // ONE exchange (fb is a function of url) — see
-            // writeFwdFusedInitial
-            Tables.writeFwdFusedInitial(pages.filter(pred), analyzedDir)
-          case None =>
-            Tables.writeFwdAdaptive(spark,
-              SegmentBuilder.analyze(delta).toDF(), analyzedDir)
-        }
-      }
-      stagePosDelta(spark, io, batchId, delta)
-      cp.markDone(batchId, Process, resource, "analyze")
+      stageAnalyzed(spark, io, cp, batchId, Process, resource, pages.filter(pred),
+        fwdBits, initial = lo == Epoch0 && !fwdAdaptive)
     }
 
     runFromAnalyzed(spark, io, cp, batchId, Process, resource, t0, dryRun)
@@ -233,21 +210,14 @@ object SyncJob {
 
   /** The primary watermark: max indexed warc_ts over live docs. Reads
     * only the manifest + the docs tables' warc_ts column (and tombstones
-    * when any exist) — the former Tables.loadCurrent here also paid the
-    * version's stats head() job and dict-chain planning that the
-    * watermark never uses, one wasted job per sync batch.
+    * when any exist): the version handle reads its stats and dict chain
+    * only when asked.
     */
   private def primaryLo(spark: SparkSession, io: TableIO): Timestamp = {
     import spark.implicits._
-    io.currentVersion().map { v =>
-      val m = io.manifest(v)
-      val docs = spark.read.schema(Tables.DocSchema)
-        .parquet(m.segments.map(s => s"${io.segmentDir(s)}/docs"): _*)
-        .as[graft.DocRow]
-      val live = Tables.liveDocs(docs,
-        Tables.tombstonesView(spark, io, m.tombChain), m.tombstones)
-      live.agg(max($"warc_ts")).head()
-    }.flatMap(r => Option(r.getTimestamp(0))).getOrElse(Epoch0)
+    Tables.loadCurrent(spark, io)
+      .flatMap(t => Option(t.docs.agg(max($"warc_ts")).head().getTimestamp(0)))
+      .getOrElse(Epoch0)
   }
 
   /** Sync from a raw frame carrying EXTRA nullable update-timestamp
@@ -292,7 +262,6 @@ object SyncJob {
 
     val release = io.acquireLock(s"sync:$batchId")
     try Metrics.withBudget(spark, io, batchId, Process, t0) {
-      val analyzedDir = io.stagingDir(batchId, "analyzed")
       if (!cp.isDone(batchId, Process, resource, "analyze")) timed(batchId, "analyze") {
         val primary = primaryLo(spark, io)
         val los = Watermark.read(io) + ("warc_ts" -> primary)
@@ -311,12 +280,9 @@ object SyncJob {
               maxes.map { case (c, t) => s"$c=${t.getTime}" }.mkString("\n"))
         }
         val pageCols = Seq("url", "warc_ts", "html", "text", "lang")
-        val deltaPages = delta.select(pageCols.map(col): _*).as[PageRow]
-        val analyzedDf = SegmentBuilder.analyze(deltaPages).toDF()
-        if (primary == Epoch0) Tables.writeFwd(analyzedDf, analyzedDir)
-        else Tables.writeFwdAdaptive(spark, analyzedDf, analyzedDir)
-        stagePosDelta(spark, io, batchId, deltaPages)
-        cp.markDone(batchId, Process, resource, "analyze")
+        stageAnalyzed(spark, io, cp, batchId, Process, resource,
+          delta.select(pageCols.map(col): _*).as[PageRow], None,
+          initial = primary == Epoch0)
       }
       val r = runFromAnalyzed(spark, io, cp, batchId, Process, resource, t0)
       // promote the secondary watermarks after publish (idempotent max
@@ -326,15 +292,45 @@ object SyncJob {
     } finally release()
   }
 
+  /** The analyze stage's step shared by sync, multi-timestamp sync and
+    * reconcile: in-batch last-write-wins ([[latestPerUrl]]), analyze, the
+    * staged fwd write, the positional delta, and the stage's done flag.
+    * fwd is the adopted analyzed output, written bucketed by docId so
+    * later update batches open only their affected buckets. Its width:
+    * an explicit hint, else the configured ceiling for a corpus-scale
+    * `initial` build (dedup and bucket clustering in ONE exchange — fb is
+    * a function of url, see [[Tables.writeFwdFusedInitial]]), else
+    * adapted to the delta's measured size (a 256-dir write costs seconds
+    * regardless of rows).
+    */
+  private[sync] def stageAnalyzed(spark: SparkSession, io: TableIO, cp: Checkpoint,
+                                  batchId: String, process: String, resource: String,
+                                  pages: Dataset[PageRow], fwdBits: Option[Int],
+                                  initial: Boolean): Unit = {
+    val analyzedDir = io.stagingDir(batchId, "analyzed")
+    val delta = latestPerUrl(pages)
+    timed(batchId, "analyze.writeFwd") {
+      fwdBits match {
+        case Some(b) =>
+          Tables.writeFwd(SegmentBuilder.analyze(delta).toDF(), analyzedDir, b)
+        case None if initial => Tables.writeFwdFusedInitial(pages, analyzedDir)
+        case None =>
+          Tables.writeFwdAdaptive(spark, SegmentBuilder.analyze(delta).toDF(), analyzedDir)
+      }
+    }
+    stagePosDelta(spark, io, batchId, delta)
+    cp.markDone(batchId, process, resource, "analyze")
+  }
+
   /** While a maintained posindex exists (root/posindex/base, built by
     * index-pos), every sync delta also stages its positional blocks; the
     * merge stage adopts them as posindex/delta/<batchId>. Purges and
     * compactions need NO posindex writes — phrase liveness verifies
     * matches against the live docs table (Phrase.topKLive).
     */
-  private[sync] def stagePosDelta(spark: SparkSession, io: TableIO,
-                                  batchId: String,
-                                  delta: Dataset[PageRow]): Unit = {
+  private def stagePosDelta(spark: SparkSession, io: TableIO,
+                            batchId: String,
+                            delta: Dataset[PageRow]): Unit = {
     // a fold swap that crashed between its two renames leaves base.next
     // or base.trash instead of base — the posindex still EXISTS (the
     // publish stage heals it), so interim batches must keep staging
@@ -462,7 +458,8 @@ object SyncJob {
           // every compactThreshold batches (or at high tombstone ratio):
           // fold segments into one — amortized O(index/threshold) merge
           // I/O per batch
-          Tables.compactVersion(spark, io, o, batchId, Some(st), purgedDs)
+          Tables.compactVersion(spark, io, o, batchId, Some(st), purgedDs,
+            purgedEmpty = purged.isEmpty)
         case Some(o) =>
           // steady state: O(delta) segment append + tombstones
           Tables.appendVersion(spark, io, o, batchId, Some(st), purgedDs,
@@ -536,8 +533,7 @@ object SyncJob {
       val millis = System.currentTimeMillis() - t0
       // lineage rides on the batch's own segment — O(delta), the rest of
       // the index is untouched by this batch
-      val blocks = spark.read.schema(Tables.BlockSchema)
-        .parquet(s"${io.segmentDir(batchId)}/index").as[graft.IndexBlock]
+      val blocks = Tables.readBlocks(spark, Seq(s"${io.segmentDir(batchId)}/index"))
       val p = spark.sessionState.conf.numShufflePartitions
       Metrics.append(io,
         Metrics.segmentMetrics(spark, blocks, batchId, process, p, millis)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.functions._
 import graft.{CorpusStats, DictRow, DocRow, IndexBlock, Posting, Tombstone}
-import graft.index.{IndexTables, Merge, SegmentBuilder}
+import graft.index.{Merge, SegmentBuilder}
 import graft.sources.TableIO
 
 /** LSM version management: a published version is a *manifest* of
@@ -36,6 +36,10 @@ import graft.sources.TableIO
   * for pure-append batches (narrow docId pre-check) and restricted to
   * the affected docId buckets otherwise (fwd is written partitioned by
   * `fb=hash-bucket(docId)`); writes stay O(delta).
+  *
+  * Every reader and writer opens a version through one handle ([[load]]
+  * → [[IndexTables]]) and applies one liveness rule: [[isDead]] per row,
+  * [[IndexTables.live]] over a frame.
   */
 object Tables {
 
@@ -121,13 +125,21 @@ object Tables {
   private[graft] val FwdSchema: org.apache.spark.sql.types.StructType =
     org.apache.spark.sql.Encoders.product[graft.index.AnalyzedPage].schema
 
-  /** Static docs/index schemas: no footer-inference pass on the hot
-    * read paths (watermark probe, publish metrics).
+  /** Docs and index dirs are read with their static schemas: no
+    * footer-inference job on any read path.
     */
-  private[graft] val DocSchema: org.apache.spark.sql.types.StructType =
+  private val DocSchema: org.apache.spark.sql.types.StructType =
     org.apache.spark.sql.Encoders.product[DocRow].schema
-  private[graft] val BlockSchema: org.apache.spark.sql.types.StructType =
+  private val BlockSchema: org.apache.spark.sql.types.StructType =
     org.apache.spark.sql.Encoders.product[IndexBlock].schema
+  private[graft] def readDocs(spark: SparkSession, paths: Seq[String]): Dataset[DocRow] = {
+    import spark.implicits._
+    spark.read.schema(DocSchema).parquet(paths: _*).as[DocRow]
+  }
+  private[graft] def readBlocks(spark: SparkSession, paths: Seq[String]): Dataset[IndexBlock] = {
+    import spark.implicits._
+    spark.read.schema(BlockSchema).parquet(paths: _*).as[IndexBlock]
+  }
 
   /** Shuffle width for a delta's posting build, derived from the staged
     * fwd dir's BYTE size (driver-side FS metadata — free and available
@@ -411,18 +423,11 @@ object Tables {
 
   private val TombEncoder = ExpressionEncoder[Tombstone]().resolveAndBind()
 
-  def load(spark: SparkSession, io: TableIO, version: String): IndexTables = {
-    import spark.implicits._
-    val m = io.manifest(version)
-    val docsRaw = spark.read.schema(DocSchema)
-      .parquet(m.segments.map(s => s"${io.segmentDir(s)}/docs"): _*).as[DocRow]
-    val index = spark.read.schema(BlockSchema)
-      .parquet(m.segments.map(s => s"${io.segmentDir(s)}/index"): _*).as[IndexBlock]
-    val tombs = tombstonesView(spark, io, m.tombChain)
-    IndexTables(version, m.segments, liveDocs(docsRaw, tombs, m.tombstones),
-      index, tombs, m.tombstones, dictView(spark, io, m.dictChain).as[DictRow],
-      io.readStats(version), m.dictChain, m.bucketBits, m.tombChain)
-  }
+  /** The one handle on a published version: its manifest is read here,
+    * everything else on first use.
+    */
+  def load(spark: SparkSession, io: TableIO, version: String): IndexTables =
+    new IndexTables(spark, io, version, io.manifest(version))
 
   /** New batches must bucket postings exactly like the index they join —
     * a silent width mismatch would interleave foreign docId ranges inside
@@ -439,23 +444,38 @@ object Tables {
   def loadCurrent(spark: SparkSession, io: TableIO): Option[IndexTables] =
     io.currentVersion().map(v => load(spark, io, v))
 
-  /** Tombstone-filtered view: a doc row written by batch b is live unless
-    * a tombstone (docId, before) with b < before exists. No-op (and no
-    * join) when the version has no tombstones.
+  /** The liveness rule, per row: a row written by batch `batch` is dead
+    * when its docId's tombstone has `batch < before` ([[graft.Tombstone]]).
+    * [[IndexTables.live]] is the same rule over a frame.
     */
-  def liveDocs(docsRaw: Dataset[DocRow], tombs: Dataset[Tombstone],
-               tombCount: Long): Dataset[DocRow] = {
-    if (tombCount == 0) docsRaw
-    else {
-      val spark = docsRaw.sparkSession
-      import spark.implicits._
-      val t = tombs.toDF("t_docId", "t_before")
-      docsRaw.join(maybeBroadcast(t, tombCount),
-          docsRaw("docId") === col("t_docId") &&
-            docsRaw("batch_id") < col("t_before"), "left_anti")
-        .as[DocRow]
-    }
+  def isDead(dead: Map[Long, String], docId: Long, batch: String): Boolean =
+    dead.nonEmpty && dead.get(docId).exists(before => batch < before)
+
+  /** Per-term df, cf and the files holding the term's blocks, over index
+    * dirs: block metadata columns only, never a decode.
+    */
+  private def termStats(spark: SparkSession, paths: Seq[String]): DataFrame = {
+    import spark.implicits._
+    readBlocks(spark, paths)
+      .withColumn("f", input_file_name()) // project first: agg args must be deterministic
+      .groupBy($"term").agg(sum($"count").as("df"), sum($"tfSum").as("cf"),
+        collect_set($"f").as("files"))
   }
+
+  /** The docIds a batch re-writes or purges (the delta's ∪ the purged),
+    * persisted, and their count, so every join against them size-adapts
+    * ([[maybeBroadcast]]): O(batch) rows, but a backfill-scale batch must
+    * not be forced through the driver. A purge-free batch's set IS the
+    * delta's (docIds are unique within a segment — checkCollisions),
+    * sized by the segment stage: neither a distinct nor a count job.
+    */
+  private def affectedIds(deltaIds: DataFrame, deltaN: Long, purged: Dataset[Long],
+                          purgedEmpty: Boolean): (DataFrame, Long) =
+    if (purgedEmpty) (deltaIds.persist(), deltaN)
+    else {
+      val a = deltaIds.union(purged.toDF("docId")).distinct().persist()
+      (a, a.count())
+    }
 
   /** Forward tables (analyzed pages) of the given segments, with the
     * owning segment id attached (fwd rows carry no batch column; a row
@@ -507,16 +527,11 @@ object Tables {
                       segments: Seq[String],
                       knownStats: Option[(Long, Long)] = None): Unit = {
     import spark.implicits._
-    val idx = spark.read.schema(BlockSchema)
-      .parquet(segments.map(s => s"${io.segmentDir(s)}/index"): _*)
-      .withColumn("f", input_file_name()) // project first: agg args must be deterministic
-    io.writeParquet(
-      idx.groupBy($"term").agg(sum($"count").as("df"), sum($"tfSum").as("cf"),
-        collect_set($"f").as("files")).sortWithinPartitions($"term"),
+    val paths = segments.map(io.segmentDir)
+    io.writeParquet(termStats(spark, paths.map(_ + "/index")).sortWithinPartitions($"term"),
       io.dictDir(ver))
     val (n, sumDl) = knownStats.getOrElse {
-      val row = spark.read.schema(DocSchema)
-        .parquet(segments.map(s => s"${io.segmentDir(s)}/docs"): _*)
+      val row = readDocs(spark, paths.map(_ + "/docs"))
         .agg(count(lit(1)), sum($"doclen")).head()
       val n0 = row.getLong(0)
       (n0, if (row.isNullAt(1)) 0L else row.getLong(1))
@@ -573,25 +588,15 @@ object Tables {
     def sub[A](stage: String)(f: => A): A =
       SyncJob.timed(batchId, s"merge.$stage")(f)
 
+    lazy val deltaDocs = readDocs(spark, Seq(s"$seg/docs"))
     val deltaIds: DataFrame =
-      if (hasDelta) io.readParquet(s"$seg/docs").select($"docId")
+      if (hasDelta) deltaDocs.select($"docId")
       else spark.emptyDataset[Long].toDF("docId")
 
     // the delta's doc count + doclen sum, from the segment stage
     val (deltaN, deltaDl) = staged.fold((0L, 0L))(st => (st.rows, st.dlSum))
-
-    // affected ids are O(batch): usually broadcastable, but a backfill-
-    // scale update/purge batch must not be forced through the driver —
-    // every join below size-adapts on the counted set. Delta docIds are
-    // unique within a segment (checkCollisions), so the purge-free
-    // steady-state batch needs neither the distinct nor the count job:
-    // affected IS the delta id set, sized deltaN.
-    val affected =
-      (if (purgedEmpty) deltaIds
-       else deltaIds.union(purged.toDF("docId")).distinct()).persist()
-    val affectedCount =
-      if (purgedEmpty) deltaN
-      else sub("affectedCount") { affected.count() }
+    val (affected, affectedCount) = sub("affectedCount") {
+      affectedIds(deltaIds, deltaN, purged, purgedEmpty) }
 
     // killed = previously-live rows of affected docIds: their term stats
     // leave the dict, their doclen leaves the corpus stats. A narrow
@@ -601,7 +606,6 @@ object Tables {
     // affected buckets' docId bytes; an update batch then opens the same
     // buckets' heavy tfs column — both reads O(affected-buckets), never
     // O(corpus).
-    val tombsDf = old.tombstones.toDF("t_docId", "t_before")
     val nExisting = sub("existingCheck") {
       existingAffected(spark, io, old.segments, affected, affectedCount)
         .count() }
@@ -609,14 +613,12 @@ object Tables {
       if (nExisting == 0)
         spark.emptyDataset[(Long, String, Int, Map[String, Int])]
           .toDF("docId", "url", "doclen", "tfs")
-      else {
-        readFwdPruned(spark, io, old.segments, affected, affectedCount)
+      else
+        old.live(readFwdPruned(spark, io, old.segments, affected, affectedCount)
           .select($"docId", $"url", $"doclen", $"tfs", $"seg")
-          .join(maybeBroadcast(affected, affectedCount), Seq("docId"))
-          .join(maybeBroadcast(tombsDf, old.tombstoneCount),
-            $"docId" === $"t_docId" && $"seg" < $"t_before", "left_anti")
+          .join(maybeBroadcast(affected, affectedCount), Seq("docId")), "seg")
           .select($"docId", $"url", $"doclen", $"tfs")
-      }).persist()
+      ).persist()
     try {
       // killed stats + the cross-batch xxhash64 collision check in ONE
       // job: a delta url landing on a previously indexed docId must be
@@ -633,8 +635,8 @@ object Tables {
         else {
           val kWithNew =
             if (hasDelta)
-              killed.join(maybeBroadcast(io.readParquet(s"$seg/docs")
-                  .select($"docId", $"url".as("new_url")), deltaN),
+              killed.join(maybeBroadcast(
+                  deltaDocs.select($"docId", $"url".as("new_url")), deltaN),
                 Seq("docId"), "left")
             else killed.withColumn("new_url", lit(null).cast("string"))
           val kr = sub("killedStats") {
@@ -656,28 +658,18 @@ object Tables {
       // postings stay physically inside old files until compaction, so
       // the old pointers remain correct (a superset is fine for pruning).
       val dictAdd =
-        if (!hasDelta)
-          spark.emptyDataset[(String, Long, Long)]
-            .toDF("term", "addDf", "addCf")
-            .withColumn("addFiles", typedLit(Seq.empty[String]))
-        else io.readParquet(s"$seg/index")
-          .withColumn("f", input_file_name())
-          .groupBy($"term")
-          .agg(sum($"count").as("addDf"), sum($"tfSum").as("addCf"),
-            collect_set($"f").as("addFiles"))
+        if (hasDelta) termStats(spark, Seq(s"$seg/index"))
+        else spark.emptyDataset[DictRow].toDF()
       val dictSub = killed
         .select(explode($"tfs").as(Seq("term", "tf")))
         .groupBy($"term")
         .agg(count(lit(1)).as("subDf"), sum($"tf").as("subCf"))
-      val emptyArr = typedLit(Seq.empty[String])
       val dictDelta = dictAdd
         .join(dictSub, Seq("term"), "full_outer")
         .select($"term",
-          (coalesce($"addDf", lit(0L)) - coalesce($"subDf", lit(0L)))
-            .as("df"),
-          (coalesce($"addCf", lit(0L)) - coalesce($"subCf", lit(0L)))
-            .as("cf"),
-          coalesce($"addFiles", emptyArr).as("files"))
+          (coalesce($"df", lit(0L)) - coalesce($"subDf", lit(0L))).as("df"),
+          (coalesce($"cf", lit(0L)) - coalesce($"subCf", lit(0L))).as("cf"),
+          coalesce($"files", typedLit(Seq.empty[String])).as("files"))
         .filter($"df" =!= 0 || $"cf" =!= 0 || size($"files") > 0)
         .sortWithinPartitions($"term")
       sub("dictWrite") {
@@ -755,103 +747,58 @@ object Tables {
   def compactVersion(spark: SparkSession, io: TableIO, old: IndexTables,
                      batchId: String,
                      staged: Option[Staged],
-                     purged: Dataset[Long]): Unit = {
+                     purged: Dataset[Long],
+                     purgedEmpty: Boolean = false): Unit = {
     import spark.implicits._
     checkBucketBits(old)
-    val baseSeg = old.segments.head
-    val tailSegs = old.segments.tail
-    val baseDocs = io.readParquet(s"${io.segmentDir(baseSeg)}/docs").as[DocRow]
-    val baseIndex =
-      io.readParquet(s"${io.segmentDir(baseSeg)}/index").as[IndexBlock]
-
-    // size-adaptive dead-check: a small tombstone set rides along as a
-    // broadcast Map (O(1) probe inside the decode loop, no extra
-    // shuffle); a large one never touches the driver — the decode
-    // attaches the owning batch and a distributed anti-join drops the
-    // dead postings
-    val useDeadMap = old.tombstoneCount <= deadBroadcastMax
-    val dead: Map[Long, String] =
-      if (!useDeadMap) Map.empty
-      else old.tombstones.collect().map(t => t.docId -> t.before).toMap
-    val bDead = spark.sparkContext.broadcast(dead)
-
-    def liveTailPostings: Dataset[Posting] =
-      if (tailSegs.isEmpty) spark.emptyDataset[Posting]
-      else {
-        val blocks = spark.read
-          .parquet(tailSegs.map(s => s"${io.segmentDir(s)}/index"): _*)
-          .as[IndexBlock]
-        if (useDeadMap)
-          blocks.flatMap { b =>
-            val d = bDead.value
-            SegmentBuilder.decodeBlock(b).filter { p =>
-              d.get(p.docId).forall(before => !(b.batch_id < before))
-            }
-          }
-        else
-          blocks.flatMap { b =>
-              SegmentBuilder.decodeBlock(b)
-                .map(p => (p.term, p.bucket, p.docId, p.tf, p.dl, b.batch_id))
-            }
-            .toDF("term", "bucket", "docId", "tf", "dl", "seg_batch")
-            .join(old.tombstones.toDF("t_docId", "t_before"),
-              $"docId" === $"t_docId" && $"seg_batch" < $"t_before",
-              "left_anti")
-            .select($"term", $"bucket", $"docId", $"tf", $"dl").as[Posting]
-      }
-    def liveTailDocs: Dataset[DocRow] =
-      if (tailSegs.isEmpty) spark.emptyDataset[DocRow]
-      else liveDocs(
-        spark.read.parquet(tailSegs.map(s => s"${io.segmentDir(s)}/docs"): _*)
-          .as[DocRow],
-        old.tombstones, old.tombstoneCount)
+    def paths(segs: Seq[String], sub: String) = segs.map(s => s"${io.segmentDir(s)}/$sub")
+    val (base, tail) = (old.segments.take(1), old.segments.tail)
 
     val (stagedDocs, stagedPostings, stagedFwd) = staged match {
       case Some(st) =>
-        (io.readParquet(st.docsDir).as[DocRow],
-          io.readParquet(st.blocksDir).as[IndexBlock]
-            .flatMap(SegmentBuilder.decodeBlock _),
+        (readDocs(spark, Seq(st.docsDir)),
+          readBlocks(spark, Seq(st.blocksDir)).flatMap(SegmentBuilder.decodeBlock _),
           Some(readFwdDir(spark, st.analyzedDir).drop("fb")))
       case None =>
         (spark.emptyDataset[DocRow], spark.emptyDataset[Posting], None)
     }
     // overridden = docIds the staged delta re-writes or this batch purges:
     // their tail-segment occurrences must not ride along (no tombstone is
-    // written for them — compaction removes the rows physically). O(batch)
-    // rows, but a backfill-scale batch must not blow the driver: counted
-    // once, then size-adapted at every join.
-    val overridden = stagedDocs.select($"docId")
-      .union(purged.toDF("docId")).distinct().persist()
-    val overriddenCount = overridden.count()
-    val deltaDocs = liveTailDocs
-      .join(maybeBroadcast(overridden, overriddenCount), Seq("docId"),
-        "left_anti").as[DocRow]
-      .unionByName(stagedDocs)
-    val deltaPostings = liveTailPostings
-      .join(maybeBroadcast(overridden, overriddenCount), Seq("docId"),
-        "left_anti").as[Posting]
-      .unionByName(stagedPostings)
+    // written for them — compaction removes the rows physically)
+    val (overridden, overriddenCount) = affectedIds(stagedDocs.select($"docId"),
+      staged.fold(0L)(_.rows), purged, purgedEmpty)
+    // rows that survive the fold: live (the tombstone anti-join) and not
+    // overridden
+    def survivors(rows: DataFrame, batch: String): DataFrame =
+      old.live(rows, batch)
+        .join(maybeBroadcast(overridden, overriddenCount), Seq("docId"), "left_anti")
+    val deltaDocs =
+      (if (tail.isEmpty) spark.emptyDataset[DocRow]
+       else survivors(readDocs(spark, paths(tail, "docs")).toDF(), "batch_id").as[DocRow])
+        .unionByName(stagedDocs)
+    // a decoded posting carries its block's batch, the tombstone comparand
+    val deltaPostings =
+      (if (tail.isEmpty) spark.emptyDataset[Posting]
+       else survivors(readBlocks(spark, paths(tail, "index")).flatMap { b =>
+           SegmentBuilder.decodeBlock(b)
+             .map(p => (p.term, p.bucket, p.docId, p.tf, p.dl, b.batch_id))
+         }.toDF("term", "bucket", "docId", "tf", "dl", "batch_id"), "batch_id")
+         .drop("batch_id").as[Posting])
+        .unionByName(stagedPostings)
     val purgedAll = purged
       .union(old.tombstones.map(_.docId)).distinct()
 
-    val merged = Merge.merge(spark, Some((baseDocs, baseIndex)),
-      deltaDocs, deltaPostings, purgedAll, batchId)
+    val merged = Merge.merge(spark, readDocs(spark, paths(base, "docs")),
+      readBlocks(spark, paths(base, "index")), deltaDocs, deltaPostings, purgedAll, batchId)
     val seg = io.segmentDir(batchId)
     io.writeParquet(merged.docs.sortWithinPartitions($"docId").toDF(), s"$seg/docs")
     // whole-index xxhash64 collision re-check rides on each compaction
-    SegmentBuilder.checkCollisions(io.readParquet(s"$seg/docs"))
+    SegmentBuilder.checkCollisions(readDocs(spark, Seq(s"$seg/docs")).toDF())
     io.writeParquet(merged.index.toDF(), s"$seg/index")
 
-    // fwd of the compacted segment: tombstone-live old fwd rows minus the
-    // overridden set, plus the staged delta's fwd — the exact mirror of
-    // the docs merge
-    val tombsDf = old.tombstones.toDF("t_docId", "t_before")
-    val oldFwdLive = readFwd(spark, io, old.segments)
-      .join(maybeBroadcast(tombsDf, old.tombstoneCount),
-        $"docId" === $"t_docId" && $"seg" < $"t_before", "left_anti")
-      .join(maybeBroadcast(overridden, overriddenCount), Seq("docId"),
-        "left_anti")
-      .drop("seg")
+    // fwd of the compacted segment: live, not overridden old fwd rows plus
+    // the staged delta's fwd — the exact mirror of the docs merge
+    val oldFwdLive = survivors(readFwd(spark, io, old.segments), "seg").drop("seg")
     val fwdNew = stagedFwd match {
       case Some(f) => oldFwdLive.unionByName(f)
       case None => oldFwdLive
@@ -862,4 +809,63 @@ object Tables {
     deriveDictStats(spark, io, batchId, Seq(batchId))
     overridden.unpersist()
   }
+}
+
+/** The one handle on a published version ([[Tables.load]]): its manifest
+  * (segments oldest first, the tombstone count and chain, the dict chain,
+  * the bucket width) and the views of it that readers and writers share.
+  * Only the manifest is read at load; the stats, the tombstone views and
+  * the live docs are read on first use, so a caller that needs one of
+  * them pays for that one.
+  */
+final class IndexTables private[sync] (spark: SparkSession, io: TableIO,
+                                       val version: String, m: TableIO.Manifest) {
+  import spark.implicits._
+
+  val segments: Seq[String] = m.segments
+  val tombstoneCount: Long = m.tombstones
+  val dictChain: Seq[String] = m.dictChain
+  val tombChain: Seq[String] = m.tombChain
+
+  /** The docId bucket width this index was BUILT at (never runtime config:
+    * blocks carry these bucket values, and every read-side bucket
+    * computation must agree with them).
+    */
+  val bucketBits: Int = m.bucketBits
+
+  lazy val stats: CorpusStats = io.readStats(version)
+
+  def segPaths(sub: String): Seq[String] = segments.map(s => s"${io.segmentDir(s)}/$sub")
+
+  /** The folded tombstone set ([[Tables.tombstonesView]]). */
+  lazy val tombstones: Dataset[Tombstone] = Tables.tombstonesView(spark, io, tombChain)
+
+  /** True when the tombstone set is too large to hold on the driver:
+    * every dead check then runs distributed and the set is never
+    * collected. Below the threshold the set is bounded anyway: compaction
+    * is forced at max(n/5, graft.tombstones.max) rows.
+    */
+  val deadDistributed: Boolean = tombstoneCount > Tables.deadBroadcastMax
+
+  /** The tombstone set folded on the driver (docId → before) when small
+    * enough to broadcast, else empty — production analog: per-segment
+    * bitmaps, Lucene's liveDocs.
+    */
+  lazy val dead: Map[Long, String] =
+    if (tombstoneCount == 0 || deadDistributed) Map.empty
+    else Tables.tombstonesLocal(io, tombChain)
+
+  /** The rows of `rows` the tombstones leave live, where column `batch`
+    * holds the batch that wrote each row: [[Tables.isDead]]'s rule as an
+    * anti-join, broadcast when the set is small ([[Tables.maybeBroadcast]]),
+    * no join when it is empty.
+    */
+  def live(rows: DataFrame, batch: String): DataFrame =
+    if (tombstoneCount == 0) rows
+    else rows.join(Tables.maybeBroadcast(tombstones.toDF("t_docId", "t_before"), tombstoneCount),
+      col("docId") === col("t_docId") && col(batch) < col("t_before"), "left_anti")
+
+  /** Live doc rows. */
+  lazy val docs: Dataset[DocRow] =
+    live(Tables.readDocs(spark, segPaths("docs")).toDF(), "batch_id").as[DocRow]
 }

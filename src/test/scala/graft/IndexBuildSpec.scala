@@ -2,8 +2,10 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.corpus.Corpus
-import graft.index.{DocIds, Merge, SegmentBuilder}
+import graft.index.{DocIds, SegmentBuilder}
 import graft.oracle.NaiveIndex
+import graft.sources.TableIO
+import graft.sync.{SyncJob, Tables}
 
 /** Index construction correctness: dict/df/cf vs the naive oracle, block
   * invariants, partition-count invariance (FIXTURES.md §8).
@@ -60,17 +62,23 @@ class IndexBuildSpec extends SparkTestBase {
   }
 
   test("dict df/cf match the oracle") {
-    val m = Merge.fullBuild(spark, SegmentBuilder.toDocs(analyzed.toDF(), "b1"),
-      SegmentBuilder.toPostings(analyzed.toDF()), "b1")
-    val t = Merge.derive(spark, m.docs, m.index)
-    val dict = t.dict.collect().map(d => d.term -> ((d.df, d.cf))).toMap
+    // the dict the production path writes: a sync, then the driver fold
+    val io = new TableIO(spark, tmpDir("graft-dict-oracle"))
+    SyncJob.run(spark, io, pages, new java.sql.Timestamp(Corpus.warcTsMillis(N)))
+    val version = io.currentVersion().get
+    val chain = io.manifest(version).dictChain
+    val dict = Tables.dictLocal(io, chain, oracle.postings.keys.toSeq)
+      .map(d => d.term -> ((d.df, d.cf))).toMap
     assert(dict.size == oracle.postings.size)
+    assert(Tables.dictView(spark, io, chain).count() == oracle.postings.size,
+      "the dict holds terms the oracle does not")
     oracle.postings.keys.foreach { term =>
       assert(dict(term) == ((oracle.df(term), oracle.cf(term))),
         s"df/cf mismatch for $term")
     }
-    assert(t.stats.n == N)
-    assert(t.stats.avgdl == oracle.avgdl)
+    val stats = io.readStats(version)
+    assert(stats.n == N)
+    assert(stats.avgdl == oracle.avgdl)
   }
 
   test("partition-count invariance: 1, 4, 16 partitions give identical blocks") {

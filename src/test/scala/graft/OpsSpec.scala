@@ -20,6 +20,13 @@ class OpsSpec extends SparkTestBase {
 
   private def ts(i: Long) = new Timestamp(Corpus.warcTsMillis(i))
 
+  /** A re-crawl of `p`, `secs` seconds later, whose body is `text`. */
+  private def recrawl(p: PageRow, secs: Long, text: String): PageRow =
+    p.copy(warc_ts = new Timestamp(p.warc_ts.getTime + secs * 1000L),
+      html = (s"<html><head><title>doc ${p.url.split("/").last}</title></head><body><p>" + text +
+        "</p></body></html>").getBytes("UTF-8"),
+      text = text)
+
   test("error budget: 3 recorded failures poison the batch, 4th run refuses") {
     val root = tmpDir("graft-budget")
     val io = new TableIO(spark, root)
@@ -170,6 +177,29 @@ class OpsSpec extends SparkTestBase {
     assert(reader.stats.avgdl == oracle.avgdl)
   }
 
+  test("runMultiTs: two crawls of one url in a window are indexed once, newest wins") {
+    // the initial window (fused dedup) and a later one (adaptive width)
+    // each hold two crawls of one url; both reach their segment as one row
+    val root = tmpDir("graft-multits-dup")
+    val io = new TableIO(spark, root)
+    val base = Corpus.localRows(100)
+    val r1 = SyncJob.runMultiTs(spark, io, spark.createDataset(
+      base :+ recrawl(base(5), 3600, "refreshed multidupa page")).toDF(),
+      Seq("warc_ts"), ts(10000))
+    assert(r1.deltaRows == 100)
+    val r2 = SyncJob.runMultiTs(spark, io, spark.createDataset(Seq(
+      recrawl(base(7), 20000, "older multidupb page"),
+      recrawl(base(7), 20500, "newer multidupc page"))).toDF(),
+      Seq("warc_ts"), ts(30000))
+    assert(r2.deltaRows == 1)
+    val reader = new IndexReader(spark, root)
+    assert(reader.stats.n == 100)
+    def hitsOf(q: String) = reader.topK(q, 5).map(_.docId).toSeq
+    assert(hitsOf("multidupa") == Seq(graft.index.DocIds.docId(Corpus.url(5L))))
+    assert(hitsOf("multidupc") == Seq(graft.index.DocIds.docId(Corpus.url(7L))))
+    assert(hitsOf("multidupb").isEmpty, "the older crawl of one window was indexed")
+  }
+
   test("user endpoint filter (P4) composes before the watermark") {
     val root = tmpDir("graft-p4")
     val io = new TableIO(spark, root)
@@ -207,12 +237,8 @@ class OpsSpec extends SparkTestBase {
     val M = 100
     val base = Corpus.localRows(M)
     // re-crawl of url(5), one hour later, with new content
-    val newText = "refreshed dupwins content for the re crawled page"
-    val dup = base(5).copy(
-      warc_ts = new Timestamp(base(5).warc_ts.getTime + 3600 * 1000L),
-      html = ("<html><head><title>doc 5</title></head><body><p>" +
-        newText + "</p></body></html>").getBytes("UTF-8"),
-      text = newText)
+    val dup = recrawl(base(5), 3600,
+      "refreshed dupwins content for the re crawled page")
     val r = SyncJob.run(spark, io,
       spark.createDataset(base :+ dup), ts(10000))
     assert(r.deltaRows == M, s"expected $M unique docs, got ${r.deltaRows}")
@@ -454,6 +480,12 @@ class OpsSpec extends SparkTestBase {
     io.writeSmallFile(s"${io.segmentDir(crashed)}/docs/part-0.json", "{}")
     // and an old orphan segment no manifest references (safe to GC)
     io.writeSmallFile(s"${io.segmentDir("1970-orphan")}/docs/p.json", "{}")
+    // dict and tombstone chain links follow the segments' discipline: an
+    // in-flight link survives, an old orphan link goes
+    Seq[String => String](io.dictDir, io.tombsDir).foreach { dir =>
+      io.writeSmallFile(s"${dir(crashed)}/part-0.json", "{}")
+      io.writeSmallFile(s"${dir("1970-orphan")}/part-0.json", "{}")
+    }
 
     io.gcVersions() // must not throw on the manifest-less version
     assert(io.exists(io.segmentDir(crashed)),
@@ -462,6 +494,10 @@ class OpsSpec extends SparkTestBase {
       "manifest-less version dir was GC'd")
     assert(!io.exists(io.segmentDir("1970-orphan")),
       "old unreferenced segment should be GC'd")
+    Seq[String => String](io.dictDir, io.tombsDir).foreach { dir =>
+      assert(io.exists(dir(crashed)), s"in-flight link ${dir(crashed)} was GC'd")
+      assert(!io.exists(dir("1970-orphan")), s"orphan link ${dir("1970-orphan")} survived")
+    }
     assert(io.currentVersion().contains(published))
     // the index still reads fine
     assert(new IndexReader(spark, root).stats.n == 120)
