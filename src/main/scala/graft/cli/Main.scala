@@ -6,7 +6,7 @@ import graft.PageRow
 import graft.corpus.Corpus
 import graft.query.IndexReader
 import graft.sources.TableIO
-import graft.sync.{PurgeJob, ReconcileJob, SyncJob}
+import graft.sync.{IndexPosJob, PurgeJob, ReconcileJob, SyncJob}
 
 /** spark-submit entry — command surface mirrors the reference's
   * bin/run-once (bin/run-once:20-43: command + source/flags).
@@ -16,6 +16,8 @@ import graft.sync.{PurgeJob, ReconcileJob, SyncJob}
   * Main purge     --pages <parquet|corpus:N> --root <dir> [--batch-ts <ISO>] [--max-purge N]
   * Main reconcile --pages <parquet|corpus:N> --root <dir> [--batch-ts <ISO>]
   * Main query     --root <dir> --q "<terms>" [--k 10]
+  * Main index-pos --pages <parquet|corpus:N> --root <dir>
+  * Main phrase    --root <dir> --q "<exact phrase>" [--k 10]
   * }}}
   *
   * `--pages corpus:N` generates the deterministic synthetic corpus of N
@@ -69,36 +71,16 @@ object Main {
         println(s"reconcile done: batch=${r.batchId} reindexed=${r.reindexed} " +
           s"millis=${r.millis}")
       case "index-pos" =>
-        // under the single-flight lock: racing a concurrent sync, an
-        // unlocked build could overwrite base + delete a just-adopted
-        // delta the new stamp does not cover (phrase queries would then
-        // refuse until a re-run). currentVersion is read under the lock.
-        val release = io.acquireLock("index-pos")
-        try graft.index.Positional.build(spark,
-          graft.sync.SyncJob.latestPerUrl(pages(spark, opts)),
-          s"$root/posindex", io.currentVersion())
-        finally release()
-        println(s"positional index written: $root/posindex")
+        val v = IndexPosJob.run(spark, io, pages(spark, opts))
+        println(s"positions on: version=$v")
       case "phrase" =>
         val q = opts.getOrElse("q", sys.error("--q required"))
         val k = opts.get("k").map(_.toInt).getOrElse(10)
-        val reader = new IndexReader(spark, root)
-        // maintained posindex: base + per-sync deltas, liveness verified
-        // against the live docs table — purges and updates since the last
-        // index-pos run are answered correctly without a rebuild; a
-        // coverage gap errors crisply inside topKLive
-        val hits = graft.query.Phrase.topKLive(spark, io, s"$root/posindex",
-          q, k, reader)
+        val hits = graft.query.Phrase.topK(new IndexReader(spark, root), q, k)
         if (hits.isEmpty) println("no hits")
         else hits.zipWithIndex.foreach { case (h, i) =>
           println(f"${i + 1}%2d  ${h.score}%.6f  ${h.docId}%20d")
         }
-      case "compact-pos" =>
-        // fold posindex base + accumulated deltas into one live base
-        // (needs no source pages — works from the index's own tables;
-        // the index snapshot is resolved inside, AFTER the lock is held)
-        graft.query.Phrase.foldPosindex(spark, io, s"$root/posindex")
-        println(s"positional index folded: $root/posindex")
       case "schedule" =>
         // the reference's cron loop: poll pagesDir every --interval, sync
         // new files through the checkpointed SyncJob until killed
@@ -145,8 +127,7 @@ object Main {
       |  sync|purge|reconcile: --pages <parquet|corpus:N[:parts]> --root <dir>
       |                        [--batch-ts "yyyy-mm-dd hh:mm:ss"] [--max-purge N]
       |  query:                --root <dir> --q "<terms>" [--k 10]
-      |  index-pos:            --pages <...> --root <dir>   (positional index)
-      |  compact-pos:          --root <dir>   (fold posindex base + deltas)
+      |  index-pos:            --pages <...> --root <dir>   (positions on)
       |  phrase:               --root <dir> --q "<exact phrase>" [--k 10]
       |  schedule:             --pages <parquet dir> --root <dir>
       |                        [--interval "60 seconds"] [--max-batches N]""".stripMargin)

@@ -1,6 +1,6 @@
 package graft.index
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions._
 import graft.PageRow
 import graft.analysis.Tokenizer
@@ -15,9 +15,12 @@ import graft.extract.HtmlText
   * within each doc, concatenated across the block (tf per doc = position
   * count, so decoding needs no extra length stream beyond tfs).
   *
-  * Kept separate from the BM25 index on purpose: positions roughly double
-  * posting bytes, and the north-rule path (BM25 WAND) doesn't need them —
-  * build this table only when phrase queries are required.
+  * Kept beside the BM25 index, not inside it: positions roughly double
+  * posting bytes, and the north-rule path (BM25 WAND) doesn't need them.
+  * A segment carries these blocks in its `pos` dir only once `index-pos`
+  * has set the version's positions flag; sync, purge and compaction then
+  * keep them under the segment's commit and tombstones, as Lucene keeps
+  * a `.pos` file per segment.
   */
 case class PosBlock(
     term: String,
@@ -130,48 +133,8 @@ object Positional extends Serializable {
     out
   }
 
-  /** Encode one pages frame into a flat positional-blocks dir. */
+  /** Encode one pages frame into a positional-blocks dir. */
   def writeBlocks(pages: Dataset[PageRow], dir: String): Unit =
     buildBlocks(toPositionalPostings(pages)).toDF()
       .write.mode("overwrite").parquet(dir)
-
-  /** (Re)build the maintained posindex BASE under `posRoot`:
-    *
-    * {{{
-    * posRoot/base/              blocks of the supplied live-pages snapshot
-    * posRoot/base/_built_from   the index version the snapshot reflects
-    * posRoot/delta/<batchId>/   per-sync deltas, written by SyncJob while
-    *                            the base exists
-    * }}}
-    *
-    * `builtFrom` is the batch STAMP the base is authoritative as of (a
-    * base match for docId d is live iff live docs carry batch_id ≤ stamp
-    * — see [[graft.query.Phrase]]). Deltas predating a rebuilt base are
-    * subsumed by it and DELETED here: leaving them would double-count a
-    * doc that passed both its delta's stamp and the new base's.
-    */
-  def build(spark: SparkSession, pages: Dataset[PageRow], posRoot: String,
-            builtFrom: Option[String]): Unit = {
-    val stamp = builtFrom.getOrElse(throw new IllegalStateException(
-      "index-pos requires a published main index (the base is stamped " +
-        "with its version for LSM liveness) — sync first"))
-    val base = s"$posRoot/base"
-    writeBlocks(pages, base)
-    val fs = new org.apache.hadoop.fs.Path(posRoot).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$posRoot/delta"), true)
-    val out = fs.create(new org.apache.hadoop.fs.Path(s"$base/_built_from"), true)
-    try out.write(stamp.getBytes("UTF-8")) finally out.close()
-  }
-
-  /** The main-index version a posindex dir was built from, if stamped. */
-  def builtFrom(spark: SparkSession, dir: String): Option[String] = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/_built_from")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try Some(new String(in.readAllBytes(), "UTF-8").trim) finally in.close()
-    }
-  }
 }

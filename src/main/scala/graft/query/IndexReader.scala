@@ -32,11 +32,11 @@ import graft.sync.Tables
   *      the url (reference surface analog: Solr q/fl/sort/rows,
   *      lib/sync/dataAdapters/solr/solr.js:117-122).
   */
-class IndexReader(spark: SparkSession, root: String) {
+class IndexReader(private[graft] val spark: SparkSession, root: String) {
   import spark.implicits._
 
   private val io = new TableIO(spark, root)
-  private val tables = Tables.load(spark, io, io.currentVersion().getOrElse(
+  private[graft] val tables = Tables.load(spark, io, io.currentVersion().getOrElse(
     throw new IllegalStateException(s"no published index at $root")))
   val version: String = tables.version
   val segments: Seq[String] = tables.segments
@@ -70,7 +70,7 @@ class IndexReader(spark: SparkSession, root: String) {
     * evicted entry is indistinguishable from an absent term — a
     * check-then-get would silently drop the term from scoring.
     */
-  private def probeDict(terms: Seq[String]): Seq[(String, Long, Seq[String])] = {
+  private[query] def probeDict(terms: Seq[String]): Seq[(String, Long, Seq[String])] = {
     val cached: Map[String, Option[DictRow]] =
       terms.flatMap(t => Option(dictCache.get(t)).map(t -> _)).toMap
     val missing = terms.filterNot(cached.contains)
@@ -98,13 +98,6 @@ class IndexReader(spark: SparkSession, root: String) {
     * to broadcast; empty (with [[deadDistributed]] set) otherwise.
     */
   val dead: Map[Long, String] = tables.dead
-
-  /** Distinct batch_ids among LIVE docs (≈ #segments values; one pruned
-    * column scan, computed lazily once per reader — this snapshot's set
-    * is immutable). Phrase coverage checks consume it.
-    */
-  lazy val liveBatchIds: Seq[String] =
-    docs.select("batch_id").distinct().as[String].collect().toSeq
 
   /** Live doc rows ([[graft.sync.IndexTables.docs]]). */
   lazy val docs: DataFrame = tables.docs.toDF()

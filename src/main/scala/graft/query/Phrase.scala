@@ -1,13 +1,13 @@
 package graft.query
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions._
 import graft.Hit
 import graft.index.{PosBlock, Positional}
-import graft.sources.TableIO
 
-/** Exact phrase top-k over the positional index (SURVEY §7.7; Solr-surface
-  * analog: `q="exact phrase"`).
+/** Exact phrase top-k over the segments' positional blocks (SURVEY §7.7;
+  * Solr-surface analog: `q="exact phrase"`).
   *
   * Semantics: a document matches iff the phrase's tokens occur at
   * consecutive positions; phrase tf = number of occurrences. Scoring =
@@ -15,21 +15,19 @@ import graft.sources.TableIO
   * LIVE docs, tf = phrase tf — computed over the candidate set,
   * deterministic (score desc, docId asc).
   *
-  * Plan: per (source, bucket) group, intersect the phrase terms' posting
+  * Plan: per (segment, bucket) group, intersect the phrase terms' posting
   * streams doc-at-a-time via BLOCK CURSORS — each term decodes one
   * 128-doc block at a time (galloping on the rarest term), so a stopword
   * phrase ("of the") keeps O(terms × block) decoded positions resident
   * instead of the bucket's whole position lists (PhraseSpec asserts the
   * bound); a global agg supplies df; scores are exact.
   *
-  * LSM liveness (maintained posindex, [[Positional]] base+delta layout):
-  * each source carries a batch STAMP (base = the index version it was
-  * built from; delta = its sync batchId). A doc's tokens live wholly in
-  * one source, and a match from source stamped E is live iff the CURRENT
-  * live docs table has (docId, batch_id ≤ E) — purged docs have no live
-  * row, updated docs have batch_id above every stale source's stamp, and
-  * at most one source passes per doc. No positional tombstones needed,
-  * and purge/compaction require no posindex writes at all.
+  * Liveness: positions live in each segment's `pos` dir ([[Positional]]),
+  * under the same manifest and tombstones as its postings. A doc's tokens
+  * live wholly in one segment, and a match from segment s is live by the
+  * one tombstone rule with s as the batch: a row in segment s was written
+  * by batch s or survived into compacted segment s, as for `fwd`. A
+  * reader's snapshot is therefore consistent by construction.
   */
 object Phrase {
 
@@ -53,7 +51,7 @@ object Phrase {
   val maxResidentMatches = new java.util.concurrent.atomic.LongAccumulator(
     java.lang.Long.max _, 0L)
 
-  /** High-water of COMPRESSED posting-block bytes one (source, bucket)
+  /** High-water of COMPRESSED posting-block bytes one (segment, bucket)
     * task holds for cursor intersection. The r5 shape materialized the
     * whole bucket slice (`bs.map(_.block).toArray` — the judge's
     * residual #4); the demultiplexed doc-major stream now holds at most
@@ -99,7 +97,7 @@ object Phrase {
     count
   }
 
-  /** Demultiplexes one (source, bucket)'s doc-major (firstDocId-sorted)
+  /** Demultiplexes one (segment, bucket)'s doc-major (firstDocId-sorted)
     * compressed-block stream into per-term cursors, holding at most ONE
     * pending block per term.
     *
@@ -236,7 +234,7 @@ object Phrase {
     def close(): Unit = releaseBlock()
   }
 
-  /** All phrase matches in one (source, bucket) group via cursor
+  /** All phrase matches in one (segment, bucket) group via cursor
     * intersection over the demultiplexed doc-major block stream: the
     * globally rarest distinct term leads, the rest gallop to it.
     *
@@ -245,206 +243,144 @@ object Phrase {
     * match most of a bucket). Cursors close when the iterator exhausts
     * AND on any mid-intersection exception (a corrupt block must not
     * leak the JVM-global `resident` counter).
+    *
+    * A Spark task can ABANDON the iterator mid-stream (task kill,
+    * speculation, a downstream limit): exhaustion and exception paths
+    * then never run, so the task's end must [[GroupMatches.close]] it
+    * (close is idempotent). This entry registers that for its one group
+    * (CursorLeakSpec gates it); [[streamGroups]] registers once per task.
     */
   private[query] def matchesInBucketStreaming(
       blocks: Iterator[PosBlock], phraseTerms: Seq[String],
       lead0: String): Iterator[PhraseMatch] = {
-    val distinctTerms = phraseTerms.distinct
-    val demux = new BlockDemux(blocks)
+    val g = new GroupMatches(blocks, phraseTerms, lead0)
+    onTaskEnd(g.close())
+    g
+  }
+
+  private def onTaskEnd(f: => Unit): Unit =
+    Option(TaskContext.get()).foreach(_.addTaskCompletionListener[Unit](_ => f))
+
+  private[query] final class GroupMatches(
+      blocks: Iterator[PosBlock], phraseTerms: Seq[String],
+      lead0: String) extends Iterator[PhraseMatch] {
+    private val distinctTerms = phraseTerms.distinct
+    private val demux = new BlockDemux(blocks)
     // the lead's cursor initializes first so its first block anchors the
     // frontier before the other terms' init pumps run past it
-    val leadTerm = if (distinctTerms.contains(lead0)) lead0
-                   else distinctTerms.head
-    val order = leadTerm +: distinctTerms.filterNot(_ == leadTerm)
-    val cursors = order.map(t => t -> new StreamCursor(t, demux)).toMap
-    val slotCursors = phraseTerms.map(cursors).toArray
-    val lead = cursors(leadTerm)
+    private val leadTerm = if (distinctTerms.contains(lead0)) lead0
+                           else distinctTerms.head
+    private val order = leadTerm +: distinctTerms.filterNot(_ == leadTerm)
+    private val cursors = order.map(t => t -> new StreamCursor(t, demux)).toMap
+    private val slotCursors = phraseTerms.map(cursors).toArray
+    private val lead = cursors(leadTerm)
     // a term with no blocks in this group starts exhausted and the loop
     // yields nothing (the old array shape checked membership upfront; a
     // stream cannot)
-    val others = order.tail.map(cursors).toArray
-    // a Spark task can ABANDON this iterator mid-stream (task kill,
-    // speculation, a downstream limit) — exhaustion/exception paths then
-    // never run, and the JVM-global `resident` counter would stay
-    // inflated for the process lifetime. The task-completion listener
-    // closes cursors on every executor-side outcome; close is idempotent
-    // so the normal exhaustion close stays the common path
-    // (CursorLeakSpec gates this).
-    lazy val closeAllOnce: Unit = cursors.values.foreach(_.close())
-    Option(org.apache.spark.TaskContext.get()).foreach(
-      _.addTaskCompletionListener[Unit](_ => closeAllOnce))
-    new Iterator[PhraseMatch] {
-      private var pending: PhraseMatch = _
-      private var done = false
-      private def closeAll(): Unit = { done = true; closeAllOnce }
-      private def fetch(): Unit =
-        try {
-          while (pending == null && !lead.exhausted) {
-            val d = lead.curDoc
-            var ok = true
-            var i = 0
-            while (ok && i < others.length) {
-              others(i).seek(d)
-              ok = !others(i).exhausted && others(i).curDoc == d
-              i += 1
-            }
-            if (ok) {
-              val tf = phraseCount(slotCursors.map(_.positions))
-              if (tf > 0) pending = PhraseMatch(d, lead.dl, tf)
-              lead.next()
-            } else if (others(i - 1).exhausted) {
-              // a term ran out: no further doc can match
-              while (!lead.exhausted) lead.seek(Long.MaxValue)
-            } else {
-              // gallop the lead to the blocker's position
-              lead.seek(others(i - 1).curDoc)
-            }
+    private val others = order.tail.map(cursors).toArray
+    private lazy val closeAllOnce: Unit = cursors.values.foreach(_.close())
+    private var pending: PhraseMatch = _
+    private var done = false
+    def close(): Unit = { done = true; closeAllOnce }
+    private def fetch(): Unit =
+      try {
+        while (pending == null && !lead.exhausted) {
+          val d = lead.curDoc
+          var ok = true
+          var i = 0
+          while (ok && i < others.length) {
+            others(i).seek(d)
+            ok = !others(i).exhausted && others(i).curDoc == d
+            i += 1
           }
-          if (pending == null) closeAll()
-        } catch { case e: Throwable => closeAll(); throw e }
-      def hasNext: Boolean = {
-        if (pending == null && !done) fetch()
-        pending != null
-      }
-      def next(): PhraseMatch = {
-        if (!hasNext) throw new NoSuchElementException
-        val m = pending; pending = null; m
-      }
+          if (ok) {
+            val tf = phraseCount(slotCursors.map(_.positions))
+            if (tf > 0) pending = PhraseMatch(d, lead.dl, tf)
+            lead.next()
+          } else if (others(i - 1).exhausted) {
+            // a term ran out: no further doc can match
+            while (!lead.exhausted) lead.seek(Long.MaxValue)
+          } else {
+            // gallop the lead to the blocker's position
+            lead.seek(others(i - 1).curDoc)
+          }
+        }
+        if (pending == null) close()
+      } catch { case e: Throwable => close(); throw e }
+    def hasNext: Boolean = {
+      if (pending == null && !done) fetch()
+      pending != null
     }
-  }
-
-  /** One positional source: its blocks dir + the batch stamp its content
-    * is authoritative as of.
-    */
-  case class PosSource(stamp: String, dir: String)
-
-  /** The maintained posindex's sources: the base (stamped with the index
-    * version it was built from) + one delta per sync batch since.
-    */
-  def sources(spark: SparkSession, io: TableIO, posRoot: String): Seq[PosSource] = {
-    val base = s"$posRoot/base"
-    if (!io.exists(base))
-      throw new IllegalStateException(
-        s"no positional index at $posRoot — run index-pos first")
-    val stamp = Positional.builtFrom(spark, base).getOrElse(
-      throw new IllegalStateException(
-        s"positional base at $base carries no version stamp — rebuild it"))
-    val deltaRoot = s"$posRoot/delta"
-    val deltas =
-      io.listDirNames(deltaRoot).sorted
-        // a delta stamped ≤ the base is SUBSUMED by definition (the
-        // base covers every batch ≤ its stamp) — drop it here so a
-        // crash between a fold's base swap and its delta deletes can
-        // never double-count a doc; the lingering dirs are swept from
-        // the raw listing by the next fold (self-healing)
-        .filter(_ > stamp)
-        .map(b => PosSource(b, s"$deltaRoot/$b"))
-    PosSource(stamp, base) +: deltas
+    def next(): PhraseMatch = {
+      if (!hasNext) throw new NoSuchElementException
+      val m = pending; pending = null; m
+    }
   }
 
   private val posBlockSchema =
     org.apache.spark.sql.Encoders.product[PosBlock].schema
 
-  private def readSources(spark: SparkSession,
-                          srcs: Seq[PosSource],
-                          terms: Seq[String]): DataFrame =
-    srcs.map { s =>
-      spark.read.schema(posBlockSchema).parquet(s.dir)
-        .filter(col("term").isin(terms.distinct: _*))
-        .withColumn("stamp", lit(s.stamp))
-    }.reduce(_.unionByName(_))
-
-  /** Exact phrase top-k over the MAINTAINED posindex with LSM liveness:
-    * matches verified against the reader's live docs (purged docs drop,
-    * updated docs answer from their newest source only). Fully
-    * distributed — matches are never collected: pass 1 counts live
-    * matches (phrase df), pass 2 runs a bounded per-bucket top-k heap,
-    * and only numBuckets·k candidates reach the driver.
-    */
-  def topKLive(spark: SparkSession, io: TableIO, posRoot: String,
-               phrase: String, k: Int, reader: IndexReader): Array[Hit] = {
-    import spark.implicits._
-    val terms = graft.analysis.Tokenizer.tokenize(phrase).toSeq
-    if (terms.isEmpty || k <= 0) return Array.empty
-    // snapshot discipline: liveness is verified against the READER's docs
-    // snapshot, so only sources within that snapshot may answer. A delta
-    // adopted by a publish AFTER the reader was created (stamp >
-    // reader.version) would let an updated doc pass the batch_id ≤ stamp
-    // filter for BOTH its old source and the new delta — a silent double
-    // count — so such deltas are excluded; batchIds compare
-    // lexicographically-chronologically. A base NEWER than the reader
-    // (a concurrent fold) has already consumed the old deltas, so the
-    // snapshot is unanswerable — refuse crisply instead.
-    val srcs0 = sources(spark, io, posRoot)
-    if (srcs0.head.stamp > reader.version)
-      throw new IllegalStateException(
-        s"posindex base at $posRoot is stamped ${srcs0.head.stamp}, newer " +
-          s"than this reader's snapshot ${reader.version} — re-open the " +
-          "reader (a fold ran since)")
-    val srcs = srcs0.head +: srcs0.tail.filter(_.stamp <= reader.version)
-    // structural coverage: every live batch must be answerable — by the
-    // base (batch ≤ base stamp) or by its own delta. A gap (e.g. a sync
-    // that ran while no posindex existed) errors crisply instead of
-    // silently missing documents. The live batch-id set is cached per
-    // reader (snapshot-immutable), so repeated phrase queries pay no
-    // extra scan.
-    val baseStamp = srcs.head.stamp
-    val stamps = srcs.map(_.stamp).toSet
-    val uncovered = reader.liveBatchIds
-      .filter(b => b > baseStamp && !stamps.contains(b))
-    if (uncovered.nonEmpty)
-      throw new IllegalStateException(
-        s"posindex at $posRoot does not cover live batches " +
-          s"${uncovered.sorted.mkString(", ")} — re-run index-pos")
-    val matches = rawMatches(spark, readSources(spark, srcs, terms), terms)
-      .toDF("docId", "dl", "tf", "stamp")
-      .join(reader.docs.select($"docId", $"batch_id"), Seq("docId"))
-      .filter($"batch_id" <= $"stamp")
-      .select($"docId", $"dl", $"tf")
-      .as[(Long, Int, Int)]
-    scoreMatches(matches, k, reader.stats.n, reader.stats.avgdl)
-  }
-
-  /** Phrase matches of every source, tagged (docId, dl, tf, stamp).
+  /** Exact phrase top-k over the reader's version: each segment's `pos`
+    * blocks, a match from segment s kept by
+    * [[graft.sync.IndexTables.live]] with s as its batch. A version
+    * without positions is refused. The lead term is the rarest by the
+    * reader's cached dict probe (a galloping heuristic, never a
+    * correctness input); a term the dict lacks is held by no live doc, so
+    * the phrase answers empty with no Spark job. Fully distributed —
+    * matches are never collected: pass 1 counts live matches (phrase
+    * df), pass 2 runs a bounded per-bucket top-k heap, and only
+    * numBuckets·k candidates reach the driver.
     *
-    * Each (source, bucket) group arrives as a firstDocId-SORTED stream
+    * Each (segment, bucket) group arrives as a firstDocId-SORTED stream
     * of compressed blocks and is intersected through the demultiplexed
     * cursors — at most one pending + one decoded block per phrase term
-    * resident per task, instead of the whole bucket slice the former
-    * `bs.map(_.block).toArray` shape materialized (the r5 judge's
-    * residual #4; PhraseSpec asserts the O(terms × block) bound).
+    * resident per task (PhraseSpec asserts the O(terms × block) bound).
     */
-  private def rawMatches(spark: SparkSession, blocks: DataFrame,
-                         terms: Seq[String]): Dataset[(Long, Int, Int, String)] = {
+  def topK(reader: IndexReader, phrase: String, k: Int): Array[Hit] = {
+    val tables = reader.tables
+    if (!tables.positions)
+      throw new IllegalStateException(s"version ${tables.version} carries no " +
+        "positions — run index-pos")
+    val terms = graft.analysis.Tokenizer.tokenize(phrase).toSeq
+    if (terms.isEmpty || k <= 0) return Array.empty
+    val distinct = terms.distinct
+    val df = reader.probeDict(distinct).map(e => e._1 -> e._2).toMap
+    if (!distinct.forall(df.contains)) return Array.empty
+    val lead = distinct.minBy(df)
+    val spark = reader.spark
     import spark.implicits._
-    // lead choice = globally rarest term by posting count, from block
-    // METADATA only (one tiny pruned aggregation, no decode) — a stream
-    // cannot know per-bucket counts upfront like the array shape could;
-    // lead choice is a galloping heuristic, never a correctness input
-    val counts = blocks.groupBy(col("term")).agg(sum(col("count")).as("n"))
-      .as[(String, Long)].collect().toMap
-    val lead = terms.distinct.minBy(t => counts.getOrElse(t, 0L))
-    blocks
-      .repartition(col("stamp"), col("bucket"))
-      .sortWithinPartitions(col("stamp"), col("bucket"), col("firstDocId"),
+    val blocks = tables.segments.zip(tables.segPaths("pos")).map { case (s, dir) =>
+      spark.read.schema(posBlockSchema).parquet(dir)
+        .filter(col("term").isin(distinct: _*))
+        .withColumn("seg", lit(s))
+    }.reduce(_.unionByName(_))
+    val matches = blocks
+      .repartition(col("seg"), col("bucket"))
+      .sortWithinPartitions(col("seg"), col("bucket"), col("firstDocId"),
         col("term"), col("blockId"))
-      .as[StampedPosBlock]
+      .as[SegPosBlock]
       .mapPartitions(rows => streamGroups(rows, terms, lead))
+      .toDF("docId", "dl", "tf", "seg")
+    scoreMatches(tables.live(matches, "seg").select($"docId", $"dl", $"tf")
+      .as[(Long, Int, Int)], k, reader.stats.n, reader.stats.avgdl)
   }
 
-  /** Split a partition's (stamp, bucket)-clustered, firstDocId-sorted
+  /** Split a partition's (segment, bucket)-clustered, firstDocId-sorted
     * rows into per-group streaming intersections; rows an intersection
     * leaves unconsumed (early exhaustion) are drained before the next
-    * group starts.
+    * group starts. One task-end listener closes the group open when the
+    * task ends, however many groups the task streams.
     */
-  private[query] def streamGroups(rows: Iterator[StampedPosBlock],
+  private[query] def streamGroups(rows: Iterator[SegPosBlock],
       phraseTerms: Seq[String],
       lead: String): Iterator[(Long, Int, Int, String)] = {
     val it = rows.buffered
+    var group: GroupMatches = null
+    onTaskEnd(if (group != null) group.close())
     new Iterator[(Long, Int, Int, String)] {
       private var cur: Iterator[(Long, Int, Int, String)] = Iterator.empty
       private var curKey: (String, Int) = _
-      private def key(b: StampedPosBlock) = (b.stamp, b.bucket)
+      private def key(b: SegPosBlock) = (b.seg, b.bucket)
       private def step(): Unit =
         while (!cur.hasNext && it.hasNext) {
           if (curKey != null)
@@ -456,8 +392,8 @@ object Phrase {
               def hasNext: Boolean = it.hasNext && key(it.head) == k
               def next(): PosBlock = it.next().block
             }
-            cur = matchesInBucketStreaming(groupIt, phraseTerms, lead)
-              .map(m => (m.docId, m.dl, m.phraseTf, k._1))
+            group = new GroupMatches(groupIt, phraseTerms, lead)
+            cur = group.map(m => (m.docId, m.dl, m.phraseTf, k._1))
           }
         }
       def hasNext: Boolean = { step(); cur.hasNext }
@@ -468,11 +404,11 @@ object Phrase {
     }
   }
 
-  /** PosBlock + its source stamp (public: Spark codegen instantiates it). */
-  case class StampedPosBlock(
+  /** PosBlock + its segment id (public: Spark codegen instantiates it). */
+  case class SegPosBlock(
       term: String, bucket: Int, blockId: Int, firstDocId: Long, count: Int,
       docIdsVB: Array[Byte], tfsVB: Array[Byte], dlsVB: Array[Byte],
-      posVB: Array[Byte], stamp: String) {
+      posVB: Array[Byte], seg: String) {
     def block: PosBlock = PosBlock(term, bucket, blockId, firstDocId, count,
       docIdsVB, tfsVB, dlsVB, posVB)
   }
@@ -540,156 +476,5 @@ object Phrase {
         .sortBy(h => (-h.score, h.docId))
         .take(k)
     } finally m.unpersist()
-  }
-
-  /** Fold the maintained posindex: base + accumulated deltas collapse
-    * into ONE fresh base holding only LIVE entries, stamped with the
-    * current index version (the posindex analog of segment compaction —
-    * run it when the delta list has grown; needs no source pages). Dead
-    * entries (purged docs, out-stamped stale versions) drop via the same
-    * (docId, batch_id ≤ stamp) rule queries use; buckets are recomputed
-    * at the current width so mixed-width sources re-unify.
-    *
-    * Swap discipline: the new base is fully written (and stamped) under
-    * `base.next` before the old base moves aside; a crash between the
-    * two renames leaves no base — phrase queries then refuse crisply and
-    * the operator re-runs index-pos (or restores `base.trash`).
-    */
-  def foldPosindex(spark: SparkSession, io: TableIO,
-                   posRoot: String): Unit = {
-    // the same single-flight lock the sync jobs take: a concurrent sync
-    // could otherwise adopt a fresh delta while we fold — which we would
-    // then delete unfolded. Only the dirs ENUMERATED here are deleted.
-    val release = io.acquireLock("compact-pos")
-    try foldLocked(spark, io, posRoot) finally release()
-  }
-
-  /** Heal a swap interrupted by a CRASH between the fold's two renames
-    * (caller holds the single-flight lock). `_built_from` is the last
-    * file written into base.next before the swap starts, so a complete
-    * base.next wins (roll forward); otherwise a lingering base.trash is
-    * the old base (roll back). Idempotent; no-op on a healthy layout.
-    */
-  private[graft] def recoverSwapLocked(spark: SparkSession,
-                                       posRoot: String): Unit =
-    recoverSwap(spark, posRoot)
-
-  private def recoverSwap(spark: SparkSession, posRoot: String): Unit = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new org.apache.hadoop.fs.Path(posRoot).getFileSystem(conf)
-    def p(s: String) = new org.apache.hadoop.fs.Path(s)
-    val base = p(s"$posRoot/base")
-    val next = p(s"$posRoot/base.next")
-    val trash = p(s"$posRoot/base.trash")
-    if (!fs.exists(base)) {
-      if (fs.exists(next) && fs.exists(p(s"$posRoot/base.next/_built_from"))) {
-        if (!fs.rename(next, base)) throw new java.io.IOException(
-          s"swap recovery: could not roll $next forward to $base")
-        fs.delete(trash, true)
-      } else if (fs.exists(trash)) {
-        if (!fs.rename(trash, base)) throw new java.io.IOException(
-          s"swap recovery: could not restore $base from $trash")
-        fs.delete(next, true)
-      }
-    }
-  }
-
-  /** The fold body — caller MUST hold the root's single-flight lock
-    * (foldPosindex takes it; SyncJob's publish stage already holds it
-    * when auto-folding). The index snapshot is resolved HERE, under the
-    * lock: a reader constructed before the lock could predate a
-    * concurrent publish, and the fold would then join that publish's
-    * delta against a stale docs table (new docs dropped, updated docs
-    * doubled) and DELETE the delta — permanent data loss. Deltas stamped
-    * past the under-lock snapshot are left on disk untouched (none can
-    * exist while the lock is held, but a crisp skip beats a delete).
-    */
-  private[graft] def foldLocked(spark: SparkSession, io: TableIO,
-                                posRoot: String): Unit = {
-    import spark.implicits._
-    recoverSwap(spark, posRoot)
-    val reader = new IndexReader(spark, io.root)
-    val all = sources(spark, io, posRoot)
-    val srcs = all.head +: all.tail.filter(_.stamp <= reader.version)
-    // the fold must REFUSE a coverage gap, exactly like topKLive: a new
-    // base stamped reader.version would claim coverage of every batch
-    // <= that version, so folding across a gap (a batch synced while no
-    // posindex existed) would convert the query path's crisp refusal
-    // into silently-missing phrase results, permanently. Refusing keeps
-    // the gap visible until the operator re-runs index-pos.
-    val uncoveredF = reader.liveBatchIds
-      .filter(b => b > srcs.head.stamp && !srcs.exists(_.stamp == b))
-    if (uncoveredF.nonEmpty)
-      throw new IllegalStateException(
-        s"refusing to fold: posindex at $posRoot does not cover live " +
-          s"batches ${uncoveredF.sorted.mkString(", ")} — re-run index-pos")
-    val blocks = srcs.map { s =>
-      spark.read.schema(posBlockSchema).parquet(s.dir)
-        .withColumn("stamp", lit(s.stamp))
-    }.reduce(_.unionByName(_))
-    val entries = blocks.as[StampedPosBlock].flatMap { b =>
-      Positional.decodeBlock(b.block).iterator.map { case (d, dl, ps) =>
-        (b.term, d, dl, ps.toSeq, b.stamp)
-      }
-    }.toDF("term", "docId", "dl", "positions", "stamp")
-    val live = entries
-      .join(reader.docs.select($"docId", $"batch_id"), Seq("docId"))
-      .filter($"batch_id" <= $"stamp")
-      .select($"term", $"docId", $"dl", $"positions")
-    val postings = live.as[(String, Long, Int, Seq[Int])]
-      .map { case (term, d, dl, ps) =>
-        graft.index.PosPosting(term, graft.index.DocIds.bucket(d), d, dl, ps)
-      }
-    val folded = Positional.buildBlocks(postings)
-    val next = s"$posRoot/base.next"
-    folded.toDF().write.mode("overwrite").parquet(next)
-    val conf = spark.sparkContext.hadoopConfiguration
-    val fs = new org.apache.hadoop.fs.Path(posRoot).getFileSystem(conf)
-    def p(s: String) = new org.apache.hadoop.fs.Path(s)
-    val out = fs.create(p(s"$next/_built_from"), true)
-    try out.write(reader.version.getBytes("UTF-8")) finally out.close()
-    // two-rename swap with checked renames and in-process rollback: the
-    // window between the renames must never be allowed to persist as
-    // "no base" (phrase search silently dead until an operator digs out
-    // base.trash). A CRASH in the window is healed by recoverSwap on
-    // the next fold under the same lock.
-    fs.delete(p(s"$posRoot/base.trash"), true)
-    if (!fs.rename(p(s"$posRoot/base"), p(s"$posRoot/base.trash")))
-      throw new java.io.IOException(
-        s"fold swap: could not move $posRoot/base aside")
-    if (!fs.rename(p(next), p(s"$posRoot/base"))) {
-      fs.rename(p(s"$posRoot/base.trash"), p(s"$posRoot/base"))
-      throw new java.io.IOException(
-        s"fold swap: could not publish $next — rolled back to the old base")
-    }
-    fs.delete(p(s"$posRoot/base.trash"), true)
-    // cleanup works from the RAW delta listing, not the enumerated
-    // sources: sources() hides deltas subsumed by the OLD base (a crash
-    // between a previous fold's base swap and its deletes leaves such
-    // dirs), so deleting only srcs.tail would leak them forever — and a
-    // leaked dir keeps the raw count at the auto-fold threshold, turning
-    // every subsequent publish into a full fold. Everything stamped ≤
-    // the NEW base stamp is subsumed by construction and safe to drop;
-    // under the lock nothing newer can appear, but the guard stays.
-    io.listDirNames(s"$posRoot/delta")
-      .filter(_ <= reader.version)
-      .foreach(b => fs.delete(p(s"$posRoot/delta/$b"), true))
-  }
-
-  /** Exact phrase top-k against a SINGLE flat positional dir with no
-    * liveness context (standalone corpora and tests; the maintained path
-    * is [[topKLive]]).
-    */
-  def topK(spark: SparkSession, posIndexDir: String, phrase: String, k: Int,
-           n: Long, avgdl: Double): Array[Hit] = {
-    import spark.implicits._
-    val terms = graft.analysis.Tokenizer.tokenize(phrase).toSeq
-    if (terms.isEmpty || k <= 0) return Array.empty
-    val blocks = spark.read.schema(posBlockSchema).parquet(posIndexDir)
-      .filter(col("term").isin(terms.distinct: _*))
-      .withColumn("stamp", lit(""))
-    val matches = rawMatches(spark, blocks, terms)
-      .map(t => (t._1, t._2, t._3))
-    scoreMatches(matches, k, n, avgdl)
   }
 }

@@ -23,8 +23,9 @@ import graft.CorpusStats
   *
   * {{{
   * root/
-  *   segments/<segId>/{docs,index,fwd}/     immutable LSM segments, shared
-  *                                          across versions (manifest refs)
+  *   segments/<segId>/{docs,index,fwd,pos}/ immutable LSM segments, shared
+  *                                          across versions (manifest refs);
+  *                                          `pos` only under the positions flag
   *   v=<batchId>/{manifest,stats}           version = manifest of segment
   *                                          ids + dict/tombs chains + stats
   *   dict/<id>/, tombs/<id>/                dict and tombstone chain links
@@ -79,7 +80,7 @@ class TableIO(val spark: SparkSession, val root: String) extends Serializable {
     * older, incompatible layout: refused rather than guessed (a guess is
     * exactly the silent-corruption class the recordings exist to kill).
     * Fields this build no longer reads, such as `deadPostings`, are
-    * ignored.
+    * ignored. A manifest without the positions flag has none.
     */
   def manifest(version: String): TableIO.Manifest = {
     import TableIO._
@@ -98,7 +99,8 @@ class TableIO(val spark: SparkSession, val root: String) extends Serializable {
     Manifest(ids(ManifestSegsRe).getOrElse(Seq.empty), tombs,
       ids(ManifestDictRe).getOrElse(throw refuse("dict chain")), tombChain,
       ManifestBitsRe.findFirstMatchIn(content).map(_.group(1).toInt)
-        .getOrElse(throw refuse("bucketBits recording")))
+        .getOrElse(throw refuse("bucketBits recording")),
+      content.contains(ManifestPositions))
   }
 
   /** A version's segment ids, oldest first, and tombstone-row count. */
@@ -107,13 +109,14 @@ class TableIO(val spark: SparkSession, val root: String) extends Serializable {
 
   /** The one manifest shape this build writes and reads: segments, the
     * tombstone count, the dict chain, the tombs chain (omitted when
-    * empty, which it is exactly when the count is 0) and the bucket
-    * width.
+    * empty, which it is exactly when the count is 0), the bucket width
+    * and the positions flag (omitted when off).
     */
   def writeManifest(version: String, segments: Seq[String],
                     tombstoneCount: Long,
                     dictChain: Seq[String],
-                    tombChain: Seq[String]): Unit = {
+                    tombChain: Seq[String],
+                    positions: Boolean): Unit = {
     require(tombstoneCount == 0 || tombChain.nonEmpty,
       s"manifest of $version: $tombstoneCount tombstones need a tombs chain")
     val dict =
@@ -126,7 +129,8 @@ class TableIO(val spark: SparkSession, val root: String) extends Serializable {
       segments.map("\"" + _ + "\"").mkString(
         "{\"segments\":[", ",",
         s"],\"tombstones\":$tombstoneCount$dict$tombs," +
-          s"\"bucketBits\":${graft.index.DocIds.bucketBits}}"))
+          s"\"bucketBits\":${graft.index.DocIds.bucketBits}" +
+          (if (positions) s",${TableIO.ManifestPositions}}" else "}")))
   }
 
   def exists(path: String): Boolean = fs.exists(new Path(path))
@@ -418,12 +422,13 @@ class TableIO(val spark: SparkSession, val root: String) extends Serializable {
 object TableIO {
   /** One version's manifest: segment ids and tombs chain oldest first,
     * the tombstone-row count, the dict chain (one FULL id, then DELTA
-    * ids) and the docId bucket width the index was built at (read paths
-    * use it, never runtime config).
+    * ids), the docId bucket width the index was built at (read paths
+    * use it, never runtime config) and whether every segment carries a
+    * `pos` dir of positional blocks.
     */
   case class Manifest(segments: Seq[String], tombstones: Long,
                       dictChain: Seq[String], tombChain: Seq[String],
-                      bucketBits: Int)
+                      bucketBits: Int, positions: Boolean)
 
   /** `column IN values` over a string column at `ordinal` of a
     * [[TableIO.readLocal]] schema: the predicate pushed into the Parquet
@@ -472,5 +477,6 @@ object TableIO {
   private val ManifestTombsRe = """"tombstones":(\d+)""".r
   private val ManifestDictRe = """"dict":\[([^\]]*)\]""".r
   private val ManifestBitsRe = """"bucketBits":(\d+)""".r
+  private val ManifestPositions = "\"positions\":true"
   private val ManifestTombChainRe = """"tombs":\[([^\]]*)\]""".r
 }

@@ -294,14 +294,15 @@ object SyncJob {
 
   /** The analyze stage's step shared by sync, multi-timestamp sync and
     * reconcile: in-batch last-write-wins ([[latestPerUrl]]), analyze, the
-    * staged fwd write, the positional delta, and the stage's done flag.
-    * fwd is the adopted analyzed output, written bucketed by docId so
-    * later update batches open only their affected buckets. Its width:
-    * an explicit hint, else the configured ceiling for a corpus-scale
-    * `initial` build (dedup and bucket clustering in ONE exchange — fb is
-    * a function of url, see [[Tables.writeFwdFusedInitial]]), else
-    * adapted to the delta's measured size (a 256-dir write costs seconds
-    * regardless of rows).
+    * staged fwd write, the positional blocks while the current version
+    * carries positions (adopted as the segment's `pos` with the rest),
+    * and the stage's done flag. fwd is the adopted analyzed output,
+    * written bucketed by docId so later update batches open only their
+    * affected buckets. Its width: an explicit hint, else the configured
+    * ceiling for a corpus-scale `initial` build (dedup and bucket
+    * clustering in ONE exchange — fb is a function of url, see
+    * [[Tables.writeFwdFusedInitial]]), else adapted to the delta's
+    * measured size (a 256-dir write costs seconds regardless of rows).
     */
   private[sync] def stageAnalyzed(spark: SparkSession, io: TableIO, cp: Checkpoint,
                                   batchId: String, process: String, resource: String,
@@ -318,30 +319,11 @@ object SyncJob {
           Tables.writeFwdAdaptive(spark, SegmentBuilder.analyze(delta).toDF(), analyzedDir)
       }
     }
-    stagePosDelta(spark, io, batchId, delta)
-    cp.markDone(batchId, process, resource, "analyze")
-  }
-
-  /** While a maintained posindex exists (root/posindex/base, built by
-    * index-pos), every sync delta also stages its positional blocks; the
-    * merge stage adopts them as posindex/delta/<batchId>. Purges and
-    * compactions need NO posindex writes — phrase liveness verifies
-    * matches against the live docs table (Phrase.topKLive).
-    */
-  private def stagePosDelta(spark: SparkSession, io: TableIO,
-                            batchId: String,
-                            delta: Dataset[PageRow]): Unit = {
-    // a fold swap that crashed between its two renames leaves base.next
-    // or base.trash instead of base — the posindex still EXISTS (the
-    // publish stage heals it), so interim batches must keep staging
-    // their deltas or the healed base acquires a permanent coverage gap
-    val posRoot = s"${io.root}/posindex"
-    if (io.exists(s"$posRoot/base") || io.exists(s"$posRoot/base.next") ||
-        io.exists(s"$posRoot/base.trash"))
-      timed(batchId, "analyze.posDelta") {
-        graft.index.Positional.writeBlocks(
-          delta, io.stagingDir(batchId, "pos"))
+    if (Tables.loadCurrent(spark, io).exists(_.positions))
+      timed(batchId, "analyze.pos") {
+        graft.index.Positional.writeBlocks(delta, io.stagingDir(batchId, "pos"))
       }
+    cp.markDone(batchId, process, resource, "analyze")
   }
 
   /** In-batch last-write-wins by url: a crawl window can deliver the same
@@ -384,7 +366,8 @@ object SyncJob {
     lazy val staged = Seq("delta_rows", "delta_dl")
         .map(f => io.readSmallFile(s"$stagingRoot/$f")) match {
       case Seq(Some(n), Some(dl)) =>
-        Tables.Staged(docsDir, blocksDir, analyzedDir, n.trim.toLong, dl.trim.toLong)
+        Tables.Staged(docsDir, blocksDir, analyzedDir, io.stagingDir(batchId, "pos"),
+          n.trim.toLong, dl.trim.toLong)
       case _ => throw new IllegalStateException(
         s"staging dir $stagingRoot holds no delta-stats stash (delta_rows, " +
           "delta_dl): it was staged by an incompatible older build; delete " +
@@ -474,62 +457,6 @@ object SyncJob {
     val deltaRows = staged.rows
     timed(batchId, "publish") {
       io.publish(batchId)
-      // adopt the staged positional delta AFTER the pointer flip
-      // (maintained posindex; moveDir is idempotent for resumed batches,
-      // and publish is not marked done until after this — a crash here
-      // re-runs the stage). Adopting before the merge published would
-      // let a concurrent phrase query see an updated doc TWICE (its base
-      // entry still live against the old version AND the unpublished
-      // delta's); adopting after at worst surfaces the crisp
-      // coverage-gap refusal for a moment, never a silent double count.
-      val stagedPos = io.stagingDir(batchId, "pos")
-      if (io.exists(stagedPos) ||
-          io.exists(s"${io.root}/posindex/delta/$batchId"))
-        io.moveDir(stagedPos, s"${io.root}/posindex/delta/$batchId")
-      // auto-fold the posindex at the same threshold segment compaction
-      // uses (the reference cleans up its processed artifacts after
-      // success, destinationManager.js:228-229) — without it, a
-      // deployment that never runs compact-pos degrades phrase queries
-      // linearly in batch count. We already hold the root's single-flight
-      // lock, so foldLocked is called directly; the fold resolves the
-      // just-published version as its snapshot.
-      timed(batchId, "publish.posFold") {
-        val posRoot = s"${io.root}/posindex"
-        val deltaRoot = s"$posRoot/delta"
-        // heal a fold swap that crashed between its two renames FIRST
-        // (we hold the root's single-flight lock): without this a
-        // baseless posindex never reaches the threshold guard below, so
-        // the promised recoverSwap self-heal would never run on the
-        // automatic path and the operator would have to re-run a full
-        // index-pos rebuild
-        if (!io.exists(s"$posRoot/base") &&
-            (io.exists(s"$posRoot/base.next") ||
-              io.exists(s"$posRoot/base.trash")))
-          try graft.query.Phrase.recoverSwapLocked(spark, posRoot)
-          catch { case e: Exception =>
-            System.err.println(
-              s"[sync] posindex swap recovery failed (batch $batchId): " +
-                s"${e.getMessage} — continuing; run compact-pos manually")
-          }
-        if (io.exists(s"$posRoot/base") && io.exists(deltaRoot) &&
-            io.listDirNames(deltaRoot).size >= Tables.compactThreshold)
-          // best-effort maintenance: the batch's index already published,
-          // so a posindex-only failure (coverage gap → crisp fold
-          // refusal, corrupt delta block) must not fail the sync batch —
-          // a repeated fold failure would otherwise burn the 3-failure
-          // error budget and halt the MAIN pipeline over a positional
-          // artifact. Swallowing is SAFE: foldLocked's swap is checked +
-          // rolled back in-process and crash-healed by recoverSwap on
-          // the next fold, so no swallowed failure can leave the
-          // posindex baseless. Phrase queries keep their own crisp
-          // refusal until the operator runs compact-pos / index-pos.
-          try graft.query.Phrase.foldLocked(spark, io, s"${io.root}/posindex")
-          catch { case e: Exception =>
-            System.err.println(
-              s"[sync] posindex auto-fold failed (batch $batchId): " +
-                s"${e.getMessage} — continuing; run compact-pos manually")
-          }
-      }
       val millis = System.currentTimeMillis() - t0
       // lineage rides on the batch's own segment — O(delta), the rest of
       // the index is untouched by this batch

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.functions._
 import graft.{CorpusStats, DictRow, DocRow, IndexBlock, Posting, Tombstone}
-import graft.index.{Merge, SegmentBuilder}
+import graft.index.{Merge, PosBlock, PosPosting, Positional, SegmentBuilder}
 import graft.sources.TableIO
 
 /** LSM version management: a published version is a *manifest* of
@@ -40,6 +40,12 @@ import graft.sources.TableIO
   * Every reader and writer opens a version through one handle ([[load]]
   * → [[IndexTables]]) and applies one liveness rule: [[isDead]] per row,
   * [[IndexTables.live]] over a frame.
+  *
+  * Positions: once a version's manifest carries the positions flag
+  * ([[IndexPosJob]]), every segment holds a `pos` dir of positional
+  * blocks. Appends adopt the batch's staged `pos` with its other dirs,
+  * compaction rewrites it like fwd, and every manifest writer carries
+  * the flag forward.
   */
 object Tables {
 
@@ -433,7 +439,7 @@ object Tables {
     * a silent width mismatch would interleave foreign docId ranges inside
     * (term,bucket) runs and corrupt delta-gap encoding.
     */
-  private def checkBucketBits(old: IndexTables): Unit =
+  private[sync] def checkBucketBits(old: IndexTables): Unit =
     if (old.bucketBits != graft.index.DocIds.bucketBits)
       throw new IllegalStateException(
         s"index ${old.version} was built with bucketBits=${old.bucketBits} " +
@@ -492,39 +498,46 @@ object Tables {
   // ---- initial build ---------------------------------------------------
 
   /** A batch's staged delta: the segment stage's docs, blocks and
-    * analyzed (fwd) dirs, plus the (rows, doclen sum) it aggregated
+    * analyzed (fwd) dirs, the positional blocks the analyze stage writes
+    * under the positions flag, plus the (rows, doclen sum) it aggregated
     * over them in its collision check.
     */
   case class Staged(docsDir: String, blocksDir: String, analyzedDir: String,
-                    rows: Long, dlSum: Long)
+                    posDir: String, rows: Long, dlSum: Long)
 
-  /** Adopt the staged dirs as the batch's segment by rename (O(1)). */
-  private def adopt(io: TableIO, batchId: String, staged: Staged): Unit = {
+  /** Adopt the staged dirs as the batch's segment by rename (O(1)); `pos`
+    * when the version carries positions (a missing staged dir then fails
+    * loudly in moveDir).
+    */
+  private def adopt(io: TableIO, batchId: String, staged: Staged,
+                    positions: Boolean): Unit = {
     val seg = io.segmentDir(batchId)
     io.moveDir(staged.docsDir, s"$seg/docs")
     io.moveDir(staged.blocksDir, s"$seg/index")
     io.moveDir(staged.analyzedDir, s"$seg/fwd")
+    if (positions) io.moveDir(staged.posDir, s"$seg/pos")
   }
 
-  /** Adopt the staged initial build as segment #1 of a fresh index; the
-    * staged (rows, doclen sum) spare the stats derivation its docs
-    * re-aggregation job.
+  /** Adopt the staged initial build as segment #1 of a fresh index (no
+    * positions: `index-pos` turns them on); the staged (rows, doclen sum)
+    * spare the stats derivation its docs re-aggregation job.
     */
   def writeInitial(spark: SparkSession, io: TableIO, batchId: String,
                    staged: Staged): Unit = {
-    adopt(io, batchId, staged)
-    deriveDictStats(spark, io, batchId, Seq(batchId),
+    adopt(io, batchId, staged, positions = false)
+    deriveDictStats(spark, io, batchId, Seq(batchId), positions = false,
       Some((staged.rows, staged.dlSum)))
   }
 
   /** FULL dict + corpus stats from a single freshly written segment
     * (pruned metadata-column scans — the encode shuffle never re-runs),
-    * plus the version manifest with an empty tombstone set and a
-    * one-link dict chain. `knownStats` short-circuits the docs
-    * aggregation when the caller already holds (rows, doclen sum).
+    * plus the version manifest with an empty tombstone set, a one-link
+    * dict chain and the given positions flag. `knownStats`
+    * short-circuits the docs aggregation when the caller already holds
+    * (rows, doclen sum).
     */
   def deriveDictStats(spark: SparkSession, io: TableIO, ver: String,
-                      segments: Seq[String],
+                      segments: Seq[String], positions: Boolean,
                       knownStats: Option[(Long, Long)] = None): Unit = {
     import spark.implicits._
     val paths = segments.map(io.segmentDir)
@@ -537,11 +550,11 @@ object Tables {
       (n0, if (row.isNullAt(1)) 0L else row.getLong(1))
     }
     writeStats(spark, io, ver, n, sumDl)
-    io.writeManifest(ver, segments, 0L, Seq(ver), tombChain = Seq.empty)
+    io.writeManifest(ver, segments, 0L, Seq(ver), tombChain = Seq.empty, positions)
   }
 
-  private def writeStats(spark: SparkSession, io: TableIO, ver: String,
-                         n: Long, sumDl: Long): Unit = {
+  private[sync] def writeStats(spark: SparkSession, io: TableIO, ver: String,
+                               n: Long, sumDl: Long): Unit = {
     import spark.implicits._
     val stats = CorpusStats(n, if (n == 0) 0.0 else sumDl.toDouble / n, sumDl)
     io.writeParquet(Seq(stats).toDF(), s"${io.versionDir(ver)}/stats")
@@ -583,7 +596,7 @@ object Tables {
     import spark.implicits._
     checkBucketBits(old)
     val seg = io.segmentDir(batchId)
-    staged.foreach(adopt(io, batchId, _))
+    staged.foreach(adopt(io, batchId, _, old.positions))
     val hasDelta = staged.isDefined
     def sub[A](stage: String)(f: => A): A =
       SyncJob.timed(batchId, s"merge.$stage")(f)
@@ -731,7 +744,7 @@ object Tables {
         old.stats.sumDl - killedDl + deltaDl)
       val segs = if (hasDelta) old.segments :+ batchId else old.segments
       io.writeManifest(batchId, segs, tombCount, old.dictChain :+ batchId,
-        tombChain = tombChain)
+        tombChain = tombChain, old.positions)
     } finally { killed.unpersist(); affected.unpersist() }
   }
 
@@ -742,7 +755,9 @@ object Tables {
     * segment is the base (untouched groups pass through block-verbatim),
     * the younger segments' live postings + the staged delta are the merge
     * delta, and every tombstoned or purged docId is dropped. Resets the
-    * tombstone set; dict/stats re-derive from the written parquet.
+    * tombstone set; dict/stats re-derive from the written parquet. fwd,
+    * and pos under the positions flag, keep the old segments' surviving
+    * rows plus the staged delta's.
     */
   def compactVersion(spark: SparkSession, io: TableIO, old: IndexTables,
                      batchId: String,
@@ -806,8 +821,32 @@ object Tables {
     // compacted segment ≈ corpus-sized: width from the pre-compaction
     // corpus count (already on hand — no extra pass)
     writeFwd(fwdNew, s"$seg/fwd", chooseFwdBits(math.max(old.stats.n, 1L)))
-    deriveDictStats(spark, io, batchId, Seq(batchId))
+    // pos, the same way: live, not overridden positions of the old
+    // segments (a segment's rows are live-as-of the segment, as for fwd)
+    // plus the staged delta's
+    if (old.positions) {
+      val oldPos = survivors(old.segments.map { s =>
+        readPosDir(spark, s"${io.segmentDir(s)}/pos").withColumn("seg", lit(s))
+      }.reduce(_.unionByName(_)), "seg").drop("seg")
+      val posNew = staged.fold(oldPos)(st => oldPos.unionByName(readPosDir(spark, st.posDir)))
+      io.writeParquet(Positional.buildBlocks(posNew.as[PosPosting]).toDF(), s"$seg/pos")
+    }
+    deriveDictStats(spark, io, batchId, Seq(batchId), old.positions)
     overridden.unpersist()
+  }
+
+  private val PosBlockSchema = org.apache.spark.sql.Encoders.product[PosBlock].schema
+
+  /** A positional blocks dir decoded to (term, bucket, docId, dl,
+    * positions) rows.
+    */
+  private def readPosDir(spark: SparkSession, dir: String): DataFrame = {
+    import spark.implicits._
+    spark.read.schema(PosBlockSchema).parquet(dir).as[PosBlock].flatMap { b =>
+      Positional.decodeBlock(b).iterator.map { case (d, dl, ps) =>
+        PosPosting(b.term, b.bucket, d, dl, ps.toSeq)
+      }
+    }.toDF()
   }
 }
 
@@ -832,6 +871,11 @@ final class IndexTables private[sync] (spark: SparkSession, io: TableIO,
     * computation must agree with them).
     */
   val bucketBits: Int = m.bucketBits
+
+  /** Every segment carries a `pos` dir of positional blocks, written by
+    * `index-pos` and kept by every later sync, purge and compaction.
+    */
+  val positions: Boolean = m.positions
 
   lazy val stats: CorpusStats = io.readStats(version)
 

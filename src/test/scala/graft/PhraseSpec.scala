@@ -1,64 +1,66 @@
 package graft
 
 import java.sql.Timestamp
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.TestBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import graft.corpus.Corpus
-import graft.index.{DocIds, Positional}
-import graft.query.{Bm25, IndexReader, Phrase}
+import graft.index.{DocIds, PosBlock, Positional}
+import graft.oracle.PhraseOracle
+import graft.query.{IndexReader, Phrase}
 import graft.sources.TableIO
-import graft.sync.{Metrics, PurgeJob, SyncJob}
+import graft.sync.{IndexPosJob, PurgeJob, ReconcileJob, SyncJob}
 
-/** Positional index + phrase query vs a naive in-memory phrase oracle:
-  * the flat single-dir path, the streaming-cursor memory bound, and the
-  * maintained (base + delta, docs-join liveness) LSM path under churn.
+/** Positions in the segments vs a naive in-memory phrase oracle: the
+  * streaming-cursor memory bounds, and phrase answers across sync,
+  * purge, reconcile, multi-timestamp sync, in-batch re-crawls, compaction
+  * and stale readers, each on docId and score bits.
   */
 class PhraseSpec extends SparkTestBase {
   import spark.implicits._
 
+  private def ts(i: Long) = new Timestamp(Corpus.warcTsMillis(i))
+  private def urlIdx(p: PageRow): Int = p.url.split("/").last.toInt
+  private def bits(hits: Seq[Hit]) =
+    hits.map(h => (h.docId, java.lang.Double.doubleToRawLongBits(h.score)))
+
+  /** One sync of `rows` into a fresh root, then `index-pos`. */
+  private def positionalIndex(prefix: String, rows: Seq[PageRow]): (String, TableIO) = {
+    val root = tmpDir(prefix)
+    val io = new TableIO(spark, root)
+    SyncJob.run(spark, io, spark.createDataset(rows), ts(rows.size.toLong))
+    IndexPosJob.run(spark, io, spark.createDataset(rows))
+    (root, io)
+  }
+
+  private def phrase(reader: IndexReader, q: String, k: Int = 10): Seq[Hit] =
+    Phrase.topK(reader, q, k).toSeq
+
+  /** Each phrase on a fresh reader equals the oracle over `live`. */
+  private def check(root: String, live: Seq[PageRow], phrases: String*): Unit = {
+    val reader = new IndexReader(spark, root)
+    phrases.foreach { q =>
+      assert(bits(phrase(reader, q)) == bits(PhraseOracle.topK(live, q, 10)),
+        s"phrase [$q] diverged (live=${live.size}, version ${reader.version})")
+    }
+  }
+
+  private def withProp[A](key: String, value: String)(f: => A): A = {
+    val prev = sys.props.get(key)
+    sys.props(key) = value
+    try f finally prev match {
+      case Some(v) => sys.props(key) = v
+      case None => sys.props.remove(key)
+    }
+  }
+
+  private def withBucketBits[A](b: Int)(f: => A): A =
+    try withProp("graft.docid.bucketBits", b.toString) {
+      DocIds.refreshBucketBits(); f
+    } finally DocIds.refreshBucketBits()
+
   val N = 600
-  lazy val posDir: String = {
-    val d = tmpDir("graft-posidx") + "/pos"
-    Positional.writeBlocks(Corpus.pages(spark, N, 4), d)
-    d
-  }
-
-  /** Naive oracle over an explicit live-row set. */
-  private def oraclePhraseOver(rows: Seq[PageRow], phrase: String,
-                               k: Int): Seq[Hit] = {
-    val terms = graft.analysis.Tokenizer.tokenize(phrase).toSeq
-    val docs = rows.map { p =>
-      (DocIds.docId(p.url), graft.analysis.Tokenizer.tokenize(p.text))
-    }
-    val n = rows.size.toLong
-    val avgdl = docs.map(_._2.length.toLong).sum.toDouble / n
-    val matches = docs.flatMap { case (docId, toks) =>
-      var tf = 0
-      var i = 0
-      while (i + terms.length <= toks.length) {
-        var ok = true
-        var j = 0
-        while (ok && j < terms.length) { ok = toks(i + j) == terms(j); j += 1 }
-        if (ok) tf += 1
-        i += 1
-      }
-      if (tf > 0) Some((docId, toks.length, tf)) else None
-    }
-    if (matches.isEmpty) return Seq.empty
-    val idf = Bm25.idf(n, matches.length.toLong)
-    matches.map { case (d, dl, tf) => Hit(d, Bm25.termScore(idf, tf, dl, avgdl)) }
-      .sortBy(h => (-h.score, h.docId))
-      .take(k)
-  }
-
-  private def oraclePhrase(phrase: String, k: Int): Seq[Hit] =
-    oraclePhraseOver(Corpus.localRows(N), phrase, k)
-
-  private def engine(phrase: String, k: Int): Seq[Hit] = {
-    val docs = Corpus.localRows(N)
-    val n = N.toLong
-    val avgdl = docs.map(p =>
-      graft.analysis.Tokenizer.tokenize(p.text).length.toLong).sum.toDouble / n
-    Phrase.topK(spark, posDir, phrase, k, n, avgdl).toSeq
-  }
+  lazy val (root600, io600) = positionalIndex("graft-posidx", Corpus.localRows(N))
 
   // phrases that exist in the corpus grammar: pick real bigrams from doc 0
   lazy val samplePhrases: Seq[String] = {
@@ -71,44 +73,58 @@ class PhraseSpec extends SparkTestBase {
       "zzz yyy")                         // no-hit phrase
   }
 
+  /** A segment's positional blocks. */
+  private def posBlocks(io: TableIO): Array[PosBlock] = {
+    val seg = io.manifest(io.currentVersion().get).segments.head
+    spark.read.parquet(s"${io.segmentDir(seg)}/pos").as[PosBlock].collect()
+  }
+
   test("phrase top-k matches the naive oracle") {
-    samplePhrases.foreach { ph =>
-      val got = engine(ph, 10).map(h => (h.docId, h.score))
-      val want = oraclePhrase(ph, 10).map(h => (h.docId, h.score))
-      assert(got == want, s"phrase [$ph] diverged")
-    }
+    check(root600, Corpus.localRows(N), samplePhrases: _*)
   }
 
   test("title phrase finds exactly its document") {
-    val got = engine("document 7", 10)
+    val got = phrase(new IndexReader(spark, root600), "document 7")
     assert(got.length == 1)
     assert(got.head.docId == DocIds.docId(Corpus.url(7L)))
   }
 
   test("no-hit phrase returns empty") {
-    assert(engine("zzz yyy", 10).isEmpty)
+    assert(phrase(new IndexReader(spark, root600), "zzz yyy").isEmpty)
+  }
+
+  test("a phrase with a term the dict lacks runs no Spark job") {
+    val root = root600 // built before the count starts
+    val jobs = new AtomicInteger
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    TestBus.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(l)
+    try {
+      val reader = new IndexReader(spark, root)
+      assert(phrase(reader, "document zzzznotaword").isEmpty)
+      assert(phrase(reader, "zzzznotaword").isEmpty)
+      TestBus.drain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(l)
+    assert(jobs.get == 0, s"${jobs.get} Spark jobs for a phrase the dict rules out")
   }
 
   test("positional block roundtrip preserves positions") {
     val toks = graft.analysis.Tokenizer.tokenize(Corpus.text(3))
     val want = toks.zipWithIndex.groupBy(_._1)
       .map { case (t, xs) => t -> xs.map(_._2).toSeq }
-    import spark.implicits._
-    val blocks = spark.read.parquet(posDir).as[graft.index.PosBlock]
     val docId = DocIds.docId(Corpus.url(3L))
-    val got = blocks.collect()
-      .flatMap(Positional.decodeBlock)
-      .collect { case (d, _, ps) if d == docId => ps }
-    // reconstruct per-term positions for doc 3 from the index
-    val gotByTerm = blocks.collect().flatMap { b =>
+    // reconstruct per-term positions for doc 3 from the segment's pos
+    val gotByTerm = posBlocks(io600).flatMap { b =>
       Positional.decodeBlock(b).collect {
         case (d, _, ps) if d == docId => b.term -> ps.toSeq
       }
     }.toMap
+    assert(gotByTerm.nonEmpty)
     want.foreach { case (t, ps) =>
       assert(gotByTerm(t) == ps, s"positions mismatch for term $t")
     }
-    assert(got.nonEmpty)
   }
 
   test("stopword phrase: cursors keep decoded positions O(terms × block)") {
@@ -117,27 +133,20 @@ class PhraseSpec extends SparkTestBase {
     // (~hundreds of thousands of positions) into per-term maps in one
     // task; the cursor intersection must keep only a couple of 128-doc
     // blocks resident
-    val prev = sys.props.get("graft.docid.bucketBits")
-    sys.props("graft.docid.bucketBits") = "1"
-    DocIds.refreshBucketBits()
-    try {
+    withBucketBits(1) {
       val big = 12000
-      val dir = tmpDir("graft-posbig") + "/pos"
-      Positional.writeBlocks(Corpus.pages(spark, big, 8), dir)
       val rows = Corpus.localRows(big)
-      val n = big.toLong
-      val avgdl = rows.map(p =>
-        graft.analysis.Tokenizer.tokenize(p.text).length.toLong).sum.toDouble / n
+      val (root, _) = positionalIndex("graft-posbig", rows)
       // total positions of the two stopwords (the memory the old code held)
       val totalPositions = rows.iterator.map(p =>
         graft.analysis.Tokenizer.tokenize(p.text)
           .count(t => t == "the" || t == "of").toLong).sum
       assert(totalPositions > 200000L, s"corpus too small: $totalPositions")
+      val reader = new IndexReader(spark, root)
       Phrase.resetResidentTracking()
-      val got = Phrase.topK(spark, dir, "of the", 10, n, avgdl).toSeq
-        .map(h => (h.docId, h.score))
-      val want = oraclePhraseOver(rows, "of the", 10).map(h => (h.docId, h.score))
-      assert(got == want, "stopword phrase diverged")
+      val got = phrase(reader, "of the")
+      assert(bits(got) == bits(PhraseOracle.topK(rows, "of the", 10)),
+        "stopword phrase diverged")
       val resident = Phrase.maxResidentPositions.get()
       assert(resident > 0)
       assert(resident < totalPositions / 20,
@@ -147,18 +156,12 @@ class PhraseSpec extends SparkTestBase {
       // thousands of "of the" matches, but the scoring path must buffer
       // only its bounded heap + flush run (O(k)), never the bucket's
       // matches (the r4 shape did ms.toArray.sortBy — O(bucket) resident)
-      val matchCount = oraclePhraseOver(rows, "of the", Int.MaxValue).length
+      val matchCount = PhraseOracle.topK(rows, "of the", Int.MaxValue).length
       assert(matchCount > 3000, s"corpus too small: $matchCount matches")
       val mres = Phrase.maxResidentMatches.get()
       assert(mres > 0)
       assert(mres <= 2L * 10 + 1,
         s"scoring buffered $mres match tuples of $matchCount — not O(k)")
-    } finally {
-      prev match {
-        case Some(v) => sys.props("graft.docid.bucketBits") = v
-        case None => sys.props.remove("graft.docid.bucketBits")
-      }
-      DocIds.refreshBucketBits()
     }
   }
 
@@ -168,31 +171,23 @@ class PhraseSpec extends SparkTestBase {
     // slice the r5 shape materialized (bs.map(_.block).toArray), whose
     // residency scaled 1/2^bucketBits with the index. The bound is now
     // independent of bucket width and corpus size.
-    val prev = sys.props.get("graft.docid.bucketBits")
-    sys.props("graft.docid.bucketBits") = "4"
-    DocIds.refreshBucketBits()
-    try {
+    withBucketBits(4) {
       val big = 12000
-      val dir = tmpDir("graft-posslice") + "/pos"
-      Positional.writeBlocks(Corpus.pages(spark, big, 8), dir)
       val rows = Corpus.localRows(big)
-      val n = big.toLong
-      val avgdl = rows.map(p =>
-        graft.analysis.Tokenizer.tokenize(p.text).length.toLong).sum.toDouble / n
-      import spark.implicits._
-      val all = spark.read.parquet(dir).as[graft.index.PosBlock].collect()
-      def sz(b: graft.index.PosBlock): Long =
+      val (root, io) = positionalIndex("graft-posslice", rows)
+      val all = posBlocks(io)
+      def sz(b: PosBlock): Long =
         (b.docIdsVB.length + b.tfsVB.length + b.dlsVB.length +
           b.posVB.length).toLong
       val termBytes = all.iterator
         .filter(b => b.term == "of" || b.term == "the").map(sz).sum
       val indexBytes = all.iterator.map(sz).sum
       assert(termBytes > 100000L, s"corpus too small: $termBytes bytes")
+      val reader = new IndexReader(spark, root)
       Phrase.resetResidentTracking()
-      val got = Phrase.topK(spark, dir, "of the", 10, n, avgdl).toSeq
-        .map(h => (h.docId, h.score))
-      val want = oraclePhraseOver(rows, "of the", 10).map(h => (h.docId, h.score))
-      assert(got == want, "stopword phrase diverged at bucketBits=4")
+      val got = phrase(reader, "of the")
+      assert(bits(got) == bits(PhraseOracle.topK(rows, "of the", 10)),
+        "stopword phrase diverged at bucketBits=4")
       val res = Phrase.maxResidentCompressedBytes.get()
       val maxBlock = all.iterator
         .filter(b => b.term == "of" || b.term == "the").map(sz).max
@@ -206,49 +201,38 @@ class PhraseSpec extends SparkTestBase {
           "worse than even the old 1/2^bits bucket slice")
       assert(res < indexBytes / 20,
         s"one task held $res of the index's $indexBytes compressed bytes")
-    } finally {
-      prev match {
-        case Some(v) => sys.props("graft.docid.bucketBits") = v
-        case None => sys.props.remove("graft.docid.bucketBits")
-      }
-      DocIds.refreshBucketBits()
     }
   }
 
   test("maintained posindex: purge + sync answered live, gaps refuse") {
     val root = tmpDir("graft-poslsm")
     val io = new TableIO(spark, root)
-    val M = 500
+    val M = 400
     val rows = Corpus.localRows(M)
-    def urlIdx(p: PageRow): Int = p.url.split("/").last.toInt
-    def ts(i: Long) = new Timestamp(Corpus.warcTsMillis(i))
     SyncJob.run(spark, io, spark.createDataset(rows), ts(M))
 
-    // base built from the live snapshot, stamped with the current version
-    Positional.build(spark, spark.createDataset(rows), s"$root/posindex",
-      io.currentVersion())
-
-    def phrase(q: String, live: Seq[PageRow]): Unit = {
-      val reader = new IndexReader(spark, root)
-      val got = Phrase.topKLive(spark, io, s"$root/posindex", q, 10, reader)
-        .toSeq.map(h => (h.docId, h.score))
-      val want = oraclePhraseOver(live, q, 10).map(h => (h.docId, h.score))
-      assert(got == want, s"phrase [$q] diverged (live=${live.size})")
+    // gaps: a version without positions refuses phrase, and index-pos
+    // refuses pages that miss a live doc
+    val e = intercept[IllegalStateException] {
+      Phrase.topK(new IndexReader(spark, root), "document 7", 10)
     }
-    phrase("document 7", rows)
+    assert(e.getMessage.contains("run index-pos"), e.getMessage)
+    val e2 = intercept[IllegalStateException] {
+      IndexPosJob.run(spark, io, spark.createDataset(rows.filter(urlIdx(_) != 11)))
+    }
+    assert(e2.getMessage.contains("1 live docs"), e2.getMessage)
+    assert(!io.manifest(io.currentVersion().get).positions)
+    IndexPosJob.run(spark, io, spark.createDataset(rows))
+    check(root, rows, "document 7", "the the")
 
-    // purge docs >= 450: NO index-pos rerun — the docs-join liveness must
-    // exclude them (both from results and from the phrase df)
-    val kept = rows.filter(urlIdx(_) < 450)
+    // purge docs >= 350: their positions stay in the segment, dead by the
+    // tombstones (both from results and from the phrase df)
+    val kept = rows.filter(urlIdx(_) < 350)
     PurgeJob.run(spark, io, spark.createDataset(kept), ts(M + 1))
-    phrase("the the", kept)
-    phrase("document 455", kept) // purged doc's title: must be gone
-    assert(Phrase.topKLive(spark, io, s"$root/posindex", "document 455", 10,
-      new IndexReader(spark, root)).isEmpty)
+    check(root, kept, "the the", "document 355", "document 7")
 
-    // sync an update (doc 7 rewritten) + 10 new docs: the delta's pos
-    // blocks ride along automatically; old doc-7 positions are stale and
-    // must not answer
+    // sync an update (doc 7 rewritten) + 10 new docs: the batch's
+    // positions ride in its segment; doc 7's old positions are dead
     val updated = kept.map { p =>
       if (urlIdx(p) == 7)
         p.copy(warc_ts = new Timestamp(Corpus.warcTsMillis(7L + 20L * M)),
@@ -256,359 +240,132 @@ class PhraseSpec extends SparkTestBase {
       else p
     }
     val added = Corpus.localRows(M + 10).drop(M).zipWithIndex.map {
-      case (p, j) =>
-        p.copy(warc_ts = new Timestamp(Corpus.warcTsMillis(21L * M + j)))
+      case (p, j) => p.copy(warc_ts = new Timestamp(Corpus.warcTsMillis(21L * M + j)))
     }
-    SyncJob.run(spark, io, spark.createDataset(updated ++ added), ts(22L * M))
     val live2 = updated ++ added
-    // doc 7's OLD title phrase must be dead; its NEW text must answer;
-    // the added docs' titles must answer
-    assert(Phrase.topKLive(spark, io, s"$root/posindex", "document 7", 10,
-      new IndexReader(spark, root)).isEmpty)
-    phrase("document 9999", live2)
-    phrase(s"document ${M + 5}", live2)
-    phrase("the the", live2)
+    SyncJob.run(spark, io, spark.createDataset(live2), ts(22L * M))
+    assert(phrase(new IndexReader(spark, root), "document 7").isEmpty)
+    check(root, live2, "document 9999", s"document ${M + 5}", "the the")
 
-    // fold: base + deltas collapse to ONE live base stamped with the
-    // current version; answers unchanged, deltas gone. Before folding,
-    // stash a copy of one delta dir to simulate a crash-between-renames
-    // later (fold swaps the base, then deletes consumed deltas — a crash
-    // between the two leaves a delta subsumed by the new base).
-    val deltaNames = io.listDirNames(s"$root/posindex/delta")
-    assert(deltaNames.nonEmpty)
-    val lingering = deltaNames.head
-    val fsPre = new org.apache.hadoop.fs.Path(root).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    org.apache.hadoop.fs.FileUtil.copy(fsPre,
-      new org.apache.hadoop.fs.Path(s"$root/posindex/delta/$lingering"),
-      fsPre, new org.apache.hadoop.fs.Path(s"$root/posindex/delta-stash"),
-      false, spark.sparkContext.hadoopConfiguration)
-    Phrase.foldPosindex(spark, io, s"$root/posindex")
-    assert(Phrase.sources(spark, io, s"$root/posindex").size == 1,
-      "fold must leave a single base source")
-    assert(Positional.builtFrom(spark, s"$root/posindex/base")
-      .contains(io.currentVersion().get))
-    phrase("document 9999", live2)
-    phrase("the the", live2)
-    assert(Phrase.topKLive(spark, io, s"$root/posindex", "document 7", 10,
-      new IndexReader(spark, root)).isEmpty,
-      "folded base must not resurrect out-stamped entries")
-
-    // crashed fold: restore the consumed delta (as if the fold died
-    // between the base swap and the delta deletes). Its stamp <= the new
-    // base's stamp, so sources() must drop it as subsumed — a doc must
-    // NOT double-count via the lingering delta + the folded base
-    fsPre.rename(new org.apache.hadoop.fs.Path(s"$root/posindex/delta-stash"),
-      new org.apache.hadoop.fs.Path(s"$root/posindex/delta/$lingering"))
-    assert(Phrase.sources(spark, io, s"$root/posindex").size == 1,
-      "a delta subsumed by the base must be dropped (crashed-fold healing)")
-    phrase("document 9999", live2)
-    phrase("the the", live2)
-    fsPre.delete(
-      new org.apache.hadoop.fs.Path(s"$root/posindex/delta/$lingering"), true)
-
-    // coverage gap: a batch synced with the posindex base REMOVED has no
-    // delta — phrase must refuse crisply, not silently miss docs
-    val fs = new org.apache.hadoop.fs.Path(root).getFileSystem(
-      spark.sparkContext.hadoopConfiguration)
-    fs.rename(new org.apache.hadoop.fs.Path(s"$root/posindex/base"),
-      new org.apache.hadoop.fs.Path(s"$root/posindex/base.hidden"))
-    val more = live2 ++ Corpus.localRows(M + 12).drop(M + 10).zipWithIndex
-      .map { case (p, j) =>
-        p.copy(warc_ts = new Timestamp(Corpus.warcTsMillis(23L * M + j)))
-      }
-    SyncJob.run(spark, io, spark.createDataset(more), ts(24L * M))
-    fs.rename(new org.apache.hadoop.fs.Path(s"$root/posindex/base.hidden"),
-      new org.apache.hadoop.fs.Path(s"$root/posindex/base"))
-    val e = intercept[IllegalStateException] {
-      Phrase.topKLive(spark, io, s"$root/posindex", "document 7", 10,
-        new IndexReader(spark, root))
+    // reconcile: doc 12's source row changed content and warc_ts below
+    // the watermark — re-indexed with its new positions
+    val live3 = live2.map { p =>
+      if (urlIdx(p) == 12)
+        p.copy(warc_ts = new Timestamp(p.warc_ts.getTime + 500L),
+          html = Corpus.html(7777L), text = Corpus.text(7777L))
+      else p
     }
-    assert(e.getMessage.contains("does not cover"), e.getMessage)
+    assert(ReconcileJob.run(spark, io, spark.createDataset(live3), ts(23L * M)).reindexed == 1)
+    check(root, live3, "document 7777", "document 12", "the the")
+  }
+
+  test("positions follow runMultiTs and in-batch re-crawls") {
+    val root = tmpDir("graft-posmulti")
+    val io = new TableIO(spark, root)
+    def recrawl(p: PageRow, secs: Long, text: String): PageRow =
+      p.copy(warc_ts = new Timestamp(p.warc_ts.getTime + secs * 1000L),
+        html = (s"<html><head><title>doc ${urlIdx(p)}</title></head><body><p>" + text +
+          "</p></body></html>").getBytes("UTF-8"),
+        text = text)
+    val base = Corpus.localRows(150)
+    // the initial window holds two crawls of url 5: the newer one wins
+    val first = base :+ recrawl(base(5), 3600, "refreshed multidupa page")
+    SyncJob.runMultiTs(spark, io, spark.createDataset(first).toDF(),
+      Seq("warc_ts"), ts(10000))
+    IndexPosJob.run(spark, io, spark.createDataset(first))
+    val live1 = base.updated(5, first.last)
+    check(root, live1, "refreshed multidupa page", "document 5", "the the")
+    // a later window: two crawls of url 7, the newest wins
+    val newer = recrawl(base(7), 20500, "newer multidupc page")
+    SyncJob.runMultiTs(spark, io, spark.createDataset(Seq(
+      recrawl(base(7), 20000, "older multidupb page"), newer)).toDF(),
+      Seq("warc_ts"), ts(30000))
+    check(root, live1.updated(7, newer), "newer multidupc page",
+      "older multidupb page", "document 7", "the the")
+    // an in-batch re-crawl through the plain sync path
+    val again = recrawl(base(9), 40000, "again multidupd page")
+    SyncJob.run(spark, io, spark.createDataset(Seq(
+      recrawl(base(9), 39000, "first multidupe page"), again)), ts(50000))
+    check(root, live1.updated(7, newer).updated(9, again),
+      "again multidupd page", "first multidupe page", "document 9")
   }
 
   test("stale reader: concurrent publish/fold can never double-count") {
-    // ADVICE r4 #3: a delta adopted AFTER a reader's snapshot (stamp >
-    // reader.version) used to let an UPDATED doc pass liveness for both
-    // its old source and the new delta — topKLive must answer the
-    // reader's snapshot exactly (new deltas excluded), and refuse
-    // crisply once a fold has consumed the old sources
-    val root = tmpDir("graft-posstale")
-    val io = new TableIO(spark, root)
+    // a reader answers its own snapshot: after a later publish rewrites
+    // doc 7 and after a compaction folds the segments, an older reader
+    // sees its own version's doc 7 exactly once, never the new content
     val M = 300
     val rows = Corpus.localRows(M)
-    def ts(i: Long) = new Timestamp(Corpus.warcTsMillis(i))
-    SyncJob.run(spark, io, spark.createDataset(rows), ts(M))
-    Positional.build(spark, spark.createDataset(rows), s"$root/posindex",
-      io.currentVersion())
+    val (root, io) = positionalIndex("graft-posstale", rows)
     val stale = new IndexReader(spark, root) // snapshot V1
-
-    // doc 7 is rewritten by a later publish (delta stamped V2 > V1)
     val updated = rows.map { p =>
-      if (p.url.split("/").last.toInt == 7)
+      if (urlIdx(p) == 7)
         p.copy(warc_ts = new Timestamp(Corpus.warcTsMillis(7L + 20L * M)),
           html = Corpus.html(8888L), text = Corpus.text(8888L))
       else p
     }
     SyncJob.run(spark, io, spark.createDataset(updated), ts(22L * M))
-
-    // the stale reader answers ITS snapshot: old doc-7 content present
-    // exactly once, new content invisible — not a mix, never a double
-    val old7 = Phrase.topKLive(spark, io, s"$root/posindex", "document 7",
-      10, stale)
-    assert(old7.length == 1, s"expected the V1 doc once, got ${old7.length}")
-    assert(old7.head.docId == DocIds.docId(Corpus.url(7L)))
-    assert(Phrase.topKLive(spark, io, s"$root/posindex", "document 8888",
-      10, stale).isEmpty, "a post-snapshot delta leaked into a stale reader")
-    // a fresh reader sees the update
-    val fresh = new IndexReader(spark, root)
-    assert(Phrase.topKLive(spark, io, s"$root/posindex", "document 7",
-      10, fresh).isEmpty)
-    assert(Phrase.topKLive(spark, io, s"$root/posindex", "document 8888",
-      10, fresh).length == 1)
-
-    // after a fold (base stamped V2 > V1) the stale snapshot is
-    // unanswerable — refuse crisply, never silently answer V2
-    Phrase.foldPosindex(spark, io, s"$root/posindex")
-    val e = intercept[IllegalStateException] {
-      Phrase.topKLive(spark, io, s"$root/posindex", "document 7", 10, stale)
+    val stale2 = new IndexReader(spark, root) // snapshot V2
+    def answers(r: IndexReader, live: Seq[PageRow]): Unit =
+      Seq("document 7", "document 8888", "the the").foreach { q =>
+        assert(bits(phrase(r, q)) == bits(PhraseOracle.topK(live, q, 10)),
+          s"[$q] on version ${r.version}")
+      }
+    answers(stale, rows)
+    answers(stale2, updated)
+    // a compaction folds V2's two segments into one
+    val added = Corpus.localRows(M + 5).drop(M).zipWithIndex.map {
+      case (p, j) => p.copy(warc_ts = new Timestamp(Corpus.warcTsMillis(23L * M + j)))
     }
-    assert(e.getMessage.contains("newer"), e.getMessage)
-    assert(Phrase.topKLive(spark, io, s"$root/posindex", "document 8888",
-      10, new IndexReader(spark, root)).length == 1)
+    withProp("graft.compact.segments", "2") {
+      SyncJob.run(spark, io, spark.createDataset(updated ++ added), ts(24L * M))
+    }
+    val fresh = new IndexReader(spark, root)
+    assert(fresh.segments.size == 1, s"no compaction: ${fresh.segments}")
+    answers(stale, rows)
+    answers(stale2, updated)
+    answers(fresh, updated ++ added)
   }
 
   test("posindex deltas auto-fold at the compaction threshold") {
-    // the dict-chain / segment rule mirrored: a deployment that never
-    // runs compact-pos must not degrade phrase reads linearly in batch
-    // count — SyncJob's publish stage folds when delta dirs reach the
-    // threshold (it already holds the single-flight lock)
-    val prev = sys.props.get("graft.compact.segments")
-    sys.props("graft.compact.segments") = "3"
-    try {
-      val root = tmpDir("graft-posautofold")
-      val io = new TableIO(spark, root)
+    // each batch's positions ride in its segment; compaction rewrites
+    // them with the segment's other dirs, through the tombstones and the
+    // batch's overrides, whether a sync or a purge triggers it
+    withProp("graft.compact.segments", "3") {
       val M = 200
-      def ts(i: Long) = new Timestamp(Corpus.warcTsMillis(i))
-      SyncJob.run(spark, io, spark.createDataset(Corpus.localRows(M)), ts(M))
-      val v0 = io.currentVersion().get
-      Positional.build(spark, spark.createDataset(Corpus.localRows(M)),
-        s"$root/posindex", io.currentVersion())
-      (1 to 5).foreach { r =>
-        val all = Corpus.localRows(M + 5 * r).zipWithIndex.map { case (p, i) =>
-          if (i < M + 5 * (r - 1)) p
-          else p.copy(warc_ts = new Timestamp(Corpus.warcTsMillis(40L * M + i)))
+      var live: Seq[PageRow] = Corpus.localRows(M)
+      val (root, io) = positionalIndex("graft-poscompact", live)
+      def segs = io.manifest(io.currentVersion().get).segments
+      val segCounts = (1 to 5).map { r =>
+        // 5 new docs, and doc r re-crawled with new content
+        val fresh = Corpus.localRows(M + 5 * r).drop(M + 5 * (r - 1)).zipWithIndex.map {
+          case (p, j) => p.copy(warc_ts = new Timestamp(Corpus.warcTsMillis(40L * M * r + j)))
         }
-        SyncJob.run(spark, io, spark.createDataset(all), ts(50L * M + r))
-        val nDeltas = io.listDirNames(s"$root/posindex/delta").size
-        assert(nDeltas < 3,
-          s"after sync $r: $nDeltas posindex deltas — auto-fold missing")
+        live = live.map { p =>
+          if (urlIdx(p) == r) p.copy(warc_ts = new Timestamp(Corpus.warcTsMillis(40L * M * r + 10)),
+            html = Corpus.html(6000L + r), text = Corpus.text(6000L + r))
+          else p
+        } ++ fresh
+        SyncJob.run(spark, io, spark.createDataset(live), ts(40L * M * r + 20))
+        check(root, live, s"document ${6000 + r}", s"document ${M + 5 * r - 2}",
+          s"document $r", "the the")
+        segs.size
       }
-      // a fold ran: the base is stamped past the initial version
-      val stamp = Positional.builtFrom(spark, s"$root/posindex/base").get
-      assert(stamp > v0, s"base stamp $stamp not advanced past $v0")
-      // and phrase answers over the final live set stay exact
-      val live = Corpus.localRows(M + 25).zipWithIndex.map { case (p, i) =>
-        if (i < M + 20) p
-        else p.copy(warc_ts = new Timestamp(Corpus.warcTsMillis(40L * M + i)))
-      }
-      val reader = new IndexReader(spark, root)
-      val got = Phrase.topKLive(spark, io, s"$root/posindex",
-        s"document ${M + 22}", 10, reader).toSeq.map(h => (h.docId, h.score))
-      // oracle over the live rows; texts are keyed by url index so the
-      // ts rewrite above does not change content
-      val want = oraclePhraseOver(live, s"document ${M + 22}", 10)
-        .map(h => (h.docId, h.score))
-      assert(got == want, "auto-folded posindex diverged")
-    } finally {
-      prev match {
-        case Some(v) => sys.props("graft.compact.segments") = v
-        case None => sys.props.remove("graft.compact.segments")
-      }
-    }
-  }
-
-  test("fold refuses a coverage gap; auto-fold failure never fails the sync") {
-    // a batch synced while no posindex base existed has no pos delta: the
-    // query path refuses crisply. The FOLD must refuse the same gap — a
-    // new base stamped at the current version would claim coverage and
-    // convert the refusal into silently-missing phrase results forever.
-    // And the publish-stage auto-fold is best-effort maintenance: its
-    // refusal must not fail (or, repeated, error-budget-halt) the main
-    // sync pipeline.
-    val prevC = sys.props.get("graft.compact.segments")
-    sys.props("graft.compact.segments") = "2"
-    try {
-      val root = tmpDir("graft-posfoldgap")
-      val io = new TableIO(spark, root)
-      val M = 120
-      def ts(i: Long) = new Timestamp(Corpus.warcTsMillis(i))
-      SyncJob.run(spark, io, spark.createDataset(Corpus.localRows(M)), ts(M))
-      Positional.build(spark, spark.createDataset(Corpus.localRows(M)),
-        s"$root/posindex", io.currentVersion())
-      val fs = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      def p(s: String) = new org.apache.hadoop.fs.Path(s)
-      // the gap: base aside, sync a batch (stages no pos delta), restore.
-      // New rows are re-stamped past the watermark so each batch picks
-      // up exactly its 10 (or 5) fresh docs.
-      def grown(upTo: Int, prevUpTo: Int, shift: Long) =
-        Corpus.localRows(upTo).zipWithIndex.map { case (pg, i) =>
-          if (i < prevUpTo) pg
-          else pg.copy(warc_ts = new Timestamp(Corpus.warcTsMillis(shift + i)))
+      assert(segCounts.contains(1), s"no sync compaction across 5 batches: $segCounts")
+      // grow to the threshold, then a purge compacts
+      while (segs.size < 3) {
+        val n = live.size
+        val fresh = Corpus.localRows(M + 40).drop(n).take(3).zipWithIndex.map {
+          case (p, j) => p.copy(warc_ts = new Timestamp(Corpus.warcTsMillis(400L * M + 10L * n + j)))
         }
-      fs.rename(p(s"$root/posindex"), p(s"$root/posindex.aside"))
-      SyncJob.run(spark, io,
-        spark.createDataset(grown(M + 10, M, 10L * M)), ts(12L * M))
-      fs.rename(p(s"$root/posindex.aside"), p(s"$root/posindex"))
-      // a direct fold refuses crisply
-      val e = intercept[IllegalStateException] {
-        Phrase.foldPosindex(spark, io, s"$root/posindex")
+        live = live ++ fresh
+        SyncJob.run(spark, io, spark.createDataset(live), ts(400L * M + 10L * n + 5))
       }
-      assert(e.getMessage.contains("refusing to fold"))
-      // accumulate deltas past the threshold so publish auto-folds; the
-      // fold keeps refusing (the gap batch has no delta) but each sync
-      // must still publish and burn no error budget
-      (1 to 3).foreach { r =>
-        val res = SyncJob.run(spark, io,
-          spark.createDataset(
-            grown(M + 10 + 5 * r, M + 10 + 5 * (r - 1), 20L * M * r)),
-          ts(20L * M * r + 2 * M))
-        assert(res.deltaRows == 5, s"sync $r failed under auto-fold refusal")
-        assert(Metrics.errorCount(spark, io, res.batchId, SyncJob.Process) == 0,
-          s"auto-fold refusal burned error budget on sync $r")
-      }
-      // the gap is still visible to queries (crisp refusal, not silence)
-      val reader = new IndexReader(spark, root)
-      val qe = intercept[IllegalStateException] {
-        Phrase.topKLive(spark, io, s"$root/posindex", "document 3", 5, reader)
-      }
-      assert(qe.getMessage.contains("does not cover"))
-    } finally {
-      prevC match {
-        case Some(v) => sys.props("graft.compact.segments") = v
-        case None => sys.props.remove("graft.compact.segments")
-      }
+      live = live.filterNot(p => urlIdx(p) % 10 == 3)
+      PurgeJob.run(spark, io, spark.createDataset(live), ts(500L * M))
+      assert(segs.size == 1, s"the purge did not compact: $segs")
+      assert(io.manifest(io.currentVersion().get).positions)
+      check(root, live, "document 13", "document 14", "document 6002", "the the")
     }
-  }
-
-  test("crashed fold: lingering subsumed deltas are swept by the next fold") {
-    // a crash between a fold's base swap and its delta deletes leaves
-    // delta dirs stamped <= the new base. sources() hides them (no
-    // double count — the stale-reader test), but the sweep must work
-    // from the RAW listing: if the next fold deleted only what it
-    // enumerates, the leaked dirs would sit at the auto-fold threshold
-    // forever and every publish would pay a full fold.
-    val root = tmpDir("graft-posfoldcrash")
-    val io = new TableIO(spark, root)
-    val M = 150
-    def ts(i: Long) = new Timestamp(Corpus.warcTsMillis(i))
-    SyncJob.run(spark, io, spark.createDataset(Corpus.localRows(M)), ts(M))
-    Positional.build(spark, spark.createDataset(Corpus.localRows(M)),
-      s"$root/posindex", io.currentVersion())
-    val base = Positional.builtFrom(spark, s"$root/posindex/base").get
-    // simulate the crash artifact: a delta stamped BELOW the base stamp
-    // (subsumed by definition; content is irrelevant to the sweep — use
-    // a copy of the base's parquet so the dir is a plausible delta)
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val stale = s"$root/posindex/delta/1970-01-01-T-00-00-00-000Z"
-    org.apache.hadoop.fs.FileUtil.copy(
-      fs, new org.apache.hadoop.fs.Path(s"$root/posindex/base"),
-      fs, new org.apache.hadoop.fs.Path(stale), false,
-      spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$stale/_built_from"), false)
-    assert(io.listDirNames(s"$root/posindex/delta").nonEmpty)
-    // queries ignore the leaked dir (stamp <= base): answers stay exact
-    val reader = new IndexReader(spark, root)
-    val got = Phrase.topKLive(spark, io, s"$root/posindex",
-      "document 3", 10, reader).toSeq.map(h => (h.docId, h.score))
-    val want = oraclePhraseOver(Corpus.localRows(M), "document 3", 10)
-      .map(h => (h.docId, h.score))
-    assert(got == want, "leaked subsumed delta changed phrase answers")
-    // the next fold sweeps it even though sources() never enumerates it
-    Phrase.foldPosindex(spark, io, s"$root/posindex")
-    assert(io.listDirNames(s"$root/posindex/delta").isEmpty,
-      "subsumed delta dir survived the fold sweep")
-    assert(Positional.builtFrom(spark, s"$root/posindex/base").get >= base)
-    val got2 = Phrase.topKLive(spark, io, s"$root/posindex",
-      "document 3", 10, new IndexReader(spark, root))
-      .toSeq.map(h => (h.docId, h.score))
-    assert(got2 == want, "fold sweep changed phrase answers")
-  }
-
-  test("crash between the fold's two renames: the next fold heals the swap") {
-    // the swap window (base moved to base.trash, base.next not yet
-    // renamed in) must not persist as "no base": the next fold under the
-    // lock rolls FORWARD when a complete base.next exists (its
-    // _built_from marker is the last file written before the swap
-    // starts) and rolls BACK from base.trash otherwise.
-    val root = tmpDir("graft-posswap")
-    val io = new TableIO(spark, root)
-    val M = 120
-    def ts(i: Long) = new Timestamp(Corpus.warcTsMillis(i))
-    SyncJob.run(spark, io, spark.createDataset(Corpus.localRows(M)), ts(M))
-    Positional.build(spark, spark.createDataset(Corpus.localRows(M)),
-      s"$root/posindex", io.currentVersion())
-    val want = oraclePhraseOver(Corpus.localRows(M), "document 3", 10)
-      .map(h => (h.docId, h.score))
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def p(s: String) = new org.apache.hadoop.fs.Path(s)
-    def phrase() = Phrase.topKLive(spark, io, s"$root/posindex",
-      "document 3", 10, new IndexReader(spark, root))
-      .toSeq.map(h => (h.docId, h.score))
-    // roll-forward: crash left the NEW base complete in base.next
-    fs.rename(p(s"$root/posindex/base"), p(s"$root/posindex/base.next"))
-    Phrase.foldPosindex(spark, io, s"$root/posindex")
-    assert(fs.exists(p(s"$root/posindex/base")), "roll-forward lost base")
-    assert(!fs.exists(p(s"$root/posindex/base.next")))
-    assert(phrase() == want, "roll-forward changed phrase answers")
-    // roll-back: crash left only the OLD base, parked in base.trash
-    // (base.next incomplete — no _built_from)
-    fs.rename(p(s"$root/posindex/base"), p(s"$root/posindex/base.trash"))
-    fs.mkdirs(p(s"$root/posindex/base.next"))
-    Phrase.foldPosindex(spark, io, s"$root/posindex")
-    assert(fs.exists(p(s"$root/posindex/base")), "roll-back lost base")
-    assert(!fs.exists(p(s"$root/posindex/base.trash")))
-    assert(phrase() == want, "roll-back changed phrase answers")
-  }
-
-  test("crashed swap heals on the NEXT SYNC, and interim batches keep " +
-      "staging pos deltas (no permanent coverage gap)") {
-    // the automatic path: a fold swap crashed between its two renames
-    // (base parked in base.trash, no base). The next ordinary sync batch
-    // must (a) still stage its positional delta — a batch synced while
-    // base is missing would otherwise become a coverage gap the healed
-    // base can never close — and (b) heal the swap during publish, so
-    // phrase queries recover with NO operator action and NO full
-    // index-pos rebuild.
-    val root = tmpDir("graft-posautoheal")
-    val io = new TableIO(spark, root)
-    val M = 120
-    def ts(i: Long) = new Timestamp(Corpus.warcTsMillis(i))
-    SyncJob.run(spark, io, spark.createDataset(Corpus.localRows(M)), ts(M))
-    Positional.build(spark, spark.createDataset(Corpus.localRows(M)),
-      s"$root/posindex", io.currentVersion())
-    val fs = new org.apache.hadoop.fs.Path(root)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def p(s: String) = new org.apache.hadoop.fs.Path(s)
-    // simulate the crash window: old base parked aside, nothing swapped in
-    fs.rename(p(s"$root/posindex/base"), p(s"$root/posindex/base.trash"))
-    // an ordinary incremental sync while the posindex is baseless
-    val all = Corpus.localRows(M + 30)
-    SyncJob.run(spark, io, spark.createDataset(all), ts(M + 30))
-    assert(fs.exists(p(s"$root/posindex/base")),
-      "sync publish did not heal the crashed swap")
-    assert(!fs.exists(p(s"$root/posindex/base.trash")))
-    val batchId = io.currentVersion().get
-    assert(fs.exists(p(s"$root/posindex/delta/$batchId")),
-      "interim batch did not stage its positional delta")
-    val got = Phrase.topKLive(spark, io, s"$root/posindex",
-      "document 3", 10, new IndexReader(spark, root))
-      .toSeq.map(h => (h.docId, h.score))
-    val want = oraclePhraseOver(all, "document 3", 10)
-      .map(h => (h.docId, h.score))
-    assert(got == want, "healed posindex gave wrong phrase answers")
   }
 }

@@ -2,12 +2,11 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.corpus.Corpus
-import graft.multimodal.Media
 import graft.query.IndexReader
 import graft.sources.TableIO
 import graft.streaming.StreamingSync
 
-/** Structured Streaming sync + multimodal plumbing tests. */
+/** Structured Streaming sync tests. */
 class StreamingMediaSpec extends SparkTestBase {
   import spark.implicits._
 
@@ -204,43 +203,5 @@ class StreamingMediaSpec extends SparkTestBase {
     assert(rows.length >= 4) // watermark holds back the last ~2 windows
     assert(rows.map(_.getAs[Long]("pages")).sum <= 400)
     rows.foreach(r => assert(r.getAs[Long]("pages") <= 60))
-  }
-
-  test("media: decode stage yields typed metadata with exact schema") {
-    val media = Media.fakeMediaTable(spark, 200, 4)
-    val decoded = Media.decodeMeta(media)
-    assert(decoded.schema.fieldNames.toSeq ==
-      Seq("media_id", "kind", "width", "height", "frames", "payload_bytes"))
-    val rows = decoded.collect()
-    assert(rows.length == 200)
-    rows.foreach { r =>
-      assert(Seq("image", "audio", "video").contains(r.kind))
-      assert(r.width >= 64 && r.width < 128)
-      assert(r.payload_bytes == 256)
-    }
-    // partitioning preserved: no shuffle introduced by the decode map
-    assert(decoded.rdd.getNumPartitions == media.rdd.getNumPartitions)
-  }
-
-  test("media: feature extraction produces normalized fixed-width vectors") {
-    val feats = Media.extractFeatures(Media.fakeMediaTable(spark, 100, 4))
-      .collect()
-    assert(feats.length == 100)
-    feats.foreach { f =>
-      assert(f.features.length == 16)
-      assert(math.abs(f.features.sum - 1.0f) < 1e-3)
-    }
-    // deterministic: same id → same vector across runs
-    val again = Media.extractFeatures(Media.fakeMediaTable(spark, 100, 8))
-      .collect().map(f => f.media_id -> f.features.toSeq).toMap
-    feats.foreach(f => assert(again(f.media_id) == f.features.toSeq))
-  }
-
-  test("media: frame sampling explodes to one row per frame") {
-    val frames = Media.sampleFrames(Media.fakeMediaTable(spark, 50, 2), 4)
-    assert(frames.schema.fieldNames.toSeq == Seq("media_id", "frame_idx", "frame"))
-    val counts = frames.groupBy($"media_id").count().collect()
-    assert(counts.length == 50)
-    counts.foreach(r => assert(r.getLong(1) == 4))
   }
 }

@@ -1,5 +1,6 @@
 package graft.query
 
+import org.apache.spark.CountingTaskContext
 import graft.index.{PosPosting, Positional}
 
 /** The JVM-global resident-positions counter must survive ABANDONED
@@ -42,5 +43,36 @@ class CursorLeakSpec extends graft.SparkTestBase {
     assert(Phrase.residentPositionsNow == 0L,
       s"abandoned task leaked ${Phrase.residentPositionsNow} resident " +
         "positions — the task-completion listener did not close cursors")
+  }
+
+  test("a task streaming many groups registers one task-end listener") {
+    // G (segment, bucket) groups of 10 docs, each holding the bigram: a
+    // listener per group would keep every finished group's cursors
+    // reachable until the task ends
+    import spark.implicits._
+    val G = 40
+    val postings = (0 until 10 * G).flatMap { i =>
+      Seq(PosPosting("alpha", i % G, i.toLong, 2, Seq(0)),
+          PosPosting("beta", i % G, i.toLong, 2, Seq(1)))
+    }
+    val rows = Positional.buildBlocks(spark.createDataset(postings), 1).collect()
+      .map(b => Phrase.SegPosBlock(b.term, b.bucket, b.blockId, b.firstDocId,
+        b.count, b.docIdsVB, b.tfsVB, b.dlsVB, b.posVB, "s1"))
+      .sortBy(b => (b.bucket, b.firstDocId, b.term, b.blockId))
+    def stream() = Phrase.streamGroups(rows.iterator, Seq("alpha", "beta"), "alpha")
+    Phrase.resetResidentTracking()
+    val ctx = new CountingTaskContext
+    assert(ctx.run(stream().size) == 10 * G)
+    assert(ctx.completionListeners.get == 1,
+      s"${ctx.completionListeners.get} listeners for one task over $G groups")
+    ctx.complete()
+    // abandoned mid-group: the one listener closes the open group
+    val abandoned = new CountingTaskContext
+    assert(abandoned.run(stream().next())._1 == 0L)
+    assert(Phrase.residentPositionsNow > 0L)
+    abandoned.complete()
+    assert(abandoned.completionListeners.get == 1)
+    assert(Phrase.residentPositionsNow == 0L,
+      s"abandoned stream leaked ${Phrase.residentPositionsNow} resident positions")
   }
 }
