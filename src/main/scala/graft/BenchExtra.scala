@@ -246,15 +246,16 @@ object BenchExtra {
           "the hits' rows on the driver, docId IN(...) pushed.",
         fmt(reader.docs.join(
           broadcast(Seq(graft.Hit(1L, 1.0)).toDF()), Seq("docId")))),
-      ("Update-path killed lookup (fwd bucket pruning)",
-        "The affected docIds resolve to fb= partition dirs and only " +
-          "those are passed to the scan (path-level pruning): the heavy " +
-          "tfs column of untouched buckets is structurally unreadable — " +
-          "the InMemoryFileIndex below lists 2 bucket dirs, not the " +
-          "whole fwd table.",
-        fmt(Tables.readFwdPruned(spark, io,
-          io.manifest(io.currentVersion().get).segments,
-          Seq(0L, Long.MinValue).toDF("docId")))),
+      ("Update-path killed lookup, Spark fallback",
+        "An append with at most Tables.KilledLocalMax affected docIds runs " +
+          "no plan: it reads their fwd rows on the driver, docId pushed as " +
+          "a sorted id set, so the page index of the flat, docId-sorted fwd " +
+          "files skips other docIds' pages. Past the budget, or over a " +
+          "distributed tombstone set, every segment's fwd scan joins the " +
+          "broadcast affected ids, then the tombstone anti-join " +
+          "(IndexTables.live; none here, the index has no tombstones).",
+        fmt(Tables.killedFrame(spark, io, Tables.loadCurrent(spark, io).get,
+          Seq(0L, Long.MinValue).toDF("docId"), 2L))),
       ("Dict-chain probe (3-link chain: full + two append deltas)",
         "The dict is an LSM chain — a full link plus signed per-append " +
           "deltas. Readers fold the links on the driver, term IN(...) " +

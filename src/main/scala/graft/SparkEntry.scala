@@ -298,12 +298,7 @@ object SparkEntry {
       col("text"),
       col("lang")).as[PageRow]
     val io = new graft.sources.TableIO(s, root)
-    // ephemeral single-query index: no update batch will ever probe its
-    // fwd table, so skip the fwd bucketing entirely — an EXPLICIT
-    // parameter, not a process-global sys.props mutation (which would
-    // race a concurrent job in the same JVM)
-    graft.sync.SyncJob.run(s, io, pages,
-      new java.sql.Timestamp(System.currentTimeMillis()), fwdBits = Some(0))
+    graft.sync.SyncJob.run(s, io, pages, new java.sql.Timestamp(System.currentTimeMillis()))
     val reader = new graft.query.IndexReader(s, root)
     // fetch deep (k=200) so the round-to-4-decimals re-rank below can
     // re-break ties the same way the SQL oracle does before the limit
@@ -531,23 +526,27 @@ object SparkEntry {
     minhashCandCache.clear()
     simhashCache.values.forEach(df => { df.unpersist(); () })
     simhashCache.clear()
-    adHocPersists.forEach(df => { df.unpersist(); () })
+    adHocPersists.values.forEach(df => { df.unpersist(); () })
     adHocPersists.clear()
   }
 
-  /** Per-query persisted frames from the large-corpus branches (candidate
-    * pair sets sized for a broadcast decision) — registered here so
-    * [[clearQueryCaches]] releases them; Spark's storage eviction handles
-    * pressure in between.
+  /** The persisted frame of each large-corpus query's last call
+    * (candidate pair sets sized for a broadcast decision), by query: a
+    * call releases its query's previous frame before persisting its own,
+    * so the set stays bounded by the query count however often they run;
+    * [[clearQueryCaches]] releases them all. A released frame that an
+    * earlier answer still references is recomputed, never wrong.
     */
-  private val adHocPersists =
-    new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()
+  private[graft] val adHocPersists =
+    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
 
-  private def persistForQuery(df: DataFrame): DataFrame = {
-    val p = df.persist()
-    adHocPersists.add(p)
-    p
-  }
+  private def persistForQuery(query: String, df: DataFrame): DataFrame =
+    // release first: persisting an equal plan first would share the old
+    // cache entry, which the release would then drop
+    adHocPersists.compute(query, (_, prev) => {
+      if (prev != null) prev.unpersist()
+      df.persist()
+    })
 
   /** 64-bit SimHash (md5-bit hyperplanes, tf-weighted ±1 votes per
     * occurrence), reported as two 32-bit halves in bigint columns
@@ -607,7 +606,7 @@ object SparkEntry {
     val cand =
       if (docsRows <= lshMaxBucket) cand0
       else {
-        val c = persistForQuery(cand0)
+        val c = persistForQuery("q_simhash_near", cand0)
         graft.sync.Tables.maybeBroadcast(c, c.count())
       }
     cand
@@ -797,7 +796,7 @@ object SparkEntry {
     val pairs =
       if (vecRows <= lshMaxBucket) pairs0
       else {
-        val p = persistForQuery(pairs0)
+        val p = persistForQuery("q_dedup_embed", pairs0)
         graft.sync.Tables.maybeBroadcast(p, p.count())
       }
     pairs

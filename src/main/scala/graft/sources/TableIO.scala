@@ -2,7 +2,7 @@ package graft.sources
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileContext, FileStatus, FileSystem, Options, Path}
-import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate, Operators}
+import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate, Operators, Statistics, UserDefinedPredicate}
 import org.apache.parquet.hadoop.ParquetInputFormat
 import org.apache.parquet.io.api.Binary
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -455,14 +455,33 @@ object TableIO {
 
   /** `column IN values` over a long column at `ordinal` of a
     * [[TableIO.readLocal]] schema: the pushed predicate and the per-row
-    * test.
+    * test. The predicate is [[LongSet]], not `FilterApi.in`: Parquet's
+    * page filter judges an IN set by its min and max alone, so ids spread
+    * over a sorted file would keep nearly every page.
     */
   def longIn(column: String, ordinal: Int, values: Seq[Long])
       : (FilterPredicate, ColumnarBatch => Int => Boolean) = {
-    import scala.jdk.CollectionConverters._
     val wanted = values.toSet
-    (FilterApi.in[java.lang.Long, Operators.LongColumn](FilterApi.longColumn(column),
-      values.map(Long.box).toSet.asJava), batch => wanted.compose(batch.column(ordinal).getLong))
+    (FilterApi.userDefined[java.lang.Long, LongSet](FilterApi.longColumn(column),
+      new LongSet(wanted.toArray.sorted)), batch => wanted.compose(batch.column(ordinal).getLong))
+  }
+
+  /** A set of sorted ids as a Parquet predicate: a row group or page is
+    * kept only when one of the ids lies in its [min, max], as an OR of
+    * `eq` would keep it. Unlike such an OR, which has Parquet's dictionary
+    * filter decode a row group's dictionary once per id, it decodes it
+    * once.
+    */
+  final class LongSet(ids: Array[Long])
+      extends UserDefinedPredicate[java.lang.Long] with Serializable {
+    override def keep(v: java.lang.Long): Boolean =
+      v != null && java.util.Arrays.binarySearch(ids, v.longValue) >= 0
+    override def canDrop(s: Statistics[java.lang.Long]): Boolean = {
+      val i = java.util.Arrays.binarySearch(ids, s.getMin.longValue)
+      val first = if (i >= 0) i else -i - 1 // the first id >= min
+      first == ids.length || ids(first) > s.getMax.longValue
+    }
+    override def inverseCanDrop(s: Statistics[java.lang.Long]): Boolean = false
   }
 
   /** Per-thread deserializers by encoder: building one generates code,

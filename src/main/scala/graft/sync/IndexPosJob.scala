@@ -39,7 +39,7 @@ object IndexPosJob {
       val cur = Tables.loadCurrent(spark, io).getOrElse(
         throw new IllegalStateException("index-pos: no published index — sync first"))
       if (cur.positions) return cur.version
-      Tables.checkBucketBits(cur)
+      Tables.checkWritable(io, cur)
       val keyed = pages.withColumn("docId", xxhash64($"url"))
       val uncovered = cur.docs.select($"docId", $"warc_ts")
         .join(keyed.select($"docId", $"warc_ts"), Seq("docId", "warc_ts"), "left_anti")

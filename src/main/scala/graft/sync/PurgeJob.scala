@@ -71,9 +71,9 @@ object PurgeJob {
       }
       if (!cp.isDone(batchId, Process, resource, "merge")) {
         if (Tables.needsCompaction(current))
-          Tables.compactVersion(spark, io, current, batchId, None, toPurge)
+          Tables.compactVersion(spark, io, current, batchId, None, toPurge, nPurge)
         else
-          Tables.appendVersion(spark, io, current, batchId, None, toPurge)
+          Tables.appendVersion(spark, io, current, batchId, None, toPurge, nPurge)
         cp.markDone(batchId, Process, resource, "merge")
       }
       if (!cp.isDone(batchId, Process, resource, "publish")) {

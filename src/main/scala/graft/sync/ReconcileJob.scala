@@ -64,11 +64,9 @@ object ReconcileJob {
         .select($"url")
       // S4/J4: fetch full records for the id list via semi join; a
       // source scan can hold the same url twice (re-crawl) — the shared
-      // analyze step collapses it to the newest, like the sync path.
-      // Reconcile deltas are usually small (the drift set): adaptive width
+      // analyze step collapses it to the newest, like the sync path
       SyncJob.stageAnalyzed(spark, io, cp, batchId, Process, resource,
-        pages.join(missingOrChanged, Seq("url"), "left_semi").as[PageRow],
-        None, initial = false)
+        pages.join(missingOrChanged, Seq("url"), "left_semi").as[PageRow])
     }
 
     val r = SyncJob.runFromAnalyzed(spark, io, cp, batchId, Process,

@@ -46,7 +46,12 @@ object SyncJob {
   val Process = "sync"
   val Epoch0 = new Timestamp(0L)
 
-  /** @param userFilter P4: an arbitrary source predicate AND-composed
+  /** Sync one batch: the pages in the watermark window are deduped by
+    * url, analyzed and staged as the batch's flat, docId-sorted fwd
+    * ([[stageAnalyzed]]; an initial build and a delta write it the same
+    * way), then segmented, merged and published.
+    *
+    * @param userFilter P4: an arbitrary source predicate AND-composed
     *                    before the watermark (the reference's `$filter`
     *                    endpoint fragment, config.example.js:18-23,
     *                    composed at downloader.js:212-216)
@@ -57,21 +62,10 @@ object SyncJob {
     *                    checkpoint flags remain, so a later real run of
     *                    the same batch resumes straight at the merge.
     */
-  /** @param fwdBits     explicit fwd bucket width for this batch's
-    *                     segment (None = initial builds use the
-    *                     configured ceiling, incremental deltas adapt to
-    *                     their measured size). An ephemeral single-query
-    *                     index passes Some(0) to skip bucketing it will
-    *                     never probe.
-    * @param fwdAdaptive  adapt the width even for an INITIAL build
-    *                     (chunked backfills: the first chunk is small by
-    *                     design, not corpus-scale)
-    */
   def run(spark: SparkSession, io: TableIO, pages: Dataset[PageRow],
           batchTs: Timestamp, resource: String = "pages",
           userFilter: Option[org.apache.spark.sql.Column] = None,
-          dryRun: Boolean = false, fwdBits: Option[Int] = None,
-          fwdAdaptive: Boolean = false): Result = {
+          dryRun: Boolean = false): Result = {
     import spark.implicits._
     val t0 = System.currentTimeMillis()
     val batchId = Checkpoint.toBatchId(batchTs)
@@ -86,17 +80,14 @@ object SyncJob {
     val release = io.acquireLock(s"sync:$batchId")
     try Metrics.withBudget(spark, io, batchId, Process, t0) {
       val src = userFilter.map(pages.filter).getOrElse(pages)
-      runLocked(spark, io, cp, src, batchTs, batchId, resource, t0, dryRun,
-        fwdBits, fwdAdaptive)
+      runLocked(spark, io, cp, src, batchTs, batchId, resource, t0, dryRun)
     } finally release()
   }
 
   private def runLocked(spark: SparkSession, io: TableIO, cp: Checkpoint,
                         pages: Dataset[PageRow], batchTs: Timestamp,
                         batchId: String, resource: String,
-                        t0: Long, dryRun: Boolean = false,
-                        fwdBits: Option[Int] = None,
-                        fwdAdaptive: Boolean = false): Result = {
+                        t0: Long, dryRun: Boolean): Result = {
     import spark.implicits._
 
     // ---- analyze ----------------------------------------------------
@@ -105,8 +96,7 @@ object SyncJob {
       val lo = timed(batchId, "analyze.watermark") { primaryLo(spark, io) }
       val pred = Watermark.predicate(
         Map("warc_ts" -> lo), batchTs, Seq("warc_ts"))
-      stageAnalyzed(spark, io, cp, batchId, Process, resource, pages.filter(pred),
-        fwdBits, initial = lo == Epoch0 && !fwdAdaptive)
+      stageAnalyzed(spark, io, cp, batchId, Process, resource, pages.filter(pred))
     }
 
     runFromAnalyzed(spark, io, cp, batchId, Process, resource, t0, dryRun)
@@ -159,10 +149,7 @@ object SyncJob {
     // the final chunk publishes at the caller's overall bound (trailing
     // empty space folds into it — same coverage, no extra batch)
     val boundsAdj = bounds.init :+ hi
-    // every chunk — including the initial one — sizes its fwd adaptively:
-    // chunks are deliberately small, the 256-dir ceiling write is not
-    boundsAdj.toSeq.map(t =>
-      run(spark, io, pages, new Timestamp(t), resource, fwdAdaptive = true))
+    boundsAdj.toSeq.map(t => run(spark, io, pages, new Timestamp(t), resource))
   }
 
   /** Multi-resource batch: one batch syncs a LIST of resources, each into
@@ -281,8 +268,7 @@ object SyncJob {
         }
         val pageCols = Seq("url", "warc_ts", "html", "text", "lang")
         stageAnalyzed(spark, io, cp, batchId, Process, resource,
-          delta.select(pageCols.map(col): _*).as[PageRow], None,
-          initial = primary == Epoch0)
+          delta.select(pageCols.map(col): _*).as[PageRow])
       }
       val r = runFromAnalyzed(spark, io, cp, batchId, Process, resource, t0)
       // promote the secondary watermarks after publish (idempotent max
@@ -297,27 +283,16 @@ object SyncJob {
     * staged fwd write, the positional blocks while the current version
     * carries positions (adopted as the segment's `pos` with the rest),
     * and the stage's done flag. fwd is the adopted analyzed output,
-    * written bucketed by docId so later update batches open only their
-    * affected buckets. Its width: an explicit hint, else the configured
-    * ceiling for a corpus-scale `initial` build (dedup and bucket
-    * clustering in ONE exchange — fb is a function of url, see
-    * [[Tables.writeFwdFusedInitial]]), else adapted to the delta's
-    * measured size (a 256-dir write costs seconds regardless of rows).
+    * written flat and sorted by docId ([[Tables.writeFwd]]) so later
+    * update batches read only their affected docIds' pages. The dedup's
+    * exchange by url is the write's only one, initial build or delta.
     */
   private[sync] def stageAnalyzed(spark: SparkSession, io: TableIO, cp: Checkpoint,
                                   batchId: String, process: String, resource: String,
-                                  pages: Dataset[PageRow], fwdBits: Option[Int],
-                                  initial: Boolean): Unit = {
-    val analyzedDir = io.stagingDir(batchId, "analyzed")
+                                  pages: Dataset[PageRow]): Unit = {
     val delta = latestPerUrl(pages)
     timed(batchId, "analyze.writeFwd") {
-      fwdBits match {
-        case Some(b) =>
-          Tables.writeFwd(SegmentBuilder.analyze(delta).toDF(), analyzedDir, b)
-        case None if initial => Tables.writeFwdFusedInitial(pages, analyzedDir)
-        case None =>
-          Tables.writeFwdAdaptive(spark, SegmentBuilder.analyze(delta).toDF(), analyzedDir)
-      }
+      Tables.writeFwd(SegmentBuilder.analyze(delta).toDF(), io.stagingDir(batchId, "analyzed"))
     }
     if (Tables.loadCurrent(spark, io).exists(_.positions))
       timed(batchId, "analyze.pos") {
@@ -353,8 +328,7 @@ object SyncJob {
   private[sync] def runFromAnalyzed(
       spark: SparkSession, io: TableIO, cp: Checkpoint, batchId: String,
       process: String, resource: String, t0: Long,
-      dryRun: Boolean = false,
-      purged: Option[Dataset[Long]] = None): Result = {
+      dryRun: Boolean = false): Result = {
     import spark.implicits._
     val analyzedDir = io.stagingDir(batchId, "analyzed")
     val docsDir = io.stagingDir(batchId, "docs")
@@ -430,7 +404,7 @@ object SyncJob {
     if (!cp.isDone(batchId, process, resource, "merge")) timed(batchId, "merge") {
       val st = staged // refuses an older build's staging before any write
       val old = Tables.loadCurrent(spark, io)
-      val purgedDs = purged.getOrElse(spark.emptyDataset[Long])
+      val noPurge = spark.emptyDataset[Long]
       old match {
         case None =>
           // initial build: the staged segment (already (term,bucket)-
@@ -441,12 +415,10 @@ object SyncJob {
           // every compactThreshold batches (or at high tombstone ratio):
           // fold segments into one — amortized O(index/threshold) merge
           // I/O per batch
-          Tables.compactVersion(spark, io, o, batchId, Some(st), purgedDs,
-            purgedEmpty = purged.isEmpty)
+          Tables.compactVersion(spark, io, o, batchId, Some(st), noPurge, 0L)
         case Some(o) =>
           // steady state: O(delta) segment append + tombstones
-          Tables.appendVersion(spark, io, o, batchId, Some(st), purgedDs,
-            purgedEmpty = purged.isEmpty)
+          Tables.appendVersion(spark, io, o, batchId, Some(st), noPurge, 0L)
       }
       cp.markDone(batchId, process, resource, "merge")
     }

@@ -32,10 +32,11 @@ import graft.sources.TableIO
   * docs bit-for-bit (the rank-identity gate), so appends subtract the
   * killed docs' term stats, looked up in the segments' forward tables
   * (`fwd` = the analyzed pages, adopted by rename at zero write cost).
-  * That lookup reads fwd's heavy `tfs` column, so it is skipped entirely
-  * for pure-append batches (narrow docId pre-check) and restricted to
-  * the affected docId buckets otherwise (fwd is written partitioned by
-  * `fb=hash-bucket(docId)`); writes stay O(delta).
+  * fwd is flat: one file per task, sorted by docId, in small pages. A
+  * batch within [[KilledLocalMax]] rows reads its affected docIds' rows
+  * on the driver with the ids pushed, so Parquet's page index leaves
+  * the other rows' pages (and their heavy `tfs` bytes) unread; a larger
+  * batch joins in Spark. Writes stay O(delta).
   *
   * Every reader and writer opens a version through one handle ([[load]]
   * → [[IndexTables]]) and applies one liveness rule: [[isDead]] per row,
@@ -87,46 +88,19 @@ object Tables {
   private[graft] def maybeBroadcast(df: DataFrame, rows: Long): DataFrame =
     if (rows <= deadBroadcastMax) broadcast(df) else df
 
-  // ---- fwd bucketing ---------------------------------------------------
+  // ---- fwd -------------------------------------------------------------
 
-  /** fwd tables are written partitioned by `fb = top-bits(docId)` so the
-    * update-path killed lookup (which needs fwd's heavy `tfs` column)
-    * opens ONLY the affected docIds' buckets instead of scanning the
-    * corpus. 2^bits buckets: a batch updating k docs touches ≤ k of them,
-    * so the read is O(corpus · min(1, k/2^bits)).
-    *
-    * The bucket width is ADAPTIVE PER SEGMENT and recorded in the segment
-    * (`fwd/_fwd_bits`): a directory-partitioned write costs ~10ms per
-    * output dir regardless of rows (measured: 256 dirs ≈ 2.5-4s even for
-    * 3k rows), so a small delta segment is written flat (bits=0 — its
-    * whole fwd is cheaper to scan than 256 dirs are to commit) while
-    * corpus-scale segments get the full width. Readers use the
-    * RECORDED width, never the runtime config — a config change between
-    * write and read can therefore never silently mis-prune (a missing
-    * recording fails loudly).
-    *
-    * This value is the width CEILING: 256 buckets keep small-scale file
-    * counts sane.
+  /** Rows per Parquet page of a fwd file. fwd files are flat, one per
+    * task, and sorted by docId, so a read that pushes a few docIds
+    * ([[TableIO.longIn]]) decodes about one page per id and file, not
+    * the file (LsmSpec bounds the rows such a read yields). Fewer rows
+    * per page prune finer and cost bytes: the page index and headers.
     */
-  val fwdBucketBits: Int = 8
-
-  /** Target fwd rows per bucket for the adaptive width (delta segments). */
-  val fwdRowsPerBucket: Long = 4096L
-
-  /** Adaptive width: 0 (flat) until ~8 buckets' worth of rows, then
-    * ceil(log2(n / rowsPerBucket)) capped at the ceiling.
-    */
-  def chooseFwdBits(n: Long): Int =
-    if (n < 8 * fwdRowsPerBucket) 0
-    else math.min(fwdBucketBits, 64 -
-      java.lang.Long.numberOfLeadingZeros(math.max(1L, (n - 1) / fwdRowsPerBucket)))
-
-  private[graft] def fbExpr(bits: Int): org.apache.spark.sql.Column =
-    expr(s"cast(shiftrightunsigned(docId, ${64 - bits}) as int)")
+  val FwdPageRows: Int = 16
 
   /** Explicit fwd read schema: no footer-inference job, and an empty fwd
-    * dir (a 0-row batch writes only _SUCCESS under partitionBy) still
-    * reads as 0 rows instead of failing schema inference.
+    * dir (a 0-row batch writes only _SUCCESS) still reads as 0 rows
+    * instead of failing schema inference.
     */
   private[graft] val FwdSchema: org.apache.spark.sql.types.StructType =
     org.apache.spark.sql.Encoders.product[graft.index.AnalyzedPage].schema
@@ -166,167 +140,22 @@ object Tables {
       math.max(1L, (stagedFwdBytes + target - 1L) / target)).toInt
   }
 
-  /** Marker file recording a fwd dir's bucket width (0 = flat layout). */
-  private def fwdBitsPath(base: String) = s"$base/_fwd_bits"
-
-  private def writeFwdBits(spark: SparkSession, path: String, bits: Int): Unit = {
-    val p = new org.apache.hadoop.fs.Path(fwdBitsPath(path))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(p, true)
-    try out.write(bits.toString.getBytes("UTF-8")) finally out.close()
-  }
-
-  /** The RECORDED bucket width of a segment's fwd dir. Fails loudly when
-    * the recording is missing: guessing from runtime config is exactly
-    * the silent-mispruning hazard the recording exists to kill.
+  /** Write an analyzed/fwd frame flat: one file per task, each sorted by
+    * docId, in pages of [[FwdPageRows]] rows (the writer first checks a
+    * page's size at `page.size.row.check.min` rows, 100 by default, so
+    * that is lowered too, else every file's first page holds 100). No
+    * exchange of its own: the analyze stage's one exchange is its
+    * last-write-wins dedup by url.
     */
-  def fwdBitsOf(io: TableIO, segment: String): Int =
-    io.readSmallFile(fwdBitsPath(s"${io.segmentDir(segment)}/fwd"))
-      .map(_.trim.toInt)
-      .getOrElse(throw new IllegalStateException(
-        s"segment $segment: fwd dir carries no _fwd_bits recording — " +
-          "cannot prune safely (was this fwd written by writeFwd?)"))
+  def writeFwd(analyzed: DataFrame, path: String): Unit =
+    analyzed.sortWithinPartitions("docId").write.mode("overwrite")
+      .option("parquet.page.row.count.limit", FwdPageRows.toLong)
+      .option("parquet.page.size.row.check.min", FwdPageRows.toLong)
+      .parquet(path)
 
-  /** Write an analyzed/fwd frame at an explicit bucket width (one
-    * repartition so each bucket lands as one file, not one per task;
-    * bits=0 writes flat — no fb dirs). The width is recorded beside the
-    * data so readers never depend on runtime config.
-    */
-  def writeFwd(analyzed: DataFrame, path: String,
-               bits: Int = fwdBucketBits): Unit = {
-    if (bits <= 0)
-      analyzed.write.mode("overwrite").parquet(path)
-    else
-      analyzed.withColumn("fb", fbExpr(bits))
-        .repartition(col("fb"))
-        .write.mode("overwrite").partitionBy("fb").parquet(path)
-    writeFwdBits(analyzed.sparkSession, path, math.max(bits, 0))
-  }
-
-  /** INITIAL-build fwd write that FUSES the in-batch last-write-wins
-    * dedup with the bucket clustering into ONE exchange. The former
-    * shape shuffled the batch twice: latestPerUrl's window moved the
-    * raw pages (html + text) hashed by url, then writeFwd moved the
-    * analyzed rows (the heavy tfs maps) again hashed by fb. But
-    * fb = top-bits(xxhash64(url)) is a FUNCTION of url, so one exchange
-    * keyed by fb colocates every url's rows; the dedup window re-keys
-    * on (fb, url), which hash-partitioning by fb already satisfies
-    * (ClusteredDistribution subset rule) — Spark inserts only the
-    * within-partition sort, no second exchange — and the bucketed write
-    * follows in place. Same winners as latestPerUrl (identical order
-    * keys), same fwd layout and recorded width; PlanSpec asserts the
-    * single-exchange shape, OpsSpec/LsmSpec gate the behavior.
-    */
-  def writeFwdFusedInitial(pages: Dataset[graft.PageRow], path: String,
-                           bits: Int = fwdBucketBits): Unit = {
-    val analyzed = fusedInitialFrame(pages, bits)
-    analyzed.write.mode("overwrite").partitionBy("fb").parquet(path)
-    writeFwdBits(pages.sparkSession, path, bits)
-  }
-
-  /** The fused dedup+cluster+analyze frame (PlanSpec asserts its
-    * single-exchange shape).
-    */
-  private[graft] def fusedInitialFrame(pages: Dataset[graft.PageRow],
-                                       bits: Int): DataFrame = {
-    require(bits > 0, "fused initial write requires a bucketed width")
-    val spark = pages.sparkSession
-    import spark.implicits._
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy($"fb", $"url")
-      .orderBy($"warc_ts".desc, xxhash64($"html").desc)
-    val deduped = pages.toDF()
-      .withColumn("fb", expr(
-        s"cast(shiftrightunsigned(xxhash64(url), ${64 - bits}) as int)"))
-      .repartition($"fb")
-      .withColumn("rn", row_number().over(w))
-      .filter($"rn" === 1)
-      .drop("rn")
-    SegmentBuilder.analyze(deduped.drop("fb").as[graft.PageRow]).toDF()
-      // recomputed from docId — a deterministic projection, no exchange;
-      // rows physically stay in their fb's task so partitionBy writes
-      // one file per bucket
-      .withColumn("fb", fbExpr(bits))
-  }
-
-  /** Write a DELTA fwd dir with the width adapted to its (unknown) row
-    * count: one flat pass with an Observation row count (zero extra
-    * jobs), then a bucketed rewrite — read from the just-written parquet,
-    * no re-extraction — only when the delta is large enough that flat
-    * scans of it would hurt later update batches. The steady-state small
-    * delta costs ONE flat write (a fixed-width 256-dir write costs
-    * seconds regardless of rows); a backfill-scale delta pays one extra
-    * O(delta) pass and gets full pruning. Returns the row count.
-    */
-  def writeFwdAdaptive(spark: SparkSession, analyzed: DataFrame,
-                       path: String): Long = {
-    val obs = org.apache.spark.sql.Observation()
-    writeFwd(analyzed.observe(obs, count(lit(1)).as("rows")), path, 0)
-    val n = obs.get("rows").asInstanceOf[Long]
-    val bits = chooseFwdBits(n)
-    if (bits > 0) {
-      val tmp = s"$path.bucketed"
-      writeFwd(spark.read.schema(FwdSchema).parquet(path), tmp, bits)
-      val fs = new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.delete(new org.apache.hadoop.fs.Path(path), true)
-      fs.rename(new org.apache.hadoop.fs.Path(tmp),
-        new org.apache.hadoop.fs.Path(path))
-    }
-    n
-  }
-
-  /** One fwd/analyzed dir with the explicit schema (fb rides along from
-    * the partition dirs when present).
-    */
+  /** One fwd/analyzed dir with the explicit schema. */
   def readFwdDir(spark: SparkSession, path: String): DataFrame =
     spark.read.schema(FwdSchema).parquet(path)
-
-  /** fwd rows of ONLY the affected docIds' buckets: path-level pruning —
-    * the unaffected buckets' files are never even listed, so the heavy
-    * tfs bytes of untouched docs are structurally unreadable, not merely
-    * filtered (LsmSpec asserts the byte bound). Each segment is pruned at
-    * its own RECORDED width (a flat segment, bits=0, is read whole — by
-    * construction it is small). The affected-bucket sets are collected
-    * per distinct width, each bounded by 2^bits rows.
-    */
-  def readFwdPruned(spark: SparkSession, io: TableIO, segments: Seq[String],
-                    affected: DataFrame,
-                    affectedCount: Long = -1L): DataFrame = {
-    import spark.implicits._
-    val segBits = segments.map(s => s -> fwdBitsOf(io, s))
-    // None = read the whole dir (every bucket affected): a batch with
-    // >= 4·2^bits affected ids touches essentially all buckets, so the
-    // distinct-collect job and the per-dir listing buy nothing — skip
-    // both (reading a superset of buckets is always correct, the
-    // downstream join filters; the caller passes its already-known
-    // count, -1 = unknown)
-    val fbByBits: Map[Int, Option[Seq[Int]]] =
-      segBits.map(_._2).filter(_ > 0).distinct.map { bits =>
-        if (affectedCount >= 4L * (1L << bits)) bits -> None
-        else {
-          val fbs = affected.select(fbExpr(bits).as("fb"))
-            .distinct().as[Int].collect().toSeq.sorted // bounded by 2^bits
-          bits -> (if (fbs.size == (1 << bits)) None else Some(fbs))
-        }
-      }.toMap
-    segBits.map { case (s, bits) =>
-      val base = s"${io.segmentDir(s)}/fwd"
-      val df =
-        if (bits == 0) readFwdDir(spark, base).drop("fb")
-        else fbByBits(bits) match {
-          case None => readFwdDir(spark, base).drop("fb")
-          case Some(fbs) =>
-            val dirs = fbs.map(fb => s"$base/fb=$fb").filter(io.exists)
-            if (dirs.isEmpty)
-              spark.createDataFrame(
-                spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], FwdSchema)
-            else spark.read.schema(FwdSchema).option("basePath", base)
-              .parquet(dirs: _*).drop("fb")
-        }
-      df.withColumn("seg", lit(s))
-    }.reduce(_.unionByName(_))
-  }
 
   /** Compact when the manifest sprawls OR the tombstone set outgrows a
     * fifth of the live corpus — the latter guards purge-heavy workloads
@@ -435,17 +264,29 @@ object Tables {
   def load(spark: SparkSession, io: TableIO, version: String): IndexTables =
     new IndexTables(spark, io, version, io.manifest(version))
 
-  /** New batches must bucket postings exactly like the index they join —
+  /** Refuses, before any write, a version this batch cannot extend.
+    * New batches must bucket postings exactly like the index they join —
     * a silent width mismatch would interleave foreign docId ranges inside
-    * (term,bucket) runs and corrupt delta-gap encoding.
+    * (term,bucket) runs and corrupt delta-gap encoding. And every
+    * segment's fwd must be flat: the older layout kept it in `fb=`
+    * directories with an `_fwd_bits` file, which the driver-side killed
+    * lookup would read as empty (it lists files, not directories), so
+    * the dict's df/cf would silently come out wrong.
     */
-  private[sync] def checkBucketBits(old: IndexTables): Unit =
+  private[sync] def checkWritable(io: TableIO, old: IndexTables): Unit = {
     if (old.bucketBits != graft.index.DocIds.bucketBits)
       throw new IllegalStateException(
         s"index ${old.version} was built with bucketBits=${old.bucketBits} " +
           s"but this batch runs with ${graft.index.DocIds.bucketBits} — " +
           "set graft.docid.bucketBits/GRAFT_DOCID_BUCKET_BITS to match " +
           "(width changes require a full rebuild)")
+    old.segments.find { s =>
+      val fwd = s"${io.segmentDir(s)}/fwd"
+      io.exists(s"$fwd/_fwd_bits") || io.listDirNames(fwd).exists(_.startsWith("fb="))
+    }.foreach(s => throw new IllegalStateException(
+      s"segment $s of ${old.version} keeps fwd in the older fb= bucket " +
+        "layout, which this build does not read; rebuild it"))
+  }
 
   def loadCurrent(spark: SparkSession, io: TableIO): Option[IndexTables] =
     io.currentVersion().map(v => load(spark, io, v))
@@ -476,8 +317,8 @@ object Tables {
     * sized by the segment stage: neither a distinct nor a count job.
     */
   private def affectedIds(deltaIds: DataFrame, deltaN: Long, purged: Dataset[Long],
-                          purgedEmpty: Boolean): (DataFrame, Long) =
-    if (purgedEmpty) (deltaIds.persist(), deltaN)
+                          purgedN: Long): (DataFrame, Long) =
+    if (purgedN == 0) (deltaIds.persist(), deltaN)
     else {
       val a = deltaIds.union(purged.toDF("docId")).distinct().persist()
       (a, a.count())
@@ -491,8 +332,7 @@ object Tables {
   def readFwd(spark: SparkSession, io: TableIO,
               segments: Seq[String]): DataFrame =
     segments.map { s =>
-      readFwdDir(spark, s"${io.segmentDir(s)}/fwd").drop("fb")
-        .withColumn("seg", lit(s))
+      readFwdDir(spark, s"${io.segmentDir(s)}/fwd").withColumn("seg", lit(s))
     }.reduce(_.unionByName(_))
 
   // ---- initial build ---------------------------------------------------
@@ -560,108 +400,188 @@ object Tables {
     io.writeParquet(Seq(stats).toDF(), s"${io.versionDir(ver)}/stats")
   }
 
-  /** Previously indexed rows among `affected` (docId column only) — the
-    * append path's pure-append short-circuit probe. Reads the docId
-    * column of ONLY the affected docId buckets: each segment's fwd is
-    * path-pruned at its recorded width, so the probe costs
-    * O(corpus · min(1, |affected buckets| / 2^bits)) narrow bytes, never
-    * a full docs/fwd scan — the last O(corpus) read in the append path
-    * (fwd rows mirror docs rows segment-for-segment, so probing fwd is
-    * equivalent and reuses the bucket layout). LsmSpec asserts the file
-    * set and the byte bound.
+  // ---- append (O(delta) incremental sync) ------------------------------
+
+  /** Row budget of the driver-side killed lookup ([[killedRows]]): an
+    * append whose delta and purge hold at most this many docIds, and
+    * whose ids match at most this many old fwd rows, folds the killed
+    * side on the driver with no Spark job. Past it, or over a
+    * distributed tombstone set, the lookup joins in Spark.
     */
-  private[graft] def existingAffected(spark: SparkSession, io: TableIO,
-                                      segments: Seq[String],
-                                      affected: DataFrame,
-                                      affectedCount: Long): DataFrame = {
+  val KilledLocalMax: Int = 4096
+
+  /** The fwd columns the killed lookup reads. */
+  case class FwdRow(docId: Long, url: String, doclen: Int, tfs: Map[String, Int])
+
+  private val FwdEncoder = ExpressionEncoder[FwdRow]().resolveAndBind()
+  private val FwdDocIdOrdinal = FwdEncoder.schema.fieldIndex("docId")
+  private val DocEncoder = ExpressionEncoder[DocRow]().resolveAndBind()
+
+  /** The live rows of `ids` in the fwd of `old`'s segments, read on the
+    * driver with the ids pushed ([[TableIO.longIn]]: fwd files are sorted
+    * by docId in small pages, so about one page per id and file is
+    * decoded) and no Spark job. A row of segment s is live unless
+    * [[isDead]] for batch s (fwd rows carry no batch column; a row
+    * surviving in segment s is live-as-of s). None when the tombstone set
+    * is distributed or more than [[KilledLocalMax]] rows match.
+    */
+  private[graft] def killedRows(io: TableIO, old: IndexTables,
+                                ids: Seq[Long]): Option[Seq[FwdRow]] =
+    if (old.deadDistributed || ids.size > KilledLocalMax) None
+    else if (ids.isEmpty) Some(Seq.empty)
+    else {
+      val (pushed, keep) = TableIO.longIn("docId", FwdDocIdOrdinal, ids)
+      old.segments.foldLeft(Option(Vector.empty[(String, FwdRow)])) { (read, s) =>
+        read.flatMap(rows => io.readLocal(Seq(s"${io.segmentDir(s)}/fwd"), FwdEncoder,
+          Some(pushed), KilledLocalMax - rows.size)(keep).map(rows ++ _.map(s -> _)))
+      }.map(_.collect { case (s, r) if !isDead(old.dead, r.docId, s) => r })
+    }
+
+  /** [[killedRows]]' rows as a Spark frame (docId, url, doclen, tfs), for
+    * a batch past the budget or over a distributed tombstone set: the old
+    * segments' fwd joined to the `affected` ids (broadcast when small)
+    * and filtered by [[IndexTables.live]].
+    */
+  private[graft] def killedFrame(spark: SparkSession, io: TableIO, old: IndexTables,
+                                 affected: DataFrame, affectedCount: Long): DataFrame = {
     import spark.implicits._
-    readFwdPruned(spark, io, segments, affected, affectedCount)
-      .select($"docId")
-      .join(maybeBroadcast(affected, affectedCount), Seq("docId"), "left_semi")
+    old.live(readFwd(spark, io, old.segments)
+        .join(maybeBroadcast(affected, affectedCount), Seq("docId")), "seg")
+      .select($"docId", $"url", $"doclen", $"tfs")
   }
 
-  // ---- append (O(delta) incremental sync) ------------------------------
+  /** An append's killed side: the previously live rows of the docIds the
+    * batch re-writes or purges. Their count `n` and doclen sum `dl` leave
+    * the corpus stats and `dictSub` (term, subDf, subCf) leaves the dict.
+    * `collisions` counts killed rows whose docId the delta carries with
+    * another url. `link` holds the batch's new tombstone rows (docId,
+    * before), `linkN` of them, `overlap` of which the old set already
+    * holds. `release` drops what the Spark form persisted.
+    */
+  private case class Killed(n: Long, dl: Long, collisions: Long, dictSub: DataFrame,
+                            link: DataFrame, linkN: Long, overlap: Long,
+                            release: () => Unit = () => ())
+
+  /** [[Killed]] on the driver: the delta's docs and the killed rows read
+    * with no Spark job ([[killedRows]]), None past the budget. The
+    * tombstone link holds (a) every killed docId and (b) every delta docId
+    * the old set holds — a doc re-added after a purge, whose "~" row must
+    * soften to `before = batchId`, else the new segment's row stays dead
+    * (it can't simply be dropped, the purged segment row is still
+    * physically present). A delta docId's row gets `before = batchId`, a
+    * purged one's [[PurgeSentinel]].
+    */
+  private def killedLocal(spark: SparkSession, io: TableIO, old: IndexTables,
+                          batchId: String, hasDelta: Boolean, purged: Dataset[Long],
+                          purgedN: Long): Option[Killed] = {
+    import spark.implicits._
+    val delta: Map[Long, String] =
+      if (!hasDelta) Map.empty
+      else io.readLocal(Seq(s"${io.segmentDir(batchId)}/docs"), DocEncoder)().get
+        .iterator.map(d => d.docId -> d.url).toMap
+    val ids = (delta.keys ++ (if (purgedN == 0) Nil else purged.collect().toSeq)).toSeq.distinct
+    killedRows(io, old, ids).map { rows =>
+      val dictSub = rows.flatMap(_.tfs).groupMapReduce(_._1)(t => (1L, t._2.toLong)) {
+        case ((df1, cf1), (df2, cf2)) => (df1 + df2, cf1 + cf2) }
+        .toSeq.map { case (t, (df, cf)) => (t, df, cf) }.toDF("term", "subDf", "subCf")
+      val link = (rows.map(_.docId) ++ delta.keys.filter(old.dead.contains)).distinct
+        .map(d => (d, if (delta.contains(d)) batchId else PurgeSentinel))
+      Killed(rows.size, rows.map(_.doclen.toLong).sum,
+        rows.count(r => delta.get(r.docId).exists(_ != r.url)), dictSub,
+        link.toDF("docId", "before"), link.size, link.count(t => old.dead.contains(t._1)))
+    }
+  }
+
+  /** [[killedLocal]]'s answer in Spark, past the budget or over a
+    * distributed tombstone set.
+    */
+  private def killedSpark(spark: SparkSession, io: TableIO, old: IndexTables,
+                          batchId: String, deltaDocs: Option[Dataset[DocRow]], deltaN: Long,
+                          purged: Dataset[Long], purgedN: Long): Killed = {
+    import spark.implicits._
+    val deltaIds = deltaDocs.fold(spark.emptyDataset[Long].toDF("docId"))(_.select($"docId"))
+    val (affected, affectedCount) = affectedIds(deltaIds, deltaN, purged, purgedN)
+    // a narrow docId probe first: a backfill-scale pure append then never
+    // reads fwd's heavy tfs column
+    val none = readFwd(spark, io, old.segments).select($"docId")
+      .join(maybeBroadcast(affected, affectedCount), Seq("docId"), "left_semi").isEmpty
+    val killed =
+      (if (none) spark.emptyDataset[FwdRow].toDF()
+       else killedFrame(spark, io, old, affected, affectedCount)).persist()
+    // killed stats + the collision check in ONE job; the left join against
+    // the delta's urls cannot duplicate killed rows (delta docIds are
+    // unique per segment)
+    val (n, dl, coll) =
+      if (none) (0L, 0L, 0L)
+      else {
+        val kr = deltaDocs.fold(killed.withColumn("new_url", lit(null).cast("string")))(d =>
+            killed.join(maybeBroadcast(d.select($"docId", $"url".as("new_url")), deltaN),
+              Seq("docId"), "left"))
+          .agg(count(lit(1)), sum($"doclen"),
+            count(when($"new_url".isNotNull && $"url" =!= $"new_url", lit(1))))
+          .head()
+        (kr.getLong(0), if (kr.isNullAt(1)) 0L else kr.getLong(1), kr.getLong(2))
+      }
+    val dictSub = killed.select(explode($"tfs").as(Seq("term", "tf")))
+      .groupBy($"term").agg(count(lit(1)).as("subDf"), sum($"tf").as("subCf"))
+    // with no old tombstones and nothing killed, both link sources are
+    // empty by construction: the steady-state pure append skips the jobs
+    val (link, linkN, overlap) =
+      if (old.tombstoneCount == 0 && n == 0) (spark.emptyDataset[Tombstone].toDF(), 0L, 0L)
+      else {
+        val revived = deltaIds
+          .join(old.tombstones.toDF().select($"docId"), Seq("docId"), "left_semi")
+        val rows = killed.select($"docId").union(revived).distinct()
+          .join(deltaIds.withColumn("isDelta", lit(1)), Seq("docId"), "left")
+          .select($"docId", when($"isDelta".isNotNull, lit(batchId))
+            .otherwise(lit(PurgeSentinel)).as("before"))
+          .persist()
+        // one aggregate sizes the link and its overlap with the old ids
+        val cnt = rows.join(maybeBroadcast(old.tombstones.toDF()
+            .select($"docId").withColumn("had", lit(1)), old.tombstoneCount),
+            Seq("docId"), "left")
+          .agg(count(lit(1)), count($"had")).head()
+        (rows, cnt.getLong(0), cnt.getLong(1))
+      }
+    Killed(n, dl, coll, dictSub, link, linkN, overlap,
+      () => { link.unpersist(); killed.unpersist(); affected.unpersist() })
+  }
 
   /** Append a delta segment (and/or a purge) as a new version without
     * touching existing segments. Writes: the adopted delta segment
-    * (rename, O(1)), the tombstone set, the dict, one stats row, one
+    * (rename, O(1)), the tombstone link, the dict link, one stats row, one
     * manifest — O(delta + vocabulary), never O(index).
     *
     * @param staged the staged delta, or None for a pure purge batch
+    * @param purgedN the number of `purged` ids
     */
   def appendVersion(spark: SparkSession, io: TableIO, old: IndexTables,
                     batchId: String, staged: Option[Staged],
-                    purged: Dataset[Long],
-                    purgedEmpty: Boolean = false): Unit = {
+                    purged: Dataset[Long], purgedN: Long): Unit = {
     import spark.implicits._
-    checkBucketBits(old)
+    checkWritable(io, old)
     val seg = io.segmentDir(batchId)
     staged.foreach(adopt(io, batchId, _, old.positions))
-    val hasDelta = staged.isDefined
     def sub[A](stage: String)(f: => A): A =
       SyncJob.timed(batchId, s"merge.$stage")(f)
 
-    lazy val deltaDocs = readDocs(spark, Seq(s"$seg/docs"))
-    val deltaIds: DataFrame =
-      if (hasDelta) deltaDocs.select($"docId")
-      else spark.emptyDataset[Long].toDF("docId")
-
     // the delta's doc count + doclen sum, from the segment stage
     val (deltaN, deltaDl) = staged.fold((0L, 0L))(st => (st.rows, st.dlSum))
-    val (affected, affectedCount) = sub("affectedCount") {
-      affectedIds(deltaIds, deltaN, purged, purgedEmpty) }
-
-    // killed = previously-live rows of affected docIds: their term stats
-    // leave the dict, their doclen leaves the corpus stats. A narrow
-    // bucket-pruned pre-check on fwd's docId column decides whether the
-    // (wider) tfs lookup is needed at all — a pure-append batch (new urls
-    // only, the crawl steady state) skips it after reading only the
-    // affected buckets' docId bytes; an update batch then opens the same
-    // buckets' heavy tfs column — both reads O(affected-buckets), never
-    // O(corpus).
-    val nExisting = sub("existingCheck") {
-      existingAffected(spark, io, old.segments, affected, affectedCount)
-        .count() }
-    val killed = (
-      if (nExisting == 0)
-        spark.emptyDataset[(Long, String, Int, Map[String, Int])]
-          .toDF("docId", "url", "doclen", "tfs")
-      else
-        old.live(readFwdPruned(spark, io, old.segments, affected, affectedCount)
-          .select($"docId", $"url", $"doclen", $"tfs", $"seg")
-          .join(maybeBroadcast(affected, affectedCount), Seq("docId")), "seg")
-          .select($"docId", $"url", $"doclen", $"tfs")
-      ).persist()
+    // killed = previously-live rows of the affected docIds: their term
+    // stats leave the dict, their doclen leaves the corpus stats
+    val k = sub("killed") {
+      (if (deltaN + purgedN <= KilledLocalMax && !old.deadDistributed)
+         killedLocal(spark, io, old, batchId, staged.isDefined, purged, purgedN)
+       else None).getOrElse(killedSpark(spark, io, old, batchId,
+        staged.map(_ => readDocs(spark, Seq(s"$seg/docs"))), deltaN, purged, purgedN))
+    }
     try {
-      // killed stats + the cross-batch xxhash64 collision check in ONE
-      // job: a delta url landing on a previously indexed docId must be
-      // the SAME url (an update), else the tombstone would silently drop
-      // the old document. The left join against the delta's urls cannot
-      // duplicate killed rows (delta docIds are unique per segment), so
-      // the count/sum aggregates are unchanged by the fusion.
-      // pure-append batches (nExisting == 0, the crawl steady state)
-      // skip the killed-stats job outright: killed is empty by
-      // construction, so its aggregates are zero and there is nothing
-      // to collision-check
-      val (killedN, killedDl) =
-        if (nExisting == 0) (0L, 0L)
-        else {
-          val kWithNew =
-            if (hasDelta)
-              killed.join(maybeBroadcast(
-                  deltaDocs.select($"docId", $"url".as("new_url")), deltaN),
-                Seq("docId"), "left")
-            else killed.withColumn("new_url", lit(null).cast("string"))
-          val kr = sub("killedStats") {
-            kWithNew.agg(count(lit(1)), sum($"doclen"),
-              count(when($"new_url".isNotNull && $"url" =!= $"new_url", lit(1))))
-              .head() }
-          val nColl = kr.getLong(2)
-          if (nColl > 0) throw new IllegalStateException(
-            s"docId collision across batches ($nColl urls); widen keys to " +
-              "(docId, url) for this corpus")
-          (kr.getLong(0), if (kr.isNullAt(1)) 0L else kr.getLong(1))
-        }
+      // the cross-batch xxhash64 collision check: a delta url landing on a
+      // previously indexed docId must be the SAME url (an update), else
+      // the tombstone would silently drop the old document
+      if (k.collisions > 0) throw new IllegalStateException(
+        s"docId collision across batches (${k.collisions} urls); widen keys to " +
+          "(docId, url) for this corpus")
 
       // dict DELTA: ⊕ the delta segment's term stats ⊖ the killed docs',
       // written as ONE signed delta link appended to the dict chain —
@@ -671,14 +591,10 @@ object Tables {
       // postings stay physically inside old files until compaction, so
       // the old pointers remain correct (a superset is fine for pruning).
       val dictAdd =
-        if (hasDelta) termStats(spark, Seq(s"$seg/index"))
+        if (staged.isDefined) termStats(spark, Seq(s"$seg/index"))
         else spark.emptyDataset[DictRow].toDF()
-      val dictSub = killed
-        .select(explode($"tfs").as(Seq("term", "tf")))
-        .groupBy($"term")
-        .agg(count(lit(1)).as("subDf"), sum($"tf").as("subCf"))
       val dictDelta = dictAdd
-        .join(dictSub, Seq("term"), "full_outer")
+        .join(k.dictSub, Seq("term"), "full_outer")
         .select($"term",
           (coalesce($"df", lit(0L)) - coalesce($"subDf", lit(0L))).as("df"),
           (coalesce($"cf", lit(0L)) - coalesce($"subCf", lit(0L))).as("cf"),
@@ -688,64 +604,27 @@ object Tables {
       sub("dictWrite") {
         io.writeParquet(dictDelta, io.dictDir(batchId)) }
 
-      // tombstones: new rows override old rows for the same docId. Two
-      // sources: (a) killed = affected ids with a live older occurrence;
-      // (b) delta ids that carry an old tombstone (a doc re-added after a
-      // purge — the "~" row must soften to `before = batchId`, else the
-      // new segment's row stays dead; it can't simply be dropped, the
-      // purged segment row is still physically present). When the old
-      // set is empty AND nothing in the batch previously existed, both
-      // sources are empty by construction — skip the whole section's
-      // jobs (the steady-state pure-append batch pays zero tombstone
-      // work). Otherwise ONLY this batch's rows are written, as a new
-      // link of the tombstone chain (tombstonesView folds per docId,
-      // newest link wins — the same replacement the full-rewrite layout
-      // applied at write time): tombstone bytes per append are O(batch),
-      // never O(accumulated set) — the r5 judge's residual #5; LsmSpec
-      // asserts the byte bound.
-      val (tombCount, tombChain) =
-        if (old.tombstoneCount == 0 && nExisting == 0)
-          (0L, Seq.empty[String])
-        else {
-          val revived = deltaIds
-            .join(old.tombstones.toDF().select($"docId"), Seq("docId"),
-              "left_semi")
-          val newTombRows = killed.select($"docId").union(revived).distinct()
-            .join(deltaIds.withColumn("isDelta", lit(1)), Seq("docId"), "left")
-            .select($"docId",
-              when($"isDelta".isNotNull, lit(batchId))
-                .otherwise(lit(PurgeSentinel)).as("before"))
-            .persist()
-          // one aggregate sizes the link and its overlap with the old
-          // ids, keeping the folded count exact integer arithmetic:
-          // new = old + |link| − |link ∩ old ids|
-          val cnt = sub("tombLink") {
-            newTombRows
-              .join(maybeBroadcast(old.tombstones.toDF()
-                  .select($"docId").withColumn("had", lit(1)),
-                old.tombstoneCount), Seq("docId"), "left")
-              .agg(count(lit(1)), count($"had")).head() }
-          val linkN = cnt.getLong(0)
-          val overlapN = cnt.getLong(1)
-          // partitioned link files, sized by row count — never a
-          // single driver-squeezed coalesce(1) file at scale
-          if (linkN > 0) {
-            val parts = math.min(linkN / 4000000L + 1L, 1024L).toInt
-            io.writeParquet(newTombRows.coalesce(parts),
-              io.tombsDir(batchId))
-          }
-          newTombRows.unpersist()
-          (old.tombstoneCount + linkN - overlapN,
-            if (linkN > 0) old.tombChain :+ batchId else old.tombChain)
-        }
+      // tombstones: ONLY this batch's rows are written, as a new link of
+      // the tombstone chain (tombstonesView folds per docId, newest link
+      // wins): tombstone bytes per append are O(batch), never
+      // O(accumulated set); LsmSpec asserts the byte bound. The folded
+      // count stays exact integer arithmetic:
+      // new = old + |link| − |link ∩ old ids|. Link files are partitioned
+      // by row count — never a single driver-squeezed file at scale.
+      if (k.linkN > 0) sub("tombWrite") {
+        val parts = math.min(k.linkN / 4000000L + 1L, 1024L).toInt
+        io.writeParquet(k.link.coalesce(parts), io.tombsDir(batchId))
+      }
 
       writeStats(spark, io, batchId,
-        old.stats.n - killedN + deltaN,
-        old.stats.sumDl - killedDl + deltaDl)
-      val segs = if (hasDelta) old.segments :+ batchId else old.segments
-      io.writeManifest(batchId, segs, tombCount, old.dictChain :+ batchId,
-        tombChain = tombChain, old.positions)
-    } finally { killed.unpersist(); affected.unpersist() }
+        old.stats.n - k.n + deltaN,
+        old.stats.sumDl - k.dl + deltaDl)
+      val segs = if (staged.isDefined) old.segments :+ batchId else old.segments
+      io.writeManifest(batchId, segs, old.tombstoneCount + k.linkN - k.overlap,
+        old.dictChain :+ batchId,
+        tombChain = if (k.linkN > 0) old.tombChain :+ batchId else old.tombChain,
+        old.positions)
+    } finally k.release()
   }
 
   // ---- compaction -------------------------------------------------------
@@ -763,9 +642,9 @@ object Tables {
                      batchId: String,
                      staged: Option[Staged],
                      purged: Dataset[Long],
-                     purgedEmpty: Boolean = false): Unit = {
+                     purgedN: Long): Unit = {
     import spark.implicits._
-    checkBucketBits(old)
+    checkWritable(io, old)
     def paths(segs: Seq[String], sub: String) = segs.map(s => s"${io.segmentDir(s)}/$sub")
     val (base, tail) = (old.segments.take(1), old.segments.tail)
 
@@ -773,7 +652,7 @@ object Tables {
       case Some(st) =>
         (readDocs(spark, Seq(st.docsDir)),
           readBlocks(spark, Seq(st.blocksDir)).flatMap(SegmentBuilder.decodeBlock _),
-          Some(readFwdDir(spark, st.analyzedDir).drop("fb")))
+          Some(readFwdDir(spark, st.analyzedDir)))
       case None =>
         (spark.emptyDataset[DocRow], spark.emptyDataset[Posting], None)
     }
@@ -781,7 +660,7 @@ object Tables {
     // their tail-segment occurrences must not ride along (no tombstone is
     // written for them — compaction removes the rows physically)
     val (overridden, overriddenCount) = affectedIds(stagedDocs.select($"docId"),
-      staged.fold(0L)(_.rows), purged, purgedEmpty)
+      staged.fold(0L)(_.rows), purged, purgedN)
     // rows that survive the fold: live (the tombstone anti-join) and not
     // overridden
     def survivors(rows: DataFrame, batch: String): DataFrame =
@@ -818,9 +697,7 @@ object Tables {
       case Some(f) => oldFwdLive.unionByName(f)
       case None => oldFwdLive
     }
-    // compacted segment ≈ corpus-sized: width from the pre-compaction
-    // corpus count (already on hand — no extra pass)
-    writeFwd(fwdNew, s"$seg/fwd", chooseFwdBits(math.max(old.stats.n, 1L)))
+    writeFwd(fwdNew, s"$seg/fwd")
     // pos, the same way: live, not overridden positions of the old
     // segments (a segment's rows are live-as-of the segment, as for fwd)
     // plus the staged delta's

@@ -228,8 +228,10 @@ class DriverReadSpec extends SparkTestBase {
     val io = new TableIO(spark, root)
     SyncJob.run(spark, io, spark.createDataset(Corpus.localRows(300)), ts(300))
     val file = s"$root/small-pages"
+    val pageRows = 20
     new IndexReader(spark, root).docs.coalesce(1).sortWithinPartitions("docId")
-      .write.option("parquet.page.row.count.limit", 20L).parquet(file)
+      .write.option("parquet.page.row.count.limit", pageRows.toLong)
+      .option("parquet.page.size.row.check.min", pageRows.toLong).parquet(file)
     val total = spark.read.parquet(file).count()
     val ids = Seq(5, 150, 290).map(i => graft.index.DocIds.docId(Corpus.url(i)))
     val seen = new AtomicInteger
@@ -240,7 +242,45 @@ class DriverReadSpec extends SparkTestBase {
       i => { seen.incrementAndGet(); keep(i) }
     }.get
     assert(got.map(_.docId).sorted.toSeq == ids.sorted)
-    assert(seen.get < total, s"read ${seen.get} of $total rows before the docId check")
+    // one page per id: the pushed sorted-id predicate, unlike an IN set,
+    // prunes the pages between the ids
+    assert(seen.get <= ids.size * pageRows,
+      s"read ${seen.get} of $total rows before the docId check")
+  }
+
+  test("the killed lookup runs no Spark job and equals the Spark join") {
+    val root = tmpDir("graft-driver-killed")
+    val io = new TableIO(spark, root)
+    val n = 2000
+    SyncJob.run(spark, io, spark.createDataset(Corpus.localRows(n)), ts(n))
+    def id(i: Long) = graft.index.DocIds.docId(Corpus.url(i))
+    def check(io: TableIO, ids: Seq[Long], want: Int): Unit = {
+      val old = Tables.loadCurrent(spark, io).get
+      val (rows, jobs) = jobsDuring(Tables.killedRows(io, old, ids))
+      assert(jobs == 0, s"$jobs Spark jobs in the killed lookup")
+      val viaSpark = Tables.killedFrame(spark, io, old, ids.toDF("docId"), ids.size)
+        .as[Tables.FwdRow].collect().toSet
+      assert(rows.get.size == want && rows.get.toSet == viaSpark)
+    }
+    // a 10-doc update, a pure append and a 10-doc purge of the build
+    check(io, (0 until 10).map(i => id(i * 97L)), 10)
+    check(io, (n until n + 10).map(id(_)), 0)
+    check(io, (n - 10 until n).map(id(_)), 10)
+    // 3 segments with tombstones: [0, 40) re-crawled (older rows dead),
+    // [40, 50) and [385, 390) live, [390, 395) re-added after the purge,
+    // [395, 400) purged, [1000, 1005) never indexed
+    val churn = new TableIO(spark, churnRoot)
+    check(churn, (Seq(0 until 50, 385 until 400, 1000 until 1005).flatten).map(id(_)), 60)
+    // past the budget, or over a distributed tombstone set: no driver read
+    assert(Tables.killedRows(io, Tables.loadCurrent(spark, io).get,
+      (0 to Tables.KilledLocalMax).map(i => id(n + i))).isEmpty)
+    val prev = sys.props.get("graft.tombstones.broadcastMax")
+    sys.props("graft.tombstones.broadcastMax") = "0"
+    try assert(Tables.killedRows(churn, Tables.loadCurrent(spark, churn).get, Seq(id(0))).isEmpty)
+    finally prev match {
+      case Some(v) => sys.props("graft.tombstones.broadcastMax") = v
+      case None => sys.props.remove("graft.tombstones.broadcastMax")
+    }
   }
 
   test("the pushed term predicate skips other terms' row groups") {

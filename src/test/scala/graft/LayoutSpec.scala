@@ -46,6 +46,36 @@ class LayoutSpec extends SparkTestBase {
       _.replaceAll(""","tombs":\[[^\]]*\]""", ""))
   }
 
+  test("a segment whose fwd keeps the older fb= bucket layout is refused") {
+    import spark.implicits._
+    val root = tmpDir("graft-layout-fwd")
+    val io = new TableIO(spark, root)
+    val rows = Corpus.localRows(200)
+    SyncJob.run(spark, io, spark.createDataset(rows), ts(200))
+    val version = io.currentVersion().get
+    // the older layout: the rows under fb=<bucket>/ plus the width file
+    val fwd = new java.io.File(s"${io.segmentDir(io.manifest(version).segments.head)}/fwd")
+    val bucket = new java.io.File(fwd, "fb=0")
+    assert(bucket.mkdir())
+    fwd.listFiles.filter(_.isFile).foreach(f =>
+      java.nio.file.Files.copy(f.toPath, new java.io.File(bucket, f.getName).toPath))
+    io.writeSmallFile(s"$fwd/_fwd_bits", "1")
+
+    // an update (a re-crawl and 5 new docs) and a purge (20 docs) both
+    // refuse
+    val upd = rows.map(p => if (p.url.endsWith("/doc/3")) p.copy(warc_ts = ts(1000)) else p) ++
+      Corpus.localRows(205).drop(200)
+    val onSync = intercept[IllegalStateException] {
+      SyncJob.run(spark, io, spark.createDataset(upd), ts(1000))
+    }
+    val onPurge = intercept[IllegalStateException] {
+      PurgeJob.run(spark, io, spark.createDataset(rows.take(180)), ts(1001))
+    }
+    Seq(onSync, onPurge).foreach(e =>
+      assert(e.getMessage.contains("fb=") && e.getMessage.contains("rebuild it"), e.getMessage))
+    assert(io.currentVersion().contains(version))
+  }
+
   test("a leftover deadPostings field in a manifest is ignored") {
     val root = tmpDir("graft-layout-dead")
     val io = new TableIO(spark, root)

@@ -91,10 +91,8 @@ class LshPairsSpec extends SparkTestBase {
     }
   }
 
-  test("large-corpus verify joins: size-adapted path gives identical results") {
-    // above the cap the simhash/embedding verifiers count + broadcast
-    // the candidate pairs instead of trusting planner estimates; the
-    // branch must be invisible in the results
+  /** 90 docs (every third a shared template) and 60 vectors (in threes). */
+  private def bigDir(): String = {
     val dir = tmpDir("graft-lshbig")
     val docs = (0L until 90L).map { i =>
       val text =
@@ -111,6 +109,14 @@ class LshPairsSpec extends SparkTestBase {
     }
     vecs.toDF("vec_id", "embedding")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+    dir
+  }
+
+  test("large-corpus verify joins: size-adapted path gives identical results") {
+    // above the cap the simhash/embedding verifiers count + broadcast
+    // the candidate pairs instead of trusting planner estimates; the
+    // branch must be invisible in the results
+    val dir = bigDir()
     def runQ(n: String): Seq[org.apache.spark.sql.Row] = {
       SparkEntry.clearQueryCaches()
       SparkEntry.queries(n)(spark, dir).collect().toSeq
@@ -132,6 +138,34 @@ class LshPairsSpec extends SparkTestBase {
         case None => sys.props.remove("graft.lsh.maxBucket")
       }
     }
+  }
+
+  test("repeated large-corpus calls keep one persisted frame per query") {
+    val dir = bigDir()
+    val qs = Seq("q_simhash_near", "q_dedup_embed")
+    def runAll() = qs.map(q => SparkEntry.queries(q)(spark, dir).collect().toSeq)
+    val prev = sys.props.get("graft.lsh.maxBucket")
+    sys.props("graft.lsh.maxBucket") = "16" // 90 docs / 60 vecs > cap
+    try {
+      SparkEntry.clearQueryCaches()
+      val first = runAll()
+      val persisted = spark.sparkContext.getPersistentRDDs.size
+      // no clearQueryCaches between calls: each call releases its
+      // query's previous frame
+      (1 to 3).foreach { _ =>
+        assert(runAll() == first, "answers changed across calls")
+        assert(SparkEntry.adHocPersists.size == qs.size)
+        assert(spark.sparkContext.getPersistentRDDs.size <= persisted,
+          s"${spark.sparkContext.getPersistentRDDs.size} persisted RDDs, $persisted after the first calls")
+      }
+    } finally {
+      SparkEntry.clearQueryCaches()
+      prev match {
+        case Some(v) => sys.props("graft.lsh.maxBucket") = v
+        case None => sys.props.remove("graft.lsh.maxBucket")
+      }
+    }
+    assert(SparkEntry.adHocPersists.isEmpty)
   }
 
   test("degenerate corpus end-to-end: q_dedup_minhash identical on both paths") {

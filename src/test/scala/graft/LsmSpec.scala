@@ -5,7 +5,11 @@ import graft.corpus.Corpus
 import graft.oracle.NaiveIndex
 import graft.query.IndexReader
 import graft.sources.TableIO
-import graft.sync.{Checkpoint, PurgeJob, SyncJob}
+import graft.sync.{Checkpoint, PurgeJob, SyncJob, Tables}
+import org.apache.parquet.filter2.predicate.FilterPredicate
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.vectorized.ColumnarBatch
+import scala.jdk.CollectionConverters._
 
 /** LSM storage-layer guarantees: incremental syncs write O(delta) bytes
   * (the scale property the reference gets from Solr/Lucene segment adds —
@@ -333,57 +337,47 @@ class LsmSpec extends SparkTestBase {
     }
   }
 
-  test("update-path fwd lookup opens only affected buckets (byte bound)") {
-    val root = tmpDir("graft-fwdbuckets")
-    val io = new TableIO(spark, root)
+  test("update-path fwd lookup reads only the affected docIds' pages (row bound)") {
+    val root = tmpDir("graft-fwdpages")
+    // records every driver read's paths: the killed lookup must read the
+    // old segments' fwd only, never a docs dir
+    val io = new ReadRecordingIO(spark, root)
+    val reads = io.reads
     val N = 2000
     val rows = Corpus.localRows(N)
     SyncJob.run(spark, io, spark.createDataset(rows), ts(N))
     val seg1 = io.readManifest(io.currentVersion().get)._1.head
     val fwdBase = s"${io.segmentDir(seg1)}/fwd"
 
-    // the bucketed layout exists: ~2^fwdBucketBits fb= dirs, and the
-    // width the initial build used is RECORDED with the segment (readers
-    // must never guess it from runtime config)
-    val bits = graft.sync.Tables.fwdBitsOf(io, seg1)
-    assert(bits == graft.sync.Tables.fwdBucketBits,
-      s"initial build must use the configured ceiling, recorded $bits")
-    val shift = 64 - bits
-    val fbDirs = new java.io.File(fwdBase).listFiles()
-      .filter(_.getName.startsWith("fb=")).map(_.getName)
-    assert(fbDirs.length > 200, s"expected ~256 fwd buckets, got ${fbDirs.length}")
+    // the flat layout: part files sorted by docId, no fb= dirs, no width
+    // recording
+    val enc = ExpressionEncoder[Tables.FwdRow]().resolveAndBind()
+    val entries = new java.io.File(fwdBase).listFiles().toSeq
+    assert(!entries.exists(_.isDirectory) && !entries.exists(_.getName == "_fwd_bits"),
+      entries.map(_.getName).mkString(", "))
+    entries.filter(_.getName.endsWith(".parquet")).foreach { f =>
+      val ids = io.readLocal(Seq(f.getPath), enc)().get.map(_.docId).toSeq
+      assert(ids.nonEmpty && ids == ids.sorted, s"${f.getName} unsorted")
+    }
 
-    // a 0.5% update (10 docs) touches ≤ 10 buckets — the killed lookup's
-    // tfs read is bounded by those buckets' bytes, < 10% of fwd
+    // a 0.5% update (10 docs): the read with their docIds pushed yields
+    // < 10% of fwd's rows to the per-row test
     val updIdx = (0 until 10).map(_ * 97L)
     val affectedIds = updIdx.map(i => graft.index.DocIds.docId(Corpus.url(i)))
-    val fbs = affectedIds.map(d => (d >>> shift).toInt).distinct
-    val prunedBytes = fbs.map(fb => io.dirBytes(s"$fwdBase/fb=$fb")).sum
-    val totalBytes = io.dirBytes(fwdBase)
-    assert(prunedBytes < totalBytes / 10,
-      s"pruned read $prunedBytes bytes vs $totalBytes total — not O(affected)")
+    val seen = new java.util.concurrent.atomic.AtomicInteger
+    val (pushed, inIds) = TableIO.longIn("docId", enc.schema.fieldIndex("docId"), affectedIds)
+    val got = io.readLocal(Seq(fwdBase), enc, Some(pushed)) { batch =>
+      val keep = inIds(batch)
+      i => { seen.incrementAndGet(); keep(i) }
+    }.get
+    assert(got.map(_.docId).sorted.toSeq == affectedIds.sorted)
+    assert(seen.get < N / 10, s"pushed read yielded ${seen.get} of $N rows — not O(affected)")
 
-    // the pruned read returns exactly the affected buckets' rows
-    val pruned = graft.sync.Tables.readFwdPruned(spark, io, Seq(seg1),
-        spark.createDataset(affectedIds).toDF("docId"))
-      .select("docId").as[Long].collect().toSet
-    val fbSet = fbs.toSet
-    val wantIds = rows.map(p => graft.index.DocIds.docId(p.url))
-      .filter(d => fbSet((d >>> shift).toInt)).toSet
-    assert(pruned == wantIds)
-    assert(affectedIds.forall(pruned))
-
-    // the all-buckets shortcut (affectedCount ≥ 4·2^bits) skips the
-    // distinct-probe job and reads the whole dir — a correct SUPERSET
-    // (readFwdPruned's contract is "contains every affected bucket's
-    // rows"; every caller joins against the affected set afterwards)
-    val shortcut = graft.sync.Tables.readFwdPruned(spark, io, Seq(seg1),
-        spark.createDataset(affectedIds).toDF("docId"),
-        affectedCount = 4L << bits)
-      .select("docId").as[Long].collect().toSet
-    assert(shortcut == rows.map(p => graft.index.DocIds.docId(p.url)).toSet,
-      "shortcut read must return the whole segment")
-    assert(pruned.subsetOf(shortcut))
+    // the killed lookup returns those rows, reading only fwd
+    reads.clear()
+    val killed = Tables.killedRows(io, Tables.loadCurrent(spark, io).get, affectedIds).get
+    assert(killed.map(_.docId).sorted == affectedIds.sorted)
+    assert(reads.asScala.forall(_ == fwdBase), s"killed lookup read ${reads.asScala.mkString(", ")}")
 
     // and the update batch that exercises this path stays exact
     val upd = rows.map { p =>
@@ -392,45 +386,87 @@ class LsmSpec extends SparkTestBase {
         p.copy(warc_ts = new Timestamp(Corpus.warcTsMillis(i + 10L * N)))
       else p
     }
+    reads.clear()
     SyncJob.run(spark, io, spark.createDataset(upd), ts(11L * N))
+    val deltaDocs = s"${io.segmentDir(Checkpoint.toBatchId(ts(11L * N)))}/docs"
+    assert(!reads.asScala.exists(p => p.endsWith("/docs") && p != deltaDocs),
+      s"the sync read an old segment's docs on the driver: ${reads.asScala.mkString(", ")}")
     val oracle = new NaiveIndex(upd)
     val reader = new IndexReader(spark, root)
     assert(reader.stats.n == oracle.n)
     assert(reader.stats.avgdl == oracle.avgdl)
-    val got = reader.topK("document", 10).map(h => (h.docId, h.score)).toSeq
-    assert(got == oracle.topK("document", 10).map(h => (h.docId, h.score)).toSeq)
+    val got2 = reader.topK("document", 10).map(h => (h.docId, h.score)).toSeq
+    assert(got2 == oracle.topK("document", 10).map(h => (h.docId, h.score)).toSeq)
+    // the 10 re-crawled docs' older rows are tombstoned
+    assert(Tables.loadCurrent(spark, io).get.dead.keySet == affectedIds.toSet)
+  }
 
-    // the 10-doc delta segment adapted to a FLAT fwd layout (a fixed-width
-    // 256-dir write costs seconds regardless of rows) — its recorded width
-    // is 0 and the mixed-width killed lookup above still pruned seg1
-    val segs2 = io.readManifest(io.currentVersion().get)._1
-    val deltaSeg = segs2.filterNot(_ == seg1).head
-    assert(graft.sync.Tables.fwdBitsOf(io, deltaSeg) == 0,
-      "a 10-row delta must not pay a 256-dir bucketed write")
+  /** A version's folded dict (term → (df, cf)), (n, sumDl) and folded
+    * tombstones (docId → before).
+    */
+  private def lsmState(root: String) = {
+    val io = new TableIO(spark, root)
+    val t = Tables.loadCurrent(spark, io).get
+    (Tables.dictView(spark, io, t.dictChain).as[DictRow].collect()
+      .map(r => r.term -> ((r.df, r.cf))).toMap,
+      (t.stats.n, t.stats.sumDl),
+      Tables.tombstonesView(spark, io, t.tombChain).collect().map(x => x.docId -> x.before).toMap)
+  }
 
-    // the append pre-check (existing-docId probe) is bucket-pruned too:
-    // its scan lists ONLY the affected fb= dirs of the corpus-scale
-    // segment (plus the tiny flat delta segment, read whole by design) —
-    // never every segment's docs/fwd docId column (the last O(corpus)
-    // read the r4 append path still had)
-    val affDf = spark.createDataset(affectedIds).toDF("docId")
-    val pre = graft.sync.Tables.existingAffected(spark, io, segs2, affDf,
-      affectedIds.size.toLong)
-    val scanFiles = pre.inputFiles.filter(_.contains(s"/fb="))
-    assert(scanFiles.nonEmpty, "pre-check lists no bucketed files")
-    assert(scanFiles.forall(f => fbSet.exists(fb => f.contains(s"/fb=$fb/"))),
-      s"pre-check scans unaffected buckets:\n${scanFiles.mkString("\n")}")
-    assert(!pre.inputFiles.exists(_.contains("/docs/")),
-      "pre-check must not scan docs dirs")
-    // byte bound: the bucketed segment contributes only affected buckets
-    val preBytes = fbs.map(fb => io.dirBytes(s"$fwdBase/fb=$fb")).sum +
-      io.dirBytes(s"${io.segmentDir(deltaSeg)}/fwd")
-    val corpusBytes = segs2.map(s => io.dirBytes(s"${io.segmentDir(s)}/fwd")).sum +
-      segs2.map(s => io.dirBytes(s"${io.segmentDir(s)}/docs")).sum
-    assert(preBytes < corpusBytes / 10,
-      s"pre-check may read $preBytes bytes vs $corpusBytes corpus — not pruned")
-    // and the probe is exact: every affected id exists (10 updated docs)
-    assert(pre.select("docId").distinct().count() == affectedIds.size.toLong)
+  private def idx(p: PageRow): Long = p.url.split("/").last.toLong
+
+  /** Page `p` crawled again `shift` rows later, with another page's text. */
+  private def recrawl(p: PageRow, shift: Long): PageRow =
+    Corpus.row(idx(p) + 1000000L).copy(url = p.url, warc_ts = ts(idx(p) + shift))
+
+  test("killed side: broadcastMax=0 gives the driver path's dict, stats and tombstones") {
+    // a 600-doc build, a 10-doc purge, then one batch of 59 re-crawls, 5
+    // re-adds of purged docs and 40 new docs: the driver path, and with
+    // the tombstone set distributed the Spark join
+    def history(root: String): Unit = {
+      val io = new TableIO(spark, root)
+      val rows = Corpus.localRows(600)
+      SyncJob.run(spark, io, spark.createDataset(rows), ts(600))
+      val kept = rows.filter(idx(_) < 590)
+      PurgeJob.run(spark, io, spark.createDataset(kept), ts(601))
+      val upd = kept.map(p => if (idx(p) % 10 == 0) recrawl(p, 2000) else p) ++
+        rows.slice(590, 595) ++ Corpus.localRows(640).drop(600)
+      SyncJob.run(spark, io, spark.createDataset(upd), ts(3000))
+    }
+    val driver = tmpDir("graft-killed-driver")
+    history(driver)
+    val dist = tmpDir("graft-killed-dist")
+    val prev = sys.props.get("graft.tombstones.broadcastMax")
+    sys.props("graft.tombstones.broadcastMax") = "0"
+    try history(dist)
+    finally prev match {
+      case Some(v) => sys.props("graft.tombstones.broadcastMax") = v
+      case None => sys.props.remove("graft.tombstones.broadcastMax")
+    }
+    val want = lsmState(driver)
+    // 59 re-crawls, 5 softened purge rows, 5 purge rows kept
+    assert(want._3.size == 69 && want._3.values.count(_ == Tables.PurgeSentinel) == 5)
+    assert(lsmState(dist) == want)
+  }
+
+  test("killed side past the driver budget: dict and stats equal a fresh build's") {
+    val n = 2500
+    val root = tmpDir("graft-killed-big")
+    val io = new TableIO(spark, root)
+    val rows = Corpus.localRows(n)
+    SyncJob.run(spark, io, spark.createDataset(rows), ts(n))
+    // every doc re-crawled plus 1,700 new: more affected docIds than the
+    // driver lookup takes
+    val upd = rows.map(recrawl(_, 10L * n)) ++ Corpus.localRows(n + 1700).drop(n)
+    assert(upd.size > Tables.KilledLocalMax)
+    val batch = ts(20L * n)
+    SyncJob.run(spark, io, spark.createDataset(upd), batch)
+    val fresh = tmpDir("graft-killed-fresh")
+    SyncJob.run(spark, new TableIO(spark, fresh), spark.createDataset(upd), batch)
+    val (dict, stats, tombs) = lsmState(root)
+    val (freshDict, freshStats, _) = lsmState(fresh)
+    assert(stats == freshStats && dict == freshDict)
+    assert(tombs == rows.map(p => graft.index.DocIds.docId(p.url) -> Checkpoint.toBatchId(batch)).toMap)
   }
 
   test("query with a dict-dead term (df hit 0 under churn) must not crash") {
@@ -538,5 +574,17 @@ class LsmSpec extends SparkTestBase {
     release()
     val release2 = io.acquireLock("job-c")
     release2()
+  }
+}
+
+/** A [[TableIO]] that records the paths of every driver read. */
+class ReadRecordingIO(spark: org.apache.spark.sql.SparkSession, root: String)
+    extends TableIO(spark, root) {
+  val reads = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+  override def readLocal[T](paths: Seq[String], enc: ExpressionEncoder[T],
+                            pushed: Option[FilterPredicate], max: Int)
+                           (keep: ColumnarBatch => Int => Boolean): Option[Array[T]] = {
+    paths.foreach(reads.add)
+    super.readLocal(paths, enc, pushed, max)(keep)
   }
 }

@@ -80,24 +80,39 @@ class PlanSpec extends SparkTestBase {
     assert(plan.contains("Sort ["), s"expected within-partition sort:\n$plan")
   }
 
-  test("fused initial fwd: dedup + bucket clustering in ONE exchange") {
-    // fb = f(url), so the last-write-wins window keyed (fb, url) runs on
-    // the fb exchange's partitioning — a second exchange here would mean
-    // the initial build went back to shuffling the corpus twice
-    val frame = graft.sync.Tables.fusedInitialFrame(
-      Corpus.pages(spark, 300, 4), bits = 4)
-    val plan = executedPlan(frame)
-    val exchanges = "Exchange ".r.findAllIn(plan).length
+  test("initial fwd write: dedup, analyze and the docId-sorted write in ONE exchange") {
+    // the last-write-wins dedup's exchange by url is the write's only
+    // one: a second would shuffle the analyzed corpus (the heavy tfs
+    // maps) again just to lay the files out
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                             ns: Long): Unit = plans.add(qe.executedPlan.toString)
+      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                             e: Exception): Unit = ()
+    }
+    val io = new TableIO(spark, tmpDir("graft-plan-fwd"))
+    // 300 pages plus 30 re-crawls of the same urls, all in one batch
+    val pages = Corpus.pages(spark, 300, 4).union(Corpus.pages(spark, 30, 2)
+      .map(p => p.copy(warc_ts = new Timestamp(p.warc_ts.getTime + 1000L))))
+    spark.listenerManager.register(listener)
+    try SyncJob.run(spark, io, pages, new Timestamp(Corpus.warcTsMillis(2000)))
+    finally {
+      org.apache.spark.TestBus.drain(spark.sparkContext)
+      spark.listenerManager.unregister(listener)
+    }
+    import scala.jdk.CollectionConverters._
+    val writes = plans.asScala.filter(
+      "InsertIntoHadoopFsRelationCommand \\S*/analyzed,".r.findFirstIn(_).isDefined).toSeq
+    assert(writes.size == 1, s"expected one staged fwd write, saw ${writes.size}")
+    val plan = writes.head
+    val finalPlan = plan.substring(0, Some(plan.indexOf("== Initial Plan ==")).filter(_ >= 0)
+      .getOrElse(plan.length))
+    val exchanges = "Exchange ".r.findAllIn(finalPlan).length
     assert(exchanges == 1, s"expected 1 shuffle, saw $exchanges:\n$plan")
-    assert(plan.contains("Window"), s"expected the dedup window:\n$plan")
-    // and the fused winners equal latestPerUrl's (same order keys)
-    val viaWindow = graft.sync.SyncJob
-      .latestPerUrl(Corpus.pages(spark, 300, 4))
-      .select($"url", $"warc_ts").as[(String, java.sql.Timestamp)]
-      .collect().toSet
-    val viaFused = frame.select($"url", $"warc_ts")
-      .as[(String, java.sql.Timestamp)].collect().toSet
-    assert(viaFused == viaWindow, "fused dedup picked different winners")
+    assert(finalPlan.contains("Window"), s"expected the dedup window:\n$plan")
+    val fwd = io.readParquet(s"${io.segmentDir(io.currentVersion().get)}/fwd")
+    assert(fwd.count() == 300 && fwd.select("url").distinct().count() == 300)
   }
 
   test("posting explode stays inside whole-stage codegen") {

@@ -54,7 +54,7 @@ class SegmentPositionsSpec extends SparkTestBase {
     val b1 = Checkpoint.toBatchId(ts(11L * M))
     val cp = new Checkpoint(spark, io)
     SyncJob.stageAnalyzed(spark, io, cp, b1, SyncJob.Process, "pages",
-      spark.createDataset(delta1), None, initial = false)
+      spark.createDataset(delta1))
     assert(io.exists(io.stagingDir(b1, "pos")), "analyze staged no positions")
     assert(cp.oldestUnfinished(SyncJob.Process).contains(b1))
     SyncJob.run(spark, io, spark.createDataset(live1), ts(11L * M))
