@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.PageRow
 import graft.analysis.Tokenizer
 import graft.extract.HtmlText
+import graft.sources.TableIO
 
 /** Positional posting index — the optional phrase-query capability
   * (SURVEY §7.7 stretch; reference analog: the Solr core's positional
@@ -135,6 +136,5 @@ object Positional extends Serializable {
 
   /** Encode one pages frame into a positional-blocks dir. */
   def writeBlocks(pages: Dataset[PageRow], dir: String): Unit =
-    buildBlocks(toPositionalPostings(pages)).toDF()
-      .write.mode("overwrite").parquet(dir)
+    TableIO.writeTermSorted(buildBlocks(toPositionalPostings(pages)).toDF(), dir)
 }

@@ -2,15 +2,16 @@ package graft.sources
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileContext, FileStatus, FileSystem, Options, Path}
-import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate, Operators, Statistics, UserDefinedPredicate}
+import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate, Statistics, UserDefinedPredicate}
 import org.apache.parquet.hadoop.ParquetInputFormat
 import org.apache.parquet.io.api.Binary
+import org.apache.parquet.schema.PrimitiveComparator
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport, VectorizedParquetRecordReader}
-import org.apache.spark.sql.execution.vectorized.WritableColumnVector
 import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.BinaryType
 import org.apache.spark.sql.vectorized.ColumnarBatch
 import org.apache.spark.unsafe.types.UTF8String
 import graft.CorpusStats
@@ -430,58 +431,79 @@ object TableIO {
                       dictChain: Seq[String], tombChain: Seq[String],
                       bucketBits: Int, positions: Boolean)
 
+  /** Rows per Parquet page of a term-sorted file ([[writeTermSorted]]). */
+  val TermPageRows: Int = 1024
+
+  /** The one writer of the term-sorted files: segment `index` and `pos`
+    * blocks and dict links. Each task's partition, sorted by term by the
+    * caller, becomes one zstd file in pages of at most [[TermPageRows]]
+    * rows (`page.size.row.check.min` is set with the limit, as in
+    * [[graft.sync.Tables.writeFwd]]), so a read that pushes a few terms
+    * ([[stringIn]]) decodes about one page per term and file, not the
+    * file. `term` and every binary column are written without a
+    * dictionary: in a term-sorted file they barely repeat, so a
+    * dictionary only adds a page to decode per column and file.
+    */
+  def writeTermSorted(df: DataFrame, path: String): Unit =
+    df.write.mode("overwrite").options(Map(
+      "compression" -> "zstd",
+      "parquet.page.row.count.limit" -> TermPageRows.toString,
+      "parquet.page.size.row.check.min" -> TermPageRows.toString) ++
+      df.schema.fields.collect { case f if f.name == "term" || f.dataType == BinaryType =>
+        s"parquet.enable.dictionary#${f.name}" -> "false" })
+      .parquet(path)
+
   /** `column IN values` over a string column at `ordinal` of a
-    * [[TableIO.readLocal]] schema: the predicate pushed into the Parquet
-    * reader, and the same test per row. A dictionary-encoded batch tests
-    * each run of one dictionary id once, not each row's bytes.
+    * [[TableIO.readLocal]] schema: the pushed predicate and the per-row
+    * test. The predicate is [[SortedIn]] in [[BinaryOrder]], so a query
+    * whose terms lie far apart keeps only the pages of a term-sorted file
+    * that hold one of them.
     */
   def stringIn(column: String, ordinal: Int, values: Seq[String])
       : (FilterPredicate, ColumnarBatch => Int => Boolean) = {
-    import scala.jdk.CollectionConverters._
     val wanted = values.map(UTF8String.fromString).toSet
-    (FilterApi.in[Binary, Operators.BinaryColumn](FilterApi.binaryColumn(column),
-      values.map(Binary.fromString).toSet.asJava), batch => batch.column(ordinal) match {
-        case v: WritableColumnVector if v.hasDictionary =>
-          val ids = v.getDictionaryIds
-          var (lastId, lastIn) = (-1, false)
-          i => {
-            val id = ids.getDictId(i)
-            if (id != lastId) { lastId = id; lastIn = wanted(v.getUTF8String(i)) }
-            lastIn
-          }
-        case v => i => wanted(v.getUTF8String(i))
-      })
+    (FilterApi.userDefined[Binary, SortedIn[Binary]](FilterApi.binaryColumn(column),
+      new SortedIn(values.map(Binary.fromString), BinaryOrder)),
+      batch => wanted.compose(batch.column(ordinal).getUTF8String))
   }
 
+  /** The order of Parquet's statistics on a UTF-8 column: unsigned bytes.
+    * It is not `String.compareTo`'s UTF-16 order, which puts a
+    * supplementary character ("😀") before U+E000–U+FFFF ("Ａ").
+    */
+  private val BinaryOrder: Ordering[Binary] =
+    Ordering.comparatorToOrdering(PrimitiveComparator.UNSIGNED_LEXICOGRAPHICAL_BINARY_COMPARATOR)
+
   /** `column IN values` over a long column at `ordinal` of a
-    * [[TableIO.readLocal]] schema: the pushed predicate and the per-row
-    * test. The predicate is [[LongSet]], not `FilterApi.in`: Parquet's
-    * page filter judges an IN set by its min and max alone, so ids spread
-    * over a sorted file would keep nearly every page.
+    * [[TableIO.readLocal]] schema: the pushed predicate ([[SortedIn]])
+    * and the per-row test.
     */
   def longIn(column: String, ordinal: Int, values: Seq[Long])
       : (FilterPredicate, ColumnarBatch => Int => Boolean) = {
     val wanted = values.toSet
-    (FilterApi.userDefined[java.lang.Long, LongSet](FilterApi.longColumn(column),
-      new LongSet(wanted.toArray.sorted)), batch => wanted.compose(batch.column(ordinal).getLong))
+    (FilterApi.userDefined[java.lang.Long, SortedIn[java.lang.Long]](FilterApi.longColumn(column),
+      new SortedIn(values.map(Long.box), Ordering.by((v: java.lang.Long) => v.longValue))),
+      batch => wanted.compose(batch.column(ordinal).getLong))
   }
 
-  /** A set of sorted ids as a Parquet predicate: a row group or page is
-    * kept only when one of the ids lies in its [min, max], as an OR of
-    * `eq` would keep it. Unlike such an OR, which has Parquet's dictionary
-    * filter decode a row group's dictionary once per id, it decodes it
-    * once.
+  /** A set of values as a Parquet predicate, sorted in `order`, which must
+    * be the order of the column's statistics: a row group or page is kept
+    * only when one of the values lies in its [min, max], as an OR of `eq`
+    * would keep it. `FilterApi.in` judges a set by its min and max alone,
+    * so values spread over a sorted file would keep nearly every page; an
+    * OR of `eq` has Parquet's dictionary filter decode a row group's
+    * dictionary once per value.
     */
-  final class LongSet(ids: Array[Long])
-      extends UserDefinedPredicate[java.lang.Long] with Serializable {
-    override def keep(v: java.lang.Long): Boolean =
-      v != null && java.util.Arrays.binarySearch(ids, v.longValue) >= 0
-    override def canDrop(s: Statistics[java.lang.Long]): Boolean = {
-      val i = java.util.Arrays.binarySearch(ids, s.getMin.longValue)
-      val first = if (i >= 0) i else -i - 1 // the first id >= min
-      first == ids.length || ids(first) > s.getMax.longValue
+  final class SortedIn[T <: Comparable[T]](values: Seq[T], order: Ordering[T])
+      extends UserDefinedPredicate[T] with Serializable {
+    private val sorted = values.distinct.sorted(order).toIndexedSeq
+    override def keep(v: T): Boolean =
+      v != null && sorted.search(v)(order).isInstanceOf[scala.collection.Searching.Found]
+    override def canDrop(s: Statistics[T]): Boolean = {
+      val first = sorted.search(s.getMin)(order).insertionPoint // the first value >= min
+      first == sorted.length || order.gt(sorted(first), s.getMax)
     }
-    override def inverseCanDrop(s: Statistics[java.lang.Long]): Boolean = false
+    override def inverseCanDrop(s: Statistics[T]): Boolean = false
   }
 
   /** Per-thread deserializers by encoder: building one generates code,

@@ -2,6 +2,7 @@ package graft.sync
 
 import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.functions._
 import graft.{IndexBlock, MetricsRow}
 import graft.sources.TableIO
@@ -71,19 +72,23 @@ object Metrics {
     */
   val MaxErrors = 3
 
-  def errorCount(spark: SparkSession, io: TableIO, batchId: String,
-                 process: String): Long = {
-    import org.apache.spark.sql.functions.col
+  /** The batch's recorded failures, read on the driver with no Spark job:
+    * the ledger's files through [[TableIO.readLocal]] with the
+    * [[MetricsRow]] schema and `batch_id` pushed.
+    */
+  def errorCount(io: TableIO, batchId: String, process: String): Long =
     if (!io.exists(io.metricsDir)) 0L
-    else io.readParquet(io.metricsDir)
-      .filter(col("batch_id") === batchId && col("process") === process &&
-        col("result") === "error")
-      .count()
-  }
+    else {
+      val (pushed, keep) = TableIO.stringIn("batch_id", BatchIdOrdinal, Seq(batchId))
+      io.readLocal(Seq(io.metricsDir), RowEncoder, Some(pushed))(keep).get
+        .count(r => r.process == process && r.result == "error")
+    }
 
-  def checkBudget(spark: SparkSession, io: TableIO, batchId: String,
-                  process: String): Unit = {
-    val n = errorCount(spark, io, batchId, process)
+  private val RowEncoder = ExpressionEncoder[MetricsRow]().resolveAndBind()
+  private val BatchIdOrdinal = RowEncoder.schema.fieldIndex("batch_id")
+
+  def checkBudget(io: TableIO, batchId: String, process: String): Unit = {
+    val n = errorCount(io, batchId, process)
     if (n >= MaxErrors)
       throw new IllegalStateException(
         s"$process batch $batchId refused: $n recorded failures >= " +
@@ -116,7 +121,7 @@ object Metrics {
     */
   def withBudget[A](spark: SparkSession, io: TableIO, batchId: String,
                     process: String, t0: Long)(body: => A): A = {
-    checkBudget(spark, io, batchId, process)
+    checkBudget(io, batchId, process)
     def attempt(retriesLeft: Int): A =
       try body
       catch {

@@ -381,7 +381,7 @@ object SyncJob {
         val blocks = SegmentBuilder.buildBlocks(
           SegmentBuilder.toPostings(analyzed), batchId,
           Tables.blockPartitions(spark, io.dirBytes(analyzedDir)))
-        io.writeParquet(blocks.toDF(), blocksDir)
+        TableIO.writeTermSorted(blocks.toDF(), blocksDir)
       } finally {
         Await.ready(fDocs, Duration.Inf)
         Await.ready(fColl, Duration.Inf)

@@ -38,6 +38,11 @@ import graft.sources.TableIO
   * the other rows' pages (and their heavy `tfs` bytes) unread; a larger
   * batch joins in Spark. Writes stay O(delta).
   *
+  * Segment `index` and `pos` blocks and dict links are term-sorted files,
+  * all written by [[TableIO.writeTermSorted]] (zstd, 1,024-row pages, no
+  * dictionary on `term` or binary columns), so a driver read that pushes
+  * a query's terms decodes only their pages.
+  *
   * Every reader and writer opens a version through one handle ([[load]]
   * → [[IndexTables]]) and applies one liveness rule: [[isDead]] per row,
   * [[IndexTables.live]] over a frame.
@@ -204,9 +209,10 @@ object Tables {
 
   /** [[dictView]]'s rows for `terms`, folded on the driver with no Spark
     * job: one [[TableIO.readLocal]] over the chain's links with the term
-    * predicate pushed (links are written sorted by term, so pages of
-    * other terms stay unread), then Σdf, Σcf and the distinct union of
-    * `files` per term, under the view's df > 0 rule.
+    * predicate pushed (links are term-sorted files,
+    * [[TableIO.writeTermSorted]], so pages of other terms stay unread),
+    * then Σdf, Σcf and the distinct union of `files` per term, under the
+    * view's df > 0 rule.
     */
   def dictLocal(io: TableIO, chain: Seq[String], terms: Seq[String]): Seq[DictRow] = {
     val (pushed, keep) = TableIO.stringIn("term", DictTermOrdinal, terms)
@@ -381,7 +387,7 @@ object Tables {
                       knownStats: Option[(Long, Long)] = None): Unit = {
     import spark.implicits._
     val paths = segments.map(io.segmentDir)
-    io.writeParquet(termStats(spark, paths.map(_ + "/index")).sortWithinPartitions($"term"),
+    TableIO.writeTermSorted(termStats(spark, paths.map(_ + "/index")).sortWithinPartitions($"term"),
       io.dictDir(ver))
     val (n, sumDl) = knownStats.getOrElse {
       val row = readDocs(spark, paths.map(_ + "/docs"))
@@ -602,7 +608,7 @@ object Tables {
         .filter($"df" =!= 0 || $"cf" =!= 0 || size($"files") > 0)
         .sortWithinPartitions($"term")
       sub("dictWrite") {
-        io.writeParquet(dictDelta, io.dictDir(batchId)) }
+        TableIO.writeTermSorted(dictDelta, io.dictDir(batchId)) }
 
       // tombstones: ONLY this batch's rows are written, as a new link of
       // the tombstone chain (tombstonesView folds per docId, newest link
@@ -688,7 +694,7 @@ object Tables {
     io.writeParquet(merged.docs.sortWithinPartitions($"docId").toDF(), s"$seg/docs")
     // whole-index xxhash64 collision re-check rides on each compaction
     SegmentBuilder.checkCollisions(readDocs(spark, Seq(s"$seg/docs")).toDF())
-    io.writeParquet(merged.index.toDF(), s"$seg/index")
+    TableIO.writeTermSorted(merged.index.toDF(), s"$seg/index")
 
     // fwd of the compacted segment: live, not overridden old fwd rows plus
     // the staged delta's fwd — the exact mirror of the docs merge
@@ -706,7 +712,7 @@ object Tables {
         readPosDir(spark, s"${io.segmentDir(s)}/pos").withColumn("seg", lit(s))
       }.reduce(_.unionByName(_)), "seg").drop("seg")
       val posNew = staged.fold(oldPos)(st => oldPos.unionByName(readPosDir(spark, st.posDir)))
-      io.writeParquet(Positional.buildBlocks(posNew.as[PosPosting]).toDF(), s"$seg/pos")
+      TableIO.writeTermSorted(Positional.buildBlocks(posNew.as[PosPosting]).toDF(), s"$seg/pos")
     }
     deriveDictStats(spark, io, batchId, Seq(batchId), old.positions)
     overridden.unpersist()

@@ -11,7 +11,7 @@ import graft.corpus.Corpus
 import graft.oracle.NaiveIndex
 import graft.query.{IndexReader, QuerySet}
 import graft.sources.TableIO
-import graft.sync.{PurgeJob, SyncJob, Tables}
+import graft.sync.{Metrics, PurgeJob, SyncJob, Tables}
 
 /** Reader open, the dict probe that misses, the local `topK` path and
   * `search`'s url fetch all read on the driver: no Spark job, answers
@@ -283,27 +283,127 @@ class DriverReadSpec extends SparkTestBase {
     }
   }
 
-  test("the pushed term predicate skips other terms' row groups") {
+  /** A 2,000-doc build whose blocks are split over 3 files, so each
+    * file holds several [[TableIO.TermPageRows]]-row pages.
+    */
+  private lazy val (pruneIo, pruneFiles) = {
     val root = tmpDir("graft-driver-prune")
     val io = new TableIO(spark, root)
-    SyncJob.run(spark, io, spark.createDataset(Corpus.localRows(300)), ts(300))
-    // one file of many small row groups, sorted by term as segments are
-    val file = s"$root/small-groups"
-    new IndexReader(spark, root).index.toDF().coalesce(1).sortWithinPartitions("term")
-      .write.option("parquet.block.size", 8192L).parquet(file)
-    val all = spark.read.parquet(file).as[IndexBlock]
-    val total = all.count()
-    val term = "rare07"
-    val want = all.filter(col("term") === term).collect().map(_.blockId).sorted.toSeq
-    assert(want.nonEmpty)
+    val prev = sys.props.get("graft.blocks.bytesPerPartition")
+    sys.props("graft.blocks.bytesPerPartition") = "400000"
+    try SyncJob.run(spark, io, spark.createDataset(Corpus.localRows(2000)), ts(2000))
+    finally prev match {
+      case Some(v) => sys.props("graft.blocks.bytesPerPartition") = v
+      case None => sys.props.remove("graft.blocks.bytesPerPartition")
+    }
+    (io, parquetFiles(s"${io.segmentDir(io.manifest(io.currentVersion().get).segments.head)}/index"))
+  }
+
+  private def parquetFiles(dir: String): Seq[String] =
+    new java.io.File(dir).listFiles.toSeq.filter(_.getName.endsWith(".parquet")).map(_.getPath)
+
+  private val blockKey = (b: IndexBlock) => (b.term, b.bucket, b.blockId, b.firstDocId, b.count)
+  private val BlockEnc = ExpressionEncoder[IndexBlock]().resolveAndBind()
+
+  /** Rows of `files` with `terms` pushed: the kept blocks' keys, and the
+    * rows the read yielded to the per-row term check.
+    */
+  private def pushedRead(files: Seq[String], terms: Seq[String]): (Set[Any], Int) = {
     val seen = new AtomicInteger
-    val (pushed, inTerm) = TableIO.stringIn("term", 0, Seq(term))
-    val got = io.readLocal(Seq(file), ExpressionEncoder[IndexBlock]().resolveAndBind(),
-      Some(pushed)) { batch =>
-      val keep = inTerm(batch)
+    val (pushed, inTerms) = TableIO.stringIn("term", BlockEnc.schema.fieldIndex("term"), terms)
+    val got = pruneIo.readLocal(files, BlockEnc, Some(pushed)) { batch =>
+      val keep = inTerms(batch)
       i => { seen.incrementAndGet(); keep(i) }
     }.get
-    assert(got.map(_.blockId).sorted.toSeq == want && got.forall(_.term == term))
-    assert(seen.get < total, s"read ${seen.get} of $total rows before the term check")
+    (got.map(blockKey).toSet, seen.get)
+  }
+
+  test("the pushed term predicate skips other terms' row groups") {
+    val all = pruneIo.readLocal(pruneFiles, BlockEnc)().get
+    // the smallest title number and the largest stopword: every other
+    // page of each file lies between them in byte order
+    val terms = Seq("10", "you")
+    val want = all.filter(b => terms.contains(b.term)).map(blockKey).toSet
+    assert(pruneFiles.size >= 2 && want.map(_._1) == terms.toSet &&
+      all.length > pruneFiles.size * 3 * TableIO.TermPageRows,
+      s"fixture: ${pruneFiles.size} files, ${all.length} rows")
+    val (got, seen) = pushedRead(pruneFiles, terms)
+    assert(got == want)
+    // one page per term and file: a pushed IN set would keep every page
+    // between the two terms
+    assert(seen <= pruneFiles.size * terms.size * TableIO.TermPageRows,
+      s"read $seen of ${all.length} rows before the term check")
+  }
+
+  test("term-sorted files are zstd, dictionary-free on term and binary columns, in 1,024-row pages") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.metadata.CompressionCodecName
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val m = pruneIo.manifest(pruneIo.currentVersion().get)
+    val files = pruneFiles ++ m.dictChain.flatMap(d => parquetFiles(pruneIo.dictDir(d)))
+    val pages = files.flatMap { f =>
+      val r = ParquetFileReader.open(HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(f), spark.sparkContext.hadoopConfiguration))
+      try r.getFooter.getBlocks.asScala.toSeq.flatMap { g =>
+        g.getColumns.asScala.toSeq.flatMap { c =>
+          val col = c.getPath.toDotString
+          assert(c.getCodec == CompressionCodecName.ZSTD, s"$f $col: ${c.getCodec}")
+          if (col == "term" || col == "docIdsVB")
+            assert(!c.getEncodings.asScala.exists(_.usesDictionary), s"$f $col: ${c.getEncodings}")
+          val ix = r.readOffsetIndex(c)
+          (0 until ix.getPageCount).map(i =>
+            (if (i + 1 < ix.getPageCount) ix.getFirstRowIndex(i + 1) else g.getRowCount) -
+              ix.getFirstRowIndex(i))
+        }
+      } finally r.close()
+    }
+    assert(pages.max == TableIO.TermPageRows && pages.forall(_ <= TableIO.TermPageRows))
+  }
+
+  test("the pushed term set follows Parquet's byte order, not String.compareTo's (property)") {
+    import org.scalacheck.Gen
+    // ASCII, Latin-1, BMP (with U+E000–U+FFFF, where UTF-16 and UTF-8
+    // orders part) and supplementary characters
+    val char: Gen[String] = Gen.frequency(
+      2 -> Gen.choose('a', 'c').map(_.toString),
+      1 -> Gen.choose('\u00e0', '\u00e2').map(_.toString),
+      1 -> Gen.choose('\u4e00', '\u4e02').map(_.toString),
+      3 -> Gen.choose('\uff21', '\uff23').map(_.toString),
+      3 -> Gen.choose(0x1f600, 0x1f602).map(c => new String(Character.toChars(c))))
+    val termGen = Gen.choose(1, 3).flatMap(Gen.listOfN(_, char)).map(_.mkString)
+    val sample = for {
+      universe <- Gen.choose(12, 30).flatMap(Gen.listOfN(_, termGen)).map(_.distinct)
+      wanted <- Gen.someOf(universe)
+      absent <- Gen.listOfN(2, termGen)
+    } yield (universe, (wanted.toSeq ++ absent).distinct)
+    val enc = ExpressionEncoder[DictRow]().resolveAndBind()
+    val io = new TableIO(spark, tmpDir("graft-driver-byteorder"))
+    PropHelper.forAllSeeded(sample.suchThat(_._2.nonEmpty), n = 25) { case (universe, wanted) =>
+      // 200 rows a term, sorted as Spark sorts strings: several
+      // 1,024-row pages, whose bounds fall inside runs of one term
+      val dir = s"${io.root}/f${universe.hashCode & 0xffffff}"
+      TableIO.writeTermSorted(universe.flatMap(t => (0 until 200).map(i => DictRow(t, i, 0L)))
+        .toDF().coalesce(1).sortWithinPartitions("term"), dir)
+      val (pushed, keep) = TableIO.stringIn("term", 0, wanted)
+      val got = io.readLocal(Seq(dir), enc, Some(pushed))(keep).get.toSeq.map(r => (r.term, r.df))
+      val all = io.readLocal(Seq(dir), enc)(keep).get.toSeq.map(r => (r.term, r.df))
+      assert(all.size == universe.count(wanted.contains) * 200)
+      assert(got == all, s"pushed read kept ${got.size} of ${all.size} rows")
+    }
+  }
+
+  test("the error budget check reads the metrics ledger with no Spark job") {
+    val io = new TableIO(spark, tmpDir("graft-driver-budget"))
+    // a published sync's ledger rows, then 3 recorded failures of one batch
+    SyncJob.run(spark, io, spark.createDataset(Corpus.localRows(100)), ts(100))
+    (1 to 3).foreach(_ => intercept[RuntimeException](
+      Metrics.withBudget(spark, io, "bQ", "sync", 0L)(throw new RuntimeException("bad"))))
+    val (e, jobs) = jobsDuring(intercept[IllegalStateException](
+      Metrics.checkBudget(io, "bQ", "sync")))
+    assert(e.getMessage.contains("refused") && jobs == 0, s"$jobs jobs: ${e.getMessage}")
+    val (counts, countJobs) = jobsDuring(Seq("bQ" -> "sync", "bQ" -> "purge", "bR" -> "sync")
+      .map { case (b, p) => Metrics.errorCount(io, b, p) })
+    assert(counts == Seq(3L, 0L, 0L) && countJobs == 0)
   }
 }

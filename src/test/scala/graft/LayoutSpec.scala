@@ -2,6 +2,7 @@ package graft
 
 import java.sql.Timestamp
 import graft.corpus.Corpus
+import graft.oracle.NaiveIndex
 import graft.query.IndexReader
 import graft.sources.TableIO
 import graft.sync.{PurgeJob, SyncJob}
@@ -86,5 +87,65 @@ class LayoutSpec extends SparkTestBase {
     io.writeSmallFile(path, io.readSmallFile(path).get.stripSuffix("}") +
       ""","deadPostings":7}""")
     assert(new IndexReader(spark, root).topK("document", 10).toSeq == before)
+  }
+
+  test("a mixed-layout index: a bulk segment in the older parquet layout and a new delta answer as the oracle") {
+    import spark.implicits._
+    import scala.jdk.CollectionConverters._
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.metadata.CompressionCodecName
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    val root = tmpDir("graft-layout-mixed")
+    val io = new TableIO(spark, root)
+    val rows = Corpus.localRows(400)
+    SyncJob.run(spark, io, spark.createDataset(rows), ts(400))
+    val m = io.manifest(io.currentVersion().get)
+    def files(dir: String) = new java.io.File(dir).listFiles.toSeq.filter(_.getName.endsWith(".parquet"))
+    // the bulk segment's index and its dict link rewritten file by file
+    // with the older writer (snappy, default pages, dictionaries), each
+    // under its old name, so the dict's file pointers still hold
+    val older = Seq(s"${io.segmentDir(m.segments.head)}/index", io.dictDir(m.dictChain.head))
+      .flatMap(files)
+    older.foreach { f =>
+      val tmp = s"$root/rewrite"
+      io.writeParquet(spark.read.parquet(f.getPath).coalesce(1), tmp)
+      val part = files(tmp).head
+      // the local filesystem's checksum file would no longer match
+      new java.io.File(f.getParent, s".${f.getName}.crc").delete()
+      assert(f.delete() && part.renameTo(f))
+      io.deleteDir(tmp)
+    }
+    def chunks(f: java.io.File) = {
+      val r = ParquetFileReader.open(HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(f.getPath), spark.sparkContext.hadoopConfiguration))
+      try r.getFooter.getBlocks.asScala.toSeq.flatMap(_.getColumns.asScala)
+      finally r.close()
+    }
+    assert(older.map(chunks).forall(cs => cs.forall(_.getCodec == CompressionCodecName.SNAPPY) &&
+      cs.exists(_.getEncodings.asScala.exists(_.usesDictionary))), "fixture: not the older layout")
+
+    // a new-layout delta: [0, 20) re-crawled, [400, 420) new
+    def urlIdx(p: PageRow) = p.url.split("/").last.toInt
+    val live = rows.map(p => if (urlIdx(p) < 20) p.copy(warc_ts = ts(urlIdx(p) + 10000L)) else p) ++
+      Corpus.localRows(420).drop(400)
+    SyncJob.run(spark, io, spark.createDataset(live), ts(10400))
+    val reader = new IndexReader(spark, root)
+    assert(reader.segments.size == 2 && reader.tombstoneCount == 20)
+    assert(files(s"${io.segmentDir(reader.segments.last)}/index").flatMap(chunks)
+      .forall(_.getCodec == CompressionCodecName.ZSTD))
+
+    val oracle = new NaiveIndex(live)
+    def bits(xs: Seq[Double]) = xs.map(java.lang.Double.doubleToRawLongBits)
+    (graft.query.QuerySet.all.map(_._2) ++ Seq("document 5", "document 410", "rare07 the")).foreach { q =>
+      val want = oracle.topK(q, 10)
+      Seq(true, false).foreach { useWand =>
+        val got = reader.topK(q, 10, useWand)
+        assert(got.map(_.docId).toSeq == want.map(_.docId).toSeq &&
+          bits(got.map(_.score)) == bits(want.map(_.score)), s"'$q' (wand=$useWand) diverges")
+      }
+      val found = reader.search(q, 10)
+      assert(found.map(d => (d.docId, d.url)).toSeq == want.map(h => (h.docId, oracle.urlOf(h.docId))).toSeq &&
+        bits(found.map(_.score)) == bits(want.map(_.score)), s"'$q' search diverges")
+    }
   }
 }

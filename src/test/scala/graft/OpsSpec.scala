@@ -38,7 +38,7 @@ class OpsSpec extends SparkTestBase {
     val batch = ts(100)
     (1 to 3).foreach { i =>
       intercept[Exception] { SyncJob.run(spark, io, poisoned, batch) }
-      assert(Metrics.errorCount(spark, io, Checkpoint.toBatchId(batch),
+      assert(Metrics.errorCount(io, Checkpoint.toBatchId(batch),
         SyncJob.Process) == i)
     }
     val e = intercept[IllegalStateException] {
@@ -61,7 +61,7 @@ class OpsSpec extends SparkTestBase {
       42
     }
     assert(out == 42 && calls == 2)
-    assert(Metrics.errorCount(spark, io, "bX", "sync") == 0)
+    assert(Metrics.errorCount(io, "bX", "sync") == 0)
     // persistent transient error → one retry, then a recorded strike
     var calls2 = 0
     intercept[java.io.IOException] {
@@ -70,7 +70,7 @@ class OpsSpec extends SparkTestBase {
       }
     }
     assert(calls2 == 2)
-    assert(Metrics.errorCount(spark, io, "bY", "sync") == 1)
+    assert(Metrics.errorCount(io, "bY", "sync") == 1)
     // non-transient error → NO retry, immediate strike
     var calls3 = 0
     intercept[RuntimeException] {
@@ -79,7 +79,7 @@ class OpsSpec extends SparkTestBase {
       }
     }
     assert(calls3 == 1)
-    assert(Metrics.errorCount(spark, io, "bZ", "sync") == 1)
+    assert(Metrics.errorCount(io, "bZ", "sync") == 1)
   }
 
   test("multi-resource batch: per-resource resume + list-change refusal") {
@@ -217,7 +217,7 @@ class OpsSpec extends SparkTestBase {
     val r = SyncJob.run(spark, io, pages, ts(200), dryRun = true)
     assert(r.deltaRows == 200)
     assert(io.currentVersion().isEmpty, "dry run must publish nothing")
-    assert(Metrics.errorCount(spark, io, r.batchId, SyncJob.Process) == 0)
+    assert(Metrics.errorCount(io, r.batchId, SyncJob.Process) == 0)
     assert(io.readParquet(io.metricsDir)
       .filter(col("result") === "dryrun").count() == 1)
     // the real run of the same batch reuses the staged work and publishes
